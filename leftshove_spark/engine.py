@@ -417,6 +417,20 @@ class Engine:
                 self.vacuum_state_orphans(st.name)
         return results
 
+    def _state_store_path(self, table: str) -> str | None:
+        """``table``'s current-state store path, or None when it has no
+        manifest store (W25 off, or never folded). KeyError for a table
+        that was never seeded."""
+        from . import statestore
+
+        st = next((s for s in self.state.all() if s.name == table), None)
+        if st is None:
+            raise KeyError(f"{table}: not a seeded capture table")
+        path = self.current_state_path(st)
+        if not os.path.isdir(os.path.join(path, statestore._MANIFEST_DIR)):
+            return None
+        return path
+
     def vacuum_state_orphans(self, table: str) -> list[str]:
         """Sweep crash-loop debris from ``table``'s materialized
         current-state store (statestore.vacuum_orphans — whole-store,
@@ -427,11 +441,8 @@ class Engine:
         from a maintenance window otherwise."""
         from . import statestore
 
-        st = next((s for s in self.state.all() if s.name == table), None)
-        if st is None:
-            raise KeyError(f"{table}: not a seeded capture table")
-        path = self.current_state_path(st)
-        if not os.path.isdir(os.path.join(path, statestore._MANIFEST_DIR)):
+        path = self._state_store_path(table)
+        if path is None:
             return []
         return statestore.vacuum_orphans(path)
 
@@ -454,11 +465,8 @@ class Engine:
         executed plan ``{bucket: target_file_count}``."""
         from . import statestore
 
-        st = next((s for s in self.state.all() if s.name == table), None)
-        if st is None:
-            raise KeyError(f"{table}: not a seeded capture table")
-        path = self.current_state_path(st)
-        if not os.path.isdir(os.path.join(path, statestore._MANIFEST_DIR)):
+        path = self._state_store_path(table)
+        if path is None:
             return {}
         return statestore.compact_partitions(
             self.spark,
@@ -488,11 +496,8 @@ class Engine:
         tables without a manifest store."""
         from . import statestore
 
-        st = next((s for s in self.state.all() if s.name == table), None)
-        if st is None:
-            raise KeyError(f"{table}: not a seeded capture table")
-        path = self.current_state_path(st)
-        if not os.path.isdir(os.path.join(path, statestore._MANIFEST_DIR)):
+        path = self._state_store_path(table)
+        if path is None:
             return {"compacted": {}, "lost_races": 0, "vacuumed": []}
         return statestore.maintain_store(
             self.spark,

@@ -307,33 +307,3 @@ def knn_ivfadc_rotated(
         nprobe=nprobe,
         sub_dim=PQ_SUB if sub_dim is None else sub_dim,
     )
-
-
-def knn_pq_rotated(
-    spark: SparkSession,
-    index_root: str,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    sub_dim: int | None = None,
-    generation: int | None = None,
-) -> DataFrame:
-    """:func:`similarity.knn_pq_adc_codes` through the rotation pointer
-    (flat-PQ variant of :func:`knn_ivfadc_rotated`); the pointer meta
-    must carry ``books``."""
-    from .similarity import PQ_SUB, knn_pq_adc_codes
-
-    codes, meta = read_index(spark, index_root, generation)
-    if "books" not in meta:
-        raise ValueError(
-            f"{index_root}: the committed generation carries no books "
-            "meta — rotate_index(meta={'books': ...}) is required for "
-            "PQ search"
-        )
-    return knn_pq_adc_codes(
-        codes,
-        queries,
-        meta["books"],
-        k=k,
-        sub_dim=PQ_SUB if sub_dim is None else sub_dim,
-    )

@@ -94,13 +94,6 @@ def shingle_hashes_from_tokens(t: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_hashes(text: Column | str, n: int = 3) -> Column:
-    """Single-expression convenience form of
-    :func:`shingle_hashes_from_tokens` — fine for one-shot projections
-    (fingerprints); for bulk dedup stage the tokens first."""
-    return shingle_hashes_from_tokens(tokenize(text), n=n)
-
-
 def _minhash_bands_np(sh_lists: list[list[int]]) -> list[list[str] | None]:
     """Vectorized MinHash signatures + band keys for one Arrow batch —
     the numpy twin of ``band_keys(minhash_signature(sh))``, bit-identical

@@ -38,11 +38,6 @@ def hash60(c: Column | str, *, fast: bool = False) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def hash60_sql(expr: str) -> str:
-    """The ANSI/DuckDB twin of :func:`hash60` for oracle strings."""
-    return f"CAST(concat('0x', substr(md5({expr}),1,15)) AS BIGINT)"
-
-
 def minhash_seeds(k: int) -> list[tuple[int, int]]:
     """k fixed (a, b) permutation seeds for MinHash, generated by a tiny
     LCG so Spark builders and oracle SQL share the exact same literals.

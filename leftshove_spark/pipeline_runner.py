@@ -387,6 +387,11 @@ def run_pipeline(
     counting off for one fused lazy plan in production and read the
     counts from the sink instead.
 
+    ``docs`` must carry a non-null ``doc_id``: stages that filter in
+    place (quality, decontaminate) read only the text, while the
+    sampling and join stages key on ``doc_id``, so a NULL-id row is
+    kept or dropped by rules no stage promises.
+
     Stage parameters are validated against the operator's signature
     BEFORE the call, so a config typo reports as a config error while
     a TypeError raised inside an operator still surfaces as the

@@ -73,72 +73,10 @@ GATE_EXCLUDE = frozenset({"j3_dedup_latest_semijoin", "x_text_stats"})
 
 # Gate schedule: cheapest queries first (measured at sf0.01) so a
 # time-budgeted gate scores the maximum number of rows before any cut;
-# the expensive LSH/stream entries close the schedule. Names absent from
-# this list (future additions) are appended in registration order.
-#
-# Round-11 rotation: head = the 3 NEW operators (materialized current
-# state W25, BPE counts X59, LM quality X60), the 7 changed-
-# implementation re-scores (x_trend_ols overflow column; the PQ/IVFADC
-# family on the md5-ordered training sample), then the stalest
-# veterans by last-driver-score (r7 retirees → r8 once-scored → the
-# r9-scored mid-block) — per the r10 verdict, CORRECTNESS_r11 should
-# spend its ~50 rows only on not-recently-certified entries. The 12 r10
-# first-timers (minus the re-scoring ANN rows) rotate to the tail with
-# one green each; their second certification comes from the full-
-# surface tail test until a later head slot frees up.
-#
-# Round-9 rotation: the head leads with the never-driver-green entries
-# — q3_shipping_priority (re-gated: its only driver rows are stale
-# r1/r2 reds) and the two NEW substring-dedup operators — followed by
-# the 14 r8 first-timers (one green each; a second green certifies
-# them for retirement). The fill is the r7+r8 double-green veteran
-# block in its existing cheap-first order; the three most expensive
-# double-greens (x_quality_deciles, x_knn_ivf,
-# x_dedup_embedding_cosine) retire to the tail. Late-r9 additions
-# (weighted PPS sample, bottom-k quantile sketch, MAD outliers, bloom
-# join prune, weighted-fair interleave, the W22 sketch continuous
-# aggregate, stratified PPS, PQ/ADC compressed ANN) enter the
-# never-green block directly.
-#
-# Round-8 rotation: into the head-50 — the three never-driver-scored
-# r7 leftovers (w19_nav_battery, c19_math_battery, x_chunk_documents),
-# the six NEW r8 operators (epoch shuffle, token-budget cap, bucketed
-# as-of, snapshot diff, z-order key, retention policy), the multimodal
-# decode/frames pair (their r7 reds were output-typing, fixed this
-# round — the green rows must be recorded), and
-# x_dedup_connected_components (green r6, missed r7's head at pos 51).
-# To make room, the seven longest-green veterans (driver-green r6 AND
-# r7: q16/q22/q21/q7/o6/w15/c16) retire to the tail.
-#
-# Round-7 rotation: the driver certifies ~50 entries per round, so the
-# schedule ROTATES. This round the 13 never-driver-scored tail entries
-# (hash split, PII, packing, vocab, q13/q15/q17, funnel, cohort,
-# multimodal decode/frames, decontaminate, repetition) plus the new
-# band-mechanics entry x_dedup_embedding_lsh AND the five new round-7
-# TPC-H shapes (q2/q8/q9/q11/q20) move into the head;
-# q12_shipmode_priority leads (its r6 red was an oracle typing bug —
-# this round must record the green row). Every operator added later in
-# round 7 (mixture sample, scalar batteries, salted agg, incremental
-# index, recall metrics, column profiler, tf-idf, hybrid RRF, exact
-# Jaccard) also enters the head for first-time certification; to make
-# room, the most-certified heads (4-6 green rounds: the plain joins,
-# capture projections, pivots, set ops, session window, stats battery,
-# simhash, J3, w7, o1, q10, q1, knn-bruteforce, t1, cdc) retire to the
-# tail. Rotated-out entries stay verified every round by
-# tests/test_gate_tail_oracle.py, which oracle-checks the FULL gate
-# surface regardless of rotation position.
+# names absent from this list (future additions) are appended in
+# registration order. Entries past the gate's row cut are still
+# oracle-checked on every pytest pass by tests/test_gate_tail_oracle.py.
 GATE_ORDER = [
-    # --- r16 rotation (standing gate-hygiene discipline): the r15-
-    # scored head-50 retires to the tail in order; the head leads with
-    # the now-stalest veteran block (last driver-scored r13 or
-    # earlier). No never-scored entries this round — r16's additions
-    # (maintenance-under-live-load, schema-drift guard, ANN index
-    # rotation, conditional-put manifests) are control-plane/streaming
-    # surfaces certified by pytest, not SQL-expressible gate rows.
-    # Every rotated-out entry stays oracle-verified each pytest pass by
-    # tests/test_gate_tail_oracle.py.
-    # r16 never-scored entry first: the W31 ANN rotation
-    # cutover, hash-certified against the direct-pipeline oracle.
     "x_knn_rotated_index",
     "q19_disjunctive_filter",
     "o3_topk_per_group",

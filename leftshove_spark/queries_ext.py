@@ -46,10 +46,17 @@ def _materialize_ctes(sql: str) -> str:
     forced materialization cannot lose a pushdown that matters. NOT
     applied to the big-table TPC-H/corpus oracles, where inlining's
     filter pushdown is load-bearing. (Regex is safe here: the treated
-    SQL contains ``AS (`` only at CTE definitions — asserted below —
-    and the pattern skips already-MATERIALIZED CTEs.)"""
+    SQL contains ``AS (`` only at CTE definitions — a named ``WINDOW w
+    AS (`` clause, the one other ``AS (`` form the oracles use, raises
+    ValueError below — and the pattern skips already-MATERIALIZED
+    CTEs.)"""
     import re
 
+    if re.search(r"\bWINDOW\s+[A-Za-z_]\w*\s+AS\s*\(", sql, re.IGNORECASE):
+        raise ValueError(
+            "_materialize_ctes: the SQL holds a named WINDOW ... AS ( "
+            "clause, which the CTE rewrite would corrupt"
+        )
     return re.sub(r"(\b[A-Za-z_]\w*\s+AS)\s*\(", r"\1 MATERIALIZED (", sql)
 
 

@@ -46,13 +46,6 @@ def write_json_lines(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def to_ndjson_column(df: DataFrame) -> DataFrame:
-    """Row→NDJSON message form (``to_json(struct(*))``) — the shape rows
-    travel in through the reference's Benthos pipeline (benthos.go:130);
-    used when a single text column is wanted rather than a JSON dataset."""
-    return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-
-
 def write_if_absent(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """S4's WriteEmpty disposition (bigquery.go:243:
     ``WriteDisposition: bigquery.WriteEmpty`` — the load FAILS when the

@@ -24,10 +24,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def _fingerprint(path: str) -> tuple:
     """Cheap change-detection key for a parquet file/dir: (mtime, size)
@@ -191,16 +187,6 @@ def _estimate_bytes_cached(path: str, _fp: tuple) -> int:
             if f.endswith(".parquet")
         )
     return _meta_total_bytes(pq.read_metadata(path))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql use."""
-    for t, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)
 
 
 def read_jdbc_window(

@@ -329,22 +329,6 @@ def read_changed(
     )
 
 
-def _is_legacy_dir(state_dir: str, partition_col: str | None) -> bool:
-    """A pre-manifest state dir: partition dirs (or bare parquet) at the
-    root, no ``_manifests``."""
-    if not os.path.isdir(state_dir):
-        return False
-    if os.path.isdir(os.path.join(state_dir, _MANIFEST_DIR)):
-        return False
-    prefix = f"{partition_col}=" if partition_col else ""
-    for e in os.listdir(state_dir):
-        if partition_col and e.startswith(prefix):
-            return True
-        if not partition_col and e.endswith(".parquet"):
-            return True
-    return False
-
-
 def _write_manifest(state_dir: str, manifest: dict) -> None:
     """THE commit point: fsync'd write + atomic CREATE-EXCLUSIVE link.
     Isolated in its own function so tests can interpose a reader (or a
@@ -607,8 +591,8 @@ def vacuum_orphans(
     store's filesystem clock (:func:`_fs_now`) — that protects them
     from the pre-flip sweep. Returns the store-relative paths removed.
 
-    A store with no manifests (legacy or empty) is left alone: there
-    is no commit pointer to define 'referenced' against."""
+    A directory with no manifests is left alone: there is no commit
+    pointer to define 'referenced' against."""
     if not _list_manifests(state_dir):
         return []
     grace = ORPHAN_SWEEP_GRACE_SEC if grace_sec is None else grace_sec
@@ -670,7 +654,7 @@ def compaction_plan(
     10-file partition already at 10× the target gains nothing from a
     rewrite and is skipped). ``partitions`` narrows the scan to the
     named values. Returns ``{partition_value: target_file_count}``;
-    empty for legacy/empty stores."""
+    empty for a directory with no manifest."""
     m = load_manifest(state_dir)
     if m is None:
         return {}
@@ -967,38 +951,6 @@ def compact_partitions(
     return plan
 
 
-def _migrate_legacy(
-    spark: SparkSession, state_dir: str, partition_col: str | None
-) -> None:
-    """One-shot adoption of a pre-manifest directory: read everything,
-    re-commit as generation 1. The legacy files are NOT deleted here —
-    the caller's in-flight fold plan typically still reads from them
-    (its scratch write resolves those paths); they are dropped by the
-    post-flip cleanup of the NEXT committed generation, the same
-    deferred discipline as replaced data files. A crash before the
-    manifest flip leaves the legacy dir authoritative (only
-    scratch/orphan bytes added); after it the manifest wins. O(table),
-    runs once per store ever."""
-    legacy = spark.read.parquet(state_dir)
-    values: list[str] = []
-    if partition_col:
-        values = [
-            str(r[partition_col])
-            for r in legacy.select(partition_col).distinct().collect()
-        ]
-    commit_fold(
-        spark, state_dir, legacy, partition_col, values, _migrating=True
-    )
-
-
-def _drop_legacy_files(state_dir: str, partition_col: str | None) -> None:
-    for e in os.listdir(state_dir):
-        if partition_col and e.startswith(f"{partition_col}="):
-            shutil.rmtree(os.path.join(state_dir, e))
-        elif e.endswith(".parquet") or e == "_SUCCESS":
-            os.remove(os.path.join(state_dir, e))
-
-
 def commit_fold(
     spark: SparkSession,
     state_dir: str,
@@ -1008,7 +960,6 @@ def commit_fold(
     keep_generations: int | None = None,
     retention_sec: float | None = None,
     expected_base_gen: int | None = None,
-    _migrating: bool = False,
     _maintenance: bool = False,
 ) -> None:
     """Atomically replace the ``touched_values`` partitions with ``out``
@@ -1032,8 +983,6 @@ def commit_fold(
     contents-preserving rewrite (compaction) — the marker
     :func:`commit_fold_retrying` consults to decide a lost race is safe
     to retry over."""
-    if not _migrating and _is_legacy_dir(state_dir, partition_col):
-        _migrate_legacy(spark, state_dir, partition_col)
     cur = load_manifest(state_dir)
     if cur is not None and cur.get("partition_col") != partition_col:
         raise ValueError(
@@ -1141,11 +1090,8 @@ def commit_fold(
     )
     _write_manifest(state_dir, manifest)
 
-    # 4. deferred GC of replaced files past BOTH retention bounds, plus
-    # any legacy files a crashed migration left beside the manifest
+    # 4. deferred GC of replaced files past BOTH retention bounds
     _gc(state_dir, gen, keep_generations, retention_sec)
-    if not _migrating and gen > 1:
-        _drop_legacy_files(state_dir, partition_col)
 
 
 def commit_fold_retrying(
@@ -1180,15 +1126,6 @@ def commit_fold_retrying(
     commit that displaced them."""
     base = load_manifest(state_dir)
     base_gen = base["gen"] if base else 0
-    # a legacy (pre-manifest) dir migrates itself to generation 1
-    # INSIDE commit_fold — pinning that first attempt to base 0 would
-    # refuse the commit's own migration; leave it unpinned (the fence
-    # still applies from the first manifested commit on)
-    pin = (
-        None
-        if base is None and _is_legacy_dir(state_dir, partition_col)
-        else base_gen
-    )
     for attempt in range(retries + 1):
         try:
             # pin every attempt to the base this wrapper last inspected
@@ -1206,7 +1143,7 @@ def commit_fold_retrying(
                 touched_values,
                 keep_generations=keep_generations,
                 retention_sec=retention_sec,
-                expected_base_gen=pin,
+                expected_base_gen=base_gen,
             )
             return
         except ConcurrentCommitError:
@@ -1222,7 +1159,7 @@ def commit_fold_retrying(
                     break
             if attempt >= retries or not all_maintenance:
                 raise
-            base_gen = pin = max(since)
+            base_gen = max(since)
             time.sleep(backoff_sec)
 
 
@@ -1412,45 +1349,20 @@ def read_state(
     scan's file list IS the pruned set. ``merge_schema`` tolerates
     schema-evolved stores (added columns surface as NULL in old files;
     widened types fall back to an explicit widest-footer schema).
-    Pre-manifest (legacy) directories read as plain parquet — with the
-    ``partition_values`` contract still HONORED (ADVICE r12: silently
-    returning the full table was a trap for callers relying on pruning
-    for correctness): the partition column is inferred from the legacy
-    ``col=value`` directory names and applied as a partition filter;
-    if pruning was requested but no partition structure exists, the
-    read raises rather than over-return.
+    A directory with no manifest is not a store: the read raises
+    ValueError naming it.
 
     ``generation`` pins the read to a RETAINED older generation (time
     travel for audits/debug: 'what did the state look like before that
     fold?'); the readable window is :func:`list_generations` — raises
     KeyError past it (widen ``keep_generations``/``retention_sec`` on
-    the maintainer for a longer window). A pinned legacy read is a
-    contradiction (no manifests) and raises the same way."""
-    # load_manifest raises KeyError itself when a specific generation
-    # is pinned on a store with no manifests — m is None only for the
-    # unpinned legacy path. ``_manifest`` lets per-partition callers
-    # (sync_state, compact_partitions) reuse their already-pinned
-    # manifest instead of re-parsing the JSON once per partition.
+    the maintainer for a longer window)."""
+    # ``_manifest`` lets per-partition callers (sync_state,
+    # compact_partitions) reuse their already-pinned manifest instead
+    # of re-parsing the JSON once per partition.
     m = _manifest if _manifest is not None else load_manifest(state_dir, generation)
     if m is None:
-        df = spark.read.parquet(state_dir)  # legacy dir (or raise)
-        if partition_values is not None:
-            pcols = sorted(
-                {
-                    e.split("=", 1)[0]
-                    for e in os.listdir(state_dir)
-                    if "=" in e and os.path.isdir(os.path.join(state_dir, e))
-                }
-            )
-            if len(pcols) != 1:
-                raise ValueError(
-                    f"legacy state dir {state_dir} has no single partition "
-                    f"column to honor partition_values pruning (found "
-                    f"{pcols})"
-                )
-            want = [str(v) for v in partition_values]
-            df = df.filter(F.col(pcols[0]).cast("string").isin(want))
-        return df
+        raise ValueError(f"{state_dir} has no committed state manifest")
     data = os.path.join(state_dir, _DATA_DIR)
     sel = m["files"]
     if partition_values is not None:
@@ -1687,9 +1599,7 @@ def sync_state(
         gens = _list_manifests(state_dir)
         if not gens:
             raise ValueError(
-                f"{state_dir} has no committed generations to sync from "
-                "(legacy/pre-manifest stores have no change feed — fold "
-                "once to adopt them)"
+                f"{state_dir} has no committed generations to sync from"
             )
         gen = gens[-1]
         if last_gen == gen:
@@ -1851,9 +1761,7 @@ def sync_state(
     return gen
 
 
-def has_state(state_dir: str, partition_col: str | None) -> bool:
-    """True when the store holds committed data (manifest or legacy)."""
+def has_state(state_dir: str) -> bool:
+    """True when the store has a committed manifest holding data."""
     m = load_manifest(state_dir)
-    if m is not None:
-        return bool(m["files"])
-    return _is_legacy_dir(state_dir, partition_col)
+    return m is not None and bool(m["files"])

@@ -763,24 +763,7 @@ def current_state_lookup(
 
     m = statestore.load_manifest(state_dir)
     if m is None:
-        # legacy (pre-manifest) dir: same expression, partition filter
-        df = spark.read.parquet(state_dir)
-        stored_types = {f.name: f.dataType for f in df.schema.fields}
-        parts = [
-            F.lit(v).cast(stored_types[k]).cast("string")
-            for k, v in key_values.items()
-        ]
-        bucket = spark.range(1).select(
-            statestore.bucket_expr(parts, n_buckets).alias("b")
-        ).collect()[0]["b"]
-        df = df.filter(F.col("__bucket") == bucket)
-        for k, v in key_values.items():
-            df = df.filter(
-                F.col(k).isNull()
-                if v is None
-                else (F.col(k) == F.lit(v).cast(stored_types[k]))
-            )
-        return df.drop("__bucket")
+        raise ValueError(f"{state_dir} has no committed state manifest")
     # stored column types from one committed footer (driver-side, no
     # Spark job) — the literals must pass through the EXACT stored type
     # or float/decimal renderings diverge
@@ -949,7 +932,7 @@ def _maintain_bucketed_state(
     touched = [r["__bucket"] for r in incoming.select("__bucket").distinct().collect()]
     if not touched:
         return
-    if statestore.has_state(state_dir, "__bucket"):
+    if statestore.has_state(state_dir):
         stored = statestore.read_state(
             spark, state_dir, partition_values=[str(t) for t in touched]
         )
@@ -1441,7 +1424,7 @@ def maintain_rollup(
         return
     from . import statestore
 
-    if statestore.has_state(state_dir, "__wday"):
+    if statestore.has_state(state_dir):
         stored = statestore.read_state(
             spark, state_dir, partition_values=[str(t) for t in touched]
         )
@@ -1535,8 +1518,8 @@ def maintain_corpus_stats(
     state equals the one-shot accounting of all rows so far
     (driver-hash-certified by ``w22_corpus_stats_incremental``, not
     just pytest). Per batch the cost is O(batch + groups·k); the state
-    is O(groups·k) longs rewritten via the crash-recoverable staged
-    swap (tiny — sketches, not data).
+    is O(groups·k) longs committed as one manifest generation per fold
+    (tiny — sketches, not data).
 
     Delivery contract: the exact fingerprint components assume
     EXACTLY-ONCE batches (a redelivered batch double-counts sums — put
@@ -1547,15 +1530,10 @@ def maintain_corpus_stats(
     from . import statestore
     from .ext.pipeline import dataset_fingerprint
     from .ext.sketch import bottomk_sample_sketch, kmv_sketch
-    from .sinks import recover_staged
 
     gcols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     if not gcols:
         raise ValueError("group_cols must be non-empty")
-    if os.path.isdir(state_dir):
-        # heal a crashed PRE-MANIFEST (legacy staged-swap) fold before
-        # the store's legacy detection lists the dir; no-op otherwise
-        recover_staged(state_dir)
     b = batch
     if length_col is None:
         length_col = "__len"
@@ -1571,8 +1549,8 @@ def maintain_corpus_stats(
 
     # the state is O(groups·k) — one unpartitioned manifest generation
     # per fold, committed atomically (readers mid-scan keep the prior
-    # generation; the old staged swap could serve a partial listing)
-    if statestore.has_state(state_dir, None):
+    # generation)
+    if statestore.has_state(state_dir):
         merged = _merge_corpus_stats(
             statestore.read_state(spark, state_dir).unionByName(stats),
             gcols,
@@ -1624,13 +1602,7 @@ def corpus_stats_view(spark: SparkSession, state_dir: str, *, k: int = 256) -> D
     ``n_docs − est_distinct_content``."""
     from . import statestore
     from .ext.sketch import bottomk_quantile, kmv_estimate
-    from .sinks import recover_staged
 
-    # legacy (pre-manifest) dirs were staged-swap targets: heal a
-    # crashed old-style fold before the store's legacy fallback lists
-    # files; manifest stores resolve one committed generation instead
-    if not os.path.isdir(os.path.join(state_dir, "_manifests")):
-        recover_staged(state_dir)
     st = statestore.read_state(spark, state_dir)
     return st.select(
         *[c for c in st.columns if c not in ("content_kmv", "len_sketch")],

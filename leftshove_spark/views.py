@@ -66,23 +66,6 @@ def latest_per_key_semijoin(
     return df.join(maxes, on=[*keys, order_col], how="left_semi")
 
 
-def create_current_state_view(
-    spark_df: DataFrame,
-    view_name: str,
-    key_cols: list[str] | str,
-    order_col: str = "snapshot_tm",
-    tiebreak_cols: list[str] | None = None,
-) -> None:
-    """Register the current-state view in the session catalog — the
-    ``CREATE VIEW <t> AS ...`` analog (bigquery.go:101-110, D5). Pass
-    ``tiebreak_cols`` for a deterministic pick under same-stamp version
-    ties (the engine's refresh_view supplies its unified nms-first
-    convention; standalone callers should too)."""
-    latest_per_key_window(
-        spark_df, key_cols, order_col, tiebreak_cols=tiebreak_cols
-    ).createOrReplaceTempView(view_name)
-
-
 def history_view(
     df: DataFrame,
     key_cols: list[str] | str,

@@ -1,7 +1,8 @@
-"""Capture .explain("formatted") for headline queries into plans/r17/ (PLANS_OUT overrides)..
+"""Capture .explain("formatted") for headline queries into plans/r17/.
 
-Usage: python scripts/capture_plans.py <suffix> [name_filter...]
-  suffix: "before" or "after" — file name becomes plans/r16/<q>_<suffix>.txt
+Usage: [PLANS_OUT=<dir>] python scripts/capture_plans.py <suffix> [name_filter...]
+  suffix: "before" or "after" — file name becomes <dir>/<q>_<suffix>.txt,
+  where <dir> is $PLANS_OUT, or plans/r17 under the repo root when unset
 
 Scenario queries that materialize scratch state (x_current_state_*,
 x_compact_*, w21) are explained on their FINAL read plan — the fold jobs
@@ -64,7 +65,10 @@ HEADLINE = [
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     filters = sys.argv[2:]
-    outdir = os.environ.get("PLANS_OUT", "/root/repo/plans/r17")
+    outdir = os.environ.get(
+        "PLANS_OUT",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"),
+    )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(app_name="leftshove-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")

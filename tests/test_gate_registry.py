@@ -12,6 +12,8 @@ rotation edit has to preserve, locked as tests instead of hand checks:
 - queries()/oracle_sql() agree with the registry the driver sees.
 """
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 from leftshove_spark import queries as Q
@@ -114,3 +116,30 @@ def test_maybe_broadcast_gates_on_bytes_not_just_rows(spark, tmp_path, monkeypat
     monkeypatch.undo()
     hinted = Q._maybe_broadcast(cust, SF0001, "customer")
     assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
+
+
+# the oracles registered through queries_ext._materialize_ctes
+MATERIALIZED_ORACLES = (
+    "x_knn_pq",
+    "x_knn_pq_rerank",
+    "x_knn_ivfadc",
+    "x_knn_rotated_index",
+    "x_knn_ivfadc_rerank",
+    "x_ann_recall_ivfadc",
+    "x_semdedup",
+    "x_hard_negatives",
+)
+
+
+def test_materialize_ctes_refuses_named_window_clause():
+    """The CTE rewrite is a regex over ``AS (``: it passes every oracle
+    it treats (a no-op on the already-treated SQL) and refuses the one
+    non-CTE ``AS (`` form the oracles use, a named WINDOW clause."""
+    from leftshove_spark.queries_ext import _materialize_ctes
+
+    for name in MATERIALIZED_ORACLES:
+        sql = Q.oracle(name)
+        assert "AS MATERIALIZED (" in sql, name
+        assert _materialize_ctes(sql) == sql, name
+    with pytest.raises(ValueError, match="WINDOW"):
+        _materialize_ctes(Q.oracle("x_quality_deciles"))

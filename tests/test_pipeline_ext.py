@@ -702,7 +702,12 @@ def test_stage_keep_cols_match_join_back_forms(spark):
     implicitly: a zero-token doc (dropped by quality: the stats pass
     emits nothing, so the inner join dropped it; kept by decontaminate:
     no shingles → never flagged → the anti-join kept it) and an
-    n-hit boundary doc. The composed runner plan must carry NO Join."""
+    n-hit boundary doc. The composed runner plan must carry NO Join.
+
+    A NULL ``doc_id`` is outside run_pipeline's contract; the row here
+    pins what the in-place stages do with it today: they read only the
+    text, so quality keeps it (the inner join dropped it) and
+    decontaminate drops it when flagged (the anti-join kept it)."""
     from leftshove_spark.ext.pipeline import decontaminate
     from leftshove_spark.ext.text import quality_filter
     from leftshove_spark.pipeline_runner import run_pipeline
@@ -719,8 +724,9 @@ def test_stage_keep_cols_match_join_back_forms(spark):
             (4, good + " extra words here to stay unique and long"),
             (5, "short text"),              # fails min_tokens
             (6, ("spam " * 40).strip()),    # fails uniq_ratio
+            (None, good),                   # NULL id, passes, flagged
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
     bench = spark.createDataFrame([(100, good)], ["doc_id", "text"])
 
@@ -729,9 +735,11 @@ def test_stage_keep_cols_match_join_back_forms(spark):
         spark, corpus, [{"op": "quality_filter"}], count_stages=False
     ).df
     q_join = corpus.join(quality_filter(corpus).select("doc_id"), "doc_id")
-    assert sorted(r[0] for r in q_stage.select("doc_id").collect()) == sorted(
+    got = [r[0] for r in q_stage.select("doc_id").collect()]
+    assert sorted(i for i in got if i is not None) == sorted(
         r[0] for r in q_join.select("doc_id").collect()
     )
+    assert got.count(None) == 1  # the join form dropped the NULL-id row
 
     # decontaminate: keep-col stage ≡ anti-join form (zero-shingle docs
     # survive BOTH — the map pass never emits them)
@@ -742,9 +750,14 @@ def test_stage_keep_cols_match_join_back_forms(spark):
     d_join = corpus.join(
         decontaminate(corpus, bench).select("doc_id"), "doc_id", "left_anti"
     )
-    got = sorted(r[0] for r in d_stage.select("doc_id").collect())
-    assert got == sorted(r[0] for r in d_join.select("doc_id").collect())
+    got = [r[0] for r in d_stage.select("doc_id").collect()]
+    want = [r[0] for r in d_join.select("doc_id").collect()]
+    assert sorted(i for i in got if i is not None) == sorted(
+        i for i in want if i is not None
+    )
     assert 2 in got and 3 in got  # zero-shingle docs kept
+    # the flagged NULL-id row: dropped here, kept by the anti-join
+    assert None not in got and None in want
 
     # composed plan shape: both stages are joins no more
     composed = run_pipeline(

@@ -27,6 +27,7 @@ from conftest import SF0001
 from leftshove_spark import statestore
 from leftshove_spark.sources import load_table
 from leftshove_spark.streaming import (
+    current_state_lookup,
     current_state_table,
     maintain_current_state,
 )
@@ -242,42 +243,6 @@ def test_fold_composes_with_schema_evolution(spark, tmp_path):
         for r in current_state_table(spark, state).collect()
     }
     assert got == {1: (20, "a2", 7.5), 2: (30, "b3", None)}
-
-
-def test_legacy_dir_migrates_on_first_fold(spark, tmp_path):
-    """A pre-manifest (dynamic-partition-overwrite era) state dir is
-    adopted on its first new-code fold: one O(table) re-commit, then
-    the usual O(touched) discipline; contents carry over exactly and
-    the legacy root files are dropped by the following commit."""
-    state = str(tmp_path / "cur")
-    b1 = spark.createDataFrame(
-        [(1, 10, "a"), (2, 10, "b")], "k long, d long, v string"
-    )
-    bucket = statestore.bucket_expr([F.col("k").cast("string")], 16)
-    # legacy layout: __bucket= partition dirs at the state root
-    b1.withColumn("__bucket", bucket).write.partitionBy("__bucket").parquet(
-        state
-    )
-    assert statestore.load_manifest(state) is None
-    b2 = spark.createDataFrame([(1, 20, "a2")], "k long, d long, v string")
-    maintain_current_state(spark, state, b2, "k", "d")
-    assert statestore.load_manifest(state) is not None
-    got = {
-        r["k"]: (r["d"], r["v"])
-        for r in current_state_table(spark, state).collect()
-    }
-    assert got == {1: (20, "a2"), 2: (10, "b")}
-    # next fold drops the legacy root files
-    b3 = spark.createDataFrame([(2, 30, "b3")], "k long, d long, v string")
-    maintain_current_state(spark, state, b3, "k", "d")
-    assert not [
-        e for e in os.listdir(state) if e.startswith("__bucket=")
-    ]
-    got = {
-        r["k"]: (r["d"], r["v"])
-        for r in current_state_table(spark, state).collect()
-    }
-    assert got == {1: (20, "a2"), 2: (30, "b3")}
 
 
 def test_unpartitioned_store_roundtrip(spark, tmp_path):
@@ -512,30 +477,22 @@ def test_writer_fence_rejects_racing_commit(spark, tmp_path, monkeypatch):
     assert _flat_files(state) <= _live_files(state)
 
 
-def test_read_state_legacy_honors_partition_pruning(spark, tmp_path):
-    """ADVICE r12: partition_values on a legacy (pre-manifest) dir used
-    to be silently ignored — callers relying on pruning for
-    CORRECTNESS got the whole table. The legacy fallback now applies a
-    partition filter inferred from the col=value directory names, and
-    raises when pruning cannot be honored at all."""
-    state = str(tmp_path / "legacy")
-    df = spark.createDataFrame(
-        [(1, 3, "a"), (2, 5, "b"), (3, 3, "c")], "k long, __bucket int, v string"
-    )
-    df.write.partitionBy("__bucket").parquet(state)
+def test_dir_without_manifest_is_not_a_store(spark, tmp_path):
+    """A directory holding parquet but no ``_manifests`` (the pre-r12
+    layout) is not read as state: every read path raises ValueError
+    naming the directory, and has_state reports no state."""
+    state = str(tmp_path / "nomanifest")
+    spark.createDataFrame(
+        [(1, 3, "a"), (2, 5, "b")], "k long, __bucket int, v string"
+    ).write.partitionBy("__bucket").parquet(state)
     assert statestore.load_manifest(state) is None
-    got = sorted(
-        r["k"]
-        for r in statestore.read_state(
-            spark, state, partition_values=["3"]
-        ).collect()
-    )
-    assert got == [1, 3]
-    # unpruneable legacy layout (bare parquet, no partition dirs)
-    flat = str(tmp_path / "flatlegacy")
-    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(flat)
-    with pytest.raises(ValueError, match="partition"):
-        statestore.read_state(spark, flat, partition_values=["3"])
+    assert not statestore.has_state(state)
+    with pytest.raises(ValueError, match="nomanifest"):
+        statestore.read_state(spark, state)
+    with pytest.raises(ValueError, match="nomanifest"):
+        statestore.read_state(spark, state, partition_values=["3"])
+    with pytest.raises(ValueError, match="nomanifest"):
+        current_state_lookup(spark, state, {"k": 1})
 
 
 def test_pure_deletion_partition_sweeps_crashed_orphans(

@@ -939,62 +939,6 @@ def test_corpus_stats_fold_and_duplication_signal(spark, tmp_path):
     assert v2["est_distinct_content"] == 40.0
 
 
-def test_corpus_stats_fold_heals_crashed_swap_before_reading(spark, tmp_path):
-    """r9 review, retargeted at the LEGACY layout: pre-manifest W22
-    state dirs were staged-swap targets, and a crash mid-swap left the
-    files split across path/tmp/trash. A fold over such a dir must heal
-    the swap forward FIRST (not read partial state or take the
-    fresh-state branch), then adopt the healed files into the manifest
-    store — the final accounting equals the clean run."""
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from leftshove_spark import statestore
-    from leftshove_spark.streaming import (
-        _merge_corpus_stats,
-        corpus_stats_view,
-        maintain_corpus_stats,
-    )
-
-    rows = [(i, "g", f"text number {i}") for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, g string, text string")
-    state = str(tmp_path / "stats")
-    # build the LEGACY layout the old code wrote: fold into a scratch
-    # manifest store, then flatten its files to the state-dir root
-    scratch = str(tmp_path / "scratch")
-    maintain_corpus_stats(
-        spark, scratch, df.filter(F.col("doc_id") % 2 == 0), "g", k=32
-    )
-    statestore.read_state(spark, scratch).write.mode("overwrite").parquet(state)
-
-    # simulate: a legacy fold's staged swap crashed after writing tmp +
-    # manifest and displacing the old files, before promoting tmp
-    tmp = os.path.join(state, ".compact_tmp")
-    trash = os.path.join(state, ".compact_trash")
-    os.makedirs(trash)
-    names = [e for e in os.listdir(state) if not e.startswith(("_", "."))]
-    # the "new state" the crashed fold was about to promote: reuse the
-    # current files as tmp content (content equality is irrelevant —
-    # the manifest discipline is what's under test)
-    os.makedirs(tmp)
-    for e in names:
-        shutil.copy(os.path.join(state, e), os.path.join(tmp, e))
-    with open(os.path.join(trash, ".manifest"), "w", encoding="utf-8") as fh:
-        fh.write("\n".join(sorted(names)))
-    for e in names:
-        os.rename(os.path.join(state, e), os.path.join(trash, e))
-    # state dir now "looks empty" — the pre-fix guard would branch to
-    # fresh-state overwrite and discard everything
-
-    maintain_corpus_stats(spark, state, df.filter(F.col("doc_id") % 2 == 1), "g", k=32)
-    v = corpus_stats_view(spark, state, k=32).first()
-    assert v["n_docs"] == 60  # both folds survived the crash window
-    # and the dir is now a manifest store (legacy adopted)
-    assert statestore.load_manifest(state) is not None
-
-
 def test_embedding_index_stream_equals_batch_encode(spark, tmp_path):
     """W23: stream-appended PQ codes must be byte-identical to a batch
     re-encode of the same rows (pq_encode is a pure function of
