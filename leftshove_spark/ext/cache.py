@@ -17,10 +17,18 @@ pins, not the caller's own cached tables) and idempotent.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _PINNED: list[DataFrame] = []
+# Guards every read-modify-write of _PINNED: a live stream's
+# foreachBatch thread calls release_pins() while other threads pin. A
+# pin is registered after it is persisted, and a release takes the
+# registry in one swap, so a racing pin() is either released by that
+# release or left registered — never persisted and unregistered.
+_LOCK = threading.Lock()
 
 
 def pin(
@@ -41,7 +49,8 @@ def pin(
     consumer is a single serial stage (a seed sort, a lone aggregation)
     — it materializes the pin on its own without the extra read-back."""
     df.persist(level)
-    _PINNED.append(df)
+    with _LOCK:
+        _PINNED.append(df)
     if eager:
         df.count()
     return df
@@ -51,11 +60,12 @@ def release_pins() -> int:
     """Unpersist every registered pin (non-blocking); returns how many
     were released. Safe to call at any time — an unpersisted stage
     recomputes if referenced again, it never breaks correctness."""
-    n = len(_PINNED)
-    for df in _PINNED:
+    with _LOCK:
+        released = _PINNED[:]
+        _PINNED.clear()
+    for df in released:
         df.unpersist()
-    _PINNED.clear()
-    return n
+    return len(released)
 
 
 def pinned_count() -> int:
@@ -91,16 +101,15 @@ class pin_scope:
         # later pin could reuse the freed id() and be misclassified as
         # pre-existing on exit — holding the objects keeps every
         # recorded id() unique for the scope's lifetime.
-        self._before: list[DataFrame] = list(_PINNED)
+        with _LOCK:
+            self._before: list[DataFrame] = list(_PINNED)
         return self
 
     def __exit__(self, *exc) -> None:
         before_ids = {id(b) for b in self._before}
-        kept: list[DataFrame] = []
-        for df in _PINNED:
-            if id(df) in before_ids:
-                kept.append(df)
-            else:
-                df.unpersist()
-        _PINNED[:] = kept
+        with _LOCK:
+            released = [df for df in _PINNED if id(df) not in before_ids]
+            _PINNED[:] = [df for df in _PINNED if id(df) in before_ids]
+        for df in released:
+            df.unpersist()
         self._before = []

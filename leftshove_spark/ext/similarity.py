@@ -37,7 +37,22 @@ def quantize(vec: Column | str) -> Column:
     return F.transform(col, lambda x: F.round(x.cast("double") * QUANT_SCALE).cast("long"))
 
 
-def int_dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _int_dot_sql(a: str, b: str, dim: int) -> str:
+    terms = " + ".join(
+        f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1)
+    )
+    return (
+        f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+        f"THEN CAST({terms} AS BIGINT) END"
+    )
+
+
+def _check_names(a, b) -> None:
+    if not (isinstance(a, str) and isinstance(b, str)):
+        raise TypeError("the unrolled (dim=...) form takes column NAMES, not Columns")
+
+
+def int_dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     """Exact integer dot product of two quantized vectors.
 
     With ``dim`` the sum unrolls to ``dim`` element_at products — plain
@@ -54,30 +69,40 @@ def int_dot(a: Column, b: Column, dim: int | None = None) -> Column:
     prefix dot (wrong cosine, no error — ADVICE r10), and a larger one
     NULLs via out-of-range element_at only by accident of non-ANSI
     mode. The guard makes both mismatches an explicit NULL — visible in
-    any downstream cosine — for two extra codegen size() calls."""
+    any downstream cosine — for two extra codegen size() calls.
+
+    One-call build rule: a wide expression is rendered as SQL text and
+    parsed by ONE ``F.expr`` — never assembled Column by Column, which
+    costs py4j round-trips per node (about 3,000 for one 64-dim dot). The
+    parsed tree is the same left-deep ``Add`` chain under the same size
+    guard, so the plan, the codegen and every result bit are unchanged.
+    That is why the unrolled form takes column NAMES (``a``/``b`` are
+    spliced into the text); the generic form takes names or Columns."""
     if dim is not None:
-        terms = [
-            F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return F.when(
-            (F.size(a) == dim) & (F.size(b) == dim), out.cast("long")
-        )
+        _check_names(a, b)
+        return F.expr(_int_dot_sql(a, b, dim))
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
     )
 
 
-def cosine_from_quantized(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_from_quantized(
+    a: Column | str, b: Column | str, dim: int | None = None
+) -> Column:
     """Cosine from quantized vectors: exact int dot / (sqrt·sqrt).
     Identical IEEE results everywhere since all inputs are exact ints
     (and identical between the ``dim``-unrolled and generic dot forms —
-    see :func:`int_dot`)."""
-    return int_dot(a, b, dim).cast("double") / (
-        F.sqrt(int_dot(a, a, dim).cast("double"))
-        * F.sqrt(int_dot(b, b, dim).cast("double"))
+    see :func:`int_dot`). With ``dim`` the three dots are one SQL
+    expression, built in one call (``a``/``b`` are column names)."""
+    if dim is not None:
+        _check_names(a, b)
+        ab, aa, bb = (_int_dot_sql(x, y, dim) for x, y in ((a, b), (a, a), (b, b)))
+        return F.expr(
+            f"CAST({ab} AS DOUBLE) / "
+            f"(SQRT(CAST({aa} AS DOUBLE)) * SQRT(CAST({bb} AS DOUBLE)))"
+        )
+    return int_dot(a, b).cast("double") / (
+        F.sqrt(int_dot(a, a).cast("double")) * F.sqrt(int_dot(b, b).cast("double"))
     )
 
 
@@ -105,7 +130,7 @@ def knn_bruteforce(
     c = corpus.select(F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_from_quantized(F.col("qv"), F.col("cv"), dim))
+        .withColumn("cosine", cosine_from_quantized("qv", "cv", dim))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
@@ -128,6 +153,11 @@ def _plane(p: int, dim: int) -> list[int]:
     return out
 
 
+def _long_array(xs: list[int]) -> Column:
+    """Literal array<bigint>, built in one call (the int_dot rule)."""
+    return F.expr("array(" + ", ".join(f"CAST({int(x)} AS BIGINT)" for x in xs) + ")")
+
+
 def lsh_bucket(vec_q: Column, dim: int, n_planes: int = N_PLANES) -> Column:
     """Sign-random-projection bucket id: bit p = sign of <plane_p, v>.
     Planes are literal int arrays (driver-side deterministic), so the
@@ -135,7 +165,7 @@ def lsh_bucket(vec_q: Column, dim: int, n_planes: int = N_PLANES) -> Column:
     bit-for-bit on any engine or cluster."""
     bits = []
     for p in range(n_planes):
-        plane = F.array(*[F.lit(x).cast("long") for x in _plane(p, dim)])
+        plane = _long_array(_plane(p, dim))
         dot = F.aggregate(
             F.zip_with(plane, vec_q, lambda x, y: x * y),
             F.lit(0).cast("long"),
@@ -181,9 +211,7 @@ def knn_lsh(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .drop("bucket")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn(
-            "cosine", cosine_from_quantized(F.col("qv"), F.col("cv"), dim=dim)
-        )
+        .withColumn("cosine", cosine_from_quantized("qv", "cv", dim=dim))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
@@ -216,7 +244,7 @@ def _centroid_scores(qv: Column, centroids: list[list[int]]) -> list[Column]:
     (:func:`_centroid_cosines_np`) replicates this with NaN→-inf."""
     cols = []
     for cen in centroids:
-        arr = F.array(*[F.lit(x).cast("long") for x in cen])
+        arr = _long_array(cen)
         cols.append(
             F.try_divide(
                 int_dot(arr, qv).cast("double"),
@@ -385,12 +413,13 @@ def ivf_centroids(
 
     Each Lloyd step is ONE map-only job (r16, guide §2.3 taken to its
     limit): a single Arrow pass assigns the batch AND emits per-task
-    partial (cell, count, exact int64 column sums) rows — ≤ k rows per
-    task — which a k-group combine reduces to the new means. The old
-    shape shuffled the ENTIRE quantized corpus into an applyInPandas
-    re-center per step; the partial-sum shuffle moves O(tasks·k) tiny
-    rows instead. Arithmetic is unchanged where it matters: integer
-    addition is order-free and exact, and the mean is the same
+    partial sums as long-format ``(cl, d, v)`` rows — ``v`` the exact
+    int64 sum of dimension ``d`` over the task's rows in cell ``cl``,
+    ``d = -1`` its row count — which a ``(cl, d)``-keyed ``sum`` combines.
+    The shuffle moves O(tasks·k·dim) tiny rows, never the corpus, and
+    the combine is ONE aggregate column whatever ``dim`` is (a column
+    per dimension costs py4j round-trips per dimension to build).
+    Integer addition is order-free and exact, and the mean is the same
     ``floor(sum/count + 0.5)`` with the division in IEEE doubles —
     bit-identical to the previous np.mean form for any sum below 2^53
     (the fixture and any quantized corpus this side of 10^12 rows per
@@ -402,7 +431,7 @@ def ivf_centroids(
     corpus is scanned/quantized once per operator, not once per phase."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
     v = (
         _quantized
@@ -420,8 +449,8 @@ def ivf_centroids(
     part_schema = StructType(
         [
             StructField("cl", LongType()),
-            StructField("cnt", LongType()),
-            StructField("s", ArrayType(LongType())),
+            StructField("d", LongType()),
+            StructField("v", LongType()),
         ]
     )
 
@@ -431,62 +460,53 @@ def ivf_centroids(
         k, dim = C.shape
 
         def partials(batches):
-            acc_cnt = np.zeros(k, dtype=np.int64)
-            acc_sum = np.zeros((k, dim), dtype=np.int64)
-            seen = False
+            # column 0 = count (d = -1), column 1 + j = sum of dimension j
+            acc = np.zeros((k, dim + 1), dtype=np.int64)
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                seen = True
                 Q = np.array(pdf["qv"].tolist(), dtype=np.int64)
                 cos = _centroid_cosines_np(Q, C, Cn)
                 best = cos.max(axis=1)
                 idx = np.where(
                     cos == best[:, None], np.arange(k)[None, :], -1
                 ).max(axis=1)
-                np.add.at(acc_cnt, idx, 1)
-                np.add.at(acc_sum, idx, Q)
-            if seen:
-                nz = acc_cnt > 0
+                np.add.at(acc[:, 0], idx, 1)
+                np.add.at(acc[:, 1:], idx, Q)
+            cl = np.flatnonzero(acc[:, 0])
+            if len(cl):
                 yield pd.DataFrame(
                     {
-                        "cl": np.arange(k)[nz],
-                        "cnt": acc_cnt[nz],
-                        "s": [row.tolist() for row in acc_sum[nz]],
+                        "cl": np.repeat(cl, dim + 1),
+                        "d": np.tile(np.arange(-1, dim), len(cl)),
+                        "v": acc[cl].ravel(),
                     }
                 )
 
-        # combine = BUILT-IN aggregates (r16, guide §4.1): sum(cnt) +
-        # one element-wise long sum per dimension — partial/map-side
-        # aggregation in codegen, no second Python stage. The mean is
-        # computed driver-side from the k collected (cnt, sums) rows
-        # with the exact arithmetic of the former applyInPandas
-        # combine: integer sums are order-free and exact, and
-        # floor(sum/cnt + 0.5) divides the exact int64 total in IEEE
-        # doubles — explicit half-UP rounding, identical in any engine
-        # (np.round is half-EVEN, SQL round() half-away; both diverge
-        # cross-engine on exact .5 means, which integer means hit
-        # constantly) and exactly what DuckDB's avg-over-BIGINT
+        # combine = ONE built-in sum over (cl, d):
+        # partial/map-side aggregation in codegen, no second Python
+        # stage. floor(sum/cnt + 0.5) divides the exact int64 total in
+        # IEEE doubles — explicit half-UP rounding, identical in any
+        # engine (np.round is half-EVEN, SQL round() half-away; both
+        # diverge cross-engine on exact .5 means, which integer means
+        # hit constantly) and exactly what DuckDB's avg-over-BIGINT
         # convention replays.
         rows = (
             v.select("qv")
             .mapInPandas(partials, part_schema)
-            .groupBy("cl")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                *[
-                    F.sum(F.element_at("s", i + 1)).alias(f"s{i}")
-                    for i in range(dim)
-                ],
-            )
+            .groupBy("cl", "d")
+            .agg(F.sum("v").alias("v"))
             .collect()
         )
-        new = {}
+        tot = np.zeros((k, dim + 1), dtype=np.int64)
         for r in rows:
-            total = np.array([r[f"s{i}"] for i in range(dim)], dtype=np.int64)
-            new[r["cl"]] = np.floor(
-                total.astype(np.float64) / float(r["cnt"]) + 0.5
-            ).astype(np.int64).tolist()
+            tot[r["cl"], r["d"] + 1] = r["v"]
+        new = {
+            cl: np.floor(tot[cl, 1:].astype(np.float64) / float(tot[cl, 0]) + 0.5)
+            .astype(np.int64)
+            .tolist()
+            for cl in np.flatnonzero(tot[:, 0]).tolist()
+        }
         # empty clusters keep their previous centroid
         cents = [list(new.get(i, cents[i])) for i in range(n_centroids)]
     return cents
@@ -564,7 +584,7 @@ def knn_ivf(
         .drop("cell")
         .withColumn(
             "cosine",
-            cosine_from_quantized(F.col("qv"), F.col("cv"), dim=len(cents[0])),
+            cosine_from_quantized("qv", "cv", dim=len(cents[0])),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -1175,9 +1195,7 @@ def knn_pq_rerank(
         .join(F.broadcast(qvecs), "query_id")
         .withColumn(
             "cosine",
-            cosine_from_quantized(
-                F.col("qqv"), F.col("cv"), dim=len(books) * sub_dim
-            ),
+            cosine_from_quantized("qqv", "cv", dim=len(books) * sub_dim),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -1248,6 +1266,8 @@ def ivfadc_train(
     import numpy as np
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     v = (
         _quantized
         if _quantized is not None
@@ -1257,10 +1277,13 @@ def ivfadc_train(
     # on the coarse centroids — overlap its TakeOrdered job with the
     # Lloyd iterations from a driver thread (guide §2.6: actions are
     # only sequential because the driver calls them sequentially).
-    # Deterministic: both read the same pinned/immutable relation.
+    # Deterministic: both read the same pinned/immutable relation. The
+    # thread inherits the caller's job group and tags.
     with ThreadPoolExecutor(max_workers=1) as pool:
         sample_f = pool.submit(
-            lambda: v.orderBy(*_sample_order("id")).limit(sample_n).collect()
+            inheritable_thread_target(v.sparkSession)(
+                lambda: v.orderBy(*_sample_order("id")).limit(sample_n).collect()
+            )
         )
         cents = ivf_centroids(
             corpus,
@@ -1473,9 +1496,11 @@ def knn_ivfadc(
     read the same narrow (id, qv) relation instead of re-scanning and
     re-quantizing the source per phase (owner-released via ext.cache,
     the staged-shingles discipline)."""
-    from leftshove_spark.ext import cache as _cache
-
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from leftshove_spark.ext import cache as _cache
 
     v = (
         _quantized
@@ -1493,9 +1518,12 @@ def knn_ivfadc(
     # relation, never on the trained centroids — overlap it with the
     # Lloyd loop from a driver thread (r16 wave 5, guide §2.6), exactly
     # like the PQ training sample inside ivfadc_train. Deterministic:
-    # both read the same pinned/immutable relation.
+    # both read the same pinned/immutable relation. The thread inherits
+    # the caller's job group and tags.
     with ThreadPoolExecutor(max_workers=1) as pool:
-        qrows_f = pool.submit(_unique_query_rows, q)
+        qrows_f = pool.submit(
+            inheritable_thread_target(q.sparkSession)(_unique_query_rows), q
+        )
         cents, books = ivfadc_train(
             corpus,
             n_centroids=n_centroids,
@@ -1579,9 +1607,7 @@ def knn_ivfadc_rerank(
             # m_sub default); a caller whose vectors are a different
             # length now gets explicit NULL cosines from int_dot's
             # size guard instead of a silent prefix dot (ADVICE r10)
-            cosine_from_quantized(
-                F.col("qqv"), F.col("cv"), dim=PQ_M * sub_dim
-            ),
+            cosine_from_quantized("qqv", "cv", dim=PQ_M * sub_dim),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -1783,7 +1809,7 @@ def semdedup_admit(
                 "cell",
             )
             .filter(
-                cosine_from_quantized(F.col("qv"), F.col("iqv"), dim=len(cents[0]))
+                cosine_from_quantized("qv", "iqv", dim=len(cents[0]))
                 >= threshold
             )
             .select("vec_id")
@@ -1805,7 +1831,7 @@ def semdedup_admit(
         xa.join(xb, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            cosine_from_quantized(F.col("qv_a"), F.col("qv_b"), dim=len(cents[0]))
+            cosine_from_quantized("qv_a", "qv_b", dim=len(cents[0]))
             >= threshold
         )
         .select("id_a", "id_b")

@@ -23,8 +23,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "leftshove-spark",
@@ -34,15 +32,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Defaults target the test harness (local[N]); on a real cluster the
-    same confs hold, with master/resources supplied by the submitter.
+    Defaults target the test harness (local[N]), N = ``SPARK_GRAFT_CPUS``
+    or else the CPUs this process may run on; N also sets the shuffle
+    partitions. On a real cluster the same confs hold, with
+    master/resources supplied by the submitter.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # Permissive (non-ANSI) arithmetic — the Spark 3.x default. Spark 4
         # flips spark.sql.ansi.enabled on, which wraps every sum/cast in
         # overflow/validity checks; measured ~17% uniform tax on the

@@ -5,9 +5,10 @@ guard → derive) for the current-state fold (desc derive) and prints the
 physical plan's Sort/Exchange/Window node counts for both guard forms.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F

@@ -7,9 +7,10 @@ canon + order-insensitive normalized values).
 Usage: python scripts/check_oracle.py [sf_dir] [name_filter...]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 

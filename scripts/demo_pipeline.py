@@ -24,9 +24,10 @@ Prints one JSON line of stage counts, then PIPELINE DEMO OK.
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -1,9 +1,9 @@
 """Phase-0 smoke: seed → create_sinks → 3 CDC cycles → dedup view equals
 latest-per-key computed independently. Run: python scripts/smoke_phase0.py"""
-import shutil, sys, tempfile
+import os, shutil, sys, tempfile
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from leftshove_spark.session import get_spark, EngineConfig
 from leftshove_spark.engine import Engine
 from pyspark.sql import functions as F

@@ -191,3 +191,63 @@ def test_pin_scope_holds_entry_pins_alive(spark, docs):
     gc.collect()
     assert ref() is None  # exit drops the held references
     assert _cache_empty(spark)
+
+
+class _FakeFrame:
+    """Stands in for a DataFrame in the registry race: records only
+    whether it is persisted."""
+
+    persisted = False
+
+    def persist(self, level):
+        self.persisted = True
+        return self
+
+    def unpersist(self, blocking=False):
+        self.persisted = False
+        return self
+
+
+def test_pin_racing_release_is_released_or_kept():
+    """Pinning threads racing releasing threads (a live stream's
+    foreachBatch releases while operators beside it pin): every frame
+    still persisted afterwards must still be registered, so the next
+    release_pins() reaches it — a racing pin is released or kept, never
+    dropped from the registry while persisted."""
+    import sys
+    import threading
+
+    batches = [[_FakeFrame() for _ in range(5_000)] for _ in range(4)]
+
+    def pinner(frames):
+        for f in frames:
+            cache.pin(f)
+
+    done = threading.Event()
+
+    def releaser():
+        while not done.is_set():
+            cache.release_pins()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads densely
+    try:
+        releasers = [threading.Thread(target=releaser) for _ in range(2)]
+        pinners = [threading.Thread(target=pinner, args=(b,)) for b in batches]
+        for t in releasers + pinners:
+            t.start()
+        for t in pinners:
+            t.join(timeout=60)
+        done.set()
+        for t in releasers:
+            t.join(timeout=60)
+    finally:
+        done.set()
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in releasers + pinners)
+    frames = [f for b in batches for f in b]
+    registered = {id(f) for f in cache._PINNED}
+    leaked = [f for f in frames if f.persisted and id(f) not in registered]
+    assert not leaked, f"{len(leaked)} persisted frames fell out of the registry"
+    cache.release_pins()
+    assert not any(f.persisted for f in frames)

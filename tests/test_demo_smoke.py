@@ -5,14 +5,17 @@ Engine current_state/history/state_as_of/state_at API) — must compose
 end-to-end at sf0.001. Subprocess-isolated: the demo builds its own
 SparkSession, exactly as a user runs it."""
 
+import os
 import subprocess
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_demo_pipeline_runs_end_to_end():
     res = subprocess.run(
         [sys.executable, "scripts/demo_pipeline.py", "/root/testdata/sf0.001"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=900,  # ~93 s standalone; headroom for host-noise bursts (r17:
@@ -42,7 +45,7 @@ def test_quickstart_curation_runs_end_to_end():
             "scripts/quickstart_curation.py",
             "/root/testdata/sf0.001",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=900,  # ~93 s standalone; headroom for host-noise bursts (r17:

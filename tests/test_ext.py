@@ -154,6 +154,98 @@ def test_salted_join_rejects_outer_shapes(spark):
         skew.salted_join(df, df, "k", how="full_outer")
 
 
+def _dot_pairs(spark):
+    """64-dim quantized pairs: seeded random rows, a zero-norm row, and
+    a size-mismatch row (63 components on one side)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    rows = [
+        (i, rng.integers(-4000, 4001, 64).tolist(), rng.integers(-4000, 4001, 64).tolist())
+        for i in range(40)
+    ]
+    rows.append((40, [0] * 64, rng.integers(-4000, 4001, 64).tolist()))
+    rows.append((41, rng.integers(-4000, 4001, 63).tolist(), rng.integers(-4000, 4001, 64).tolist()))
+    return spark.createDataFrame(rows, "id bigint, a array<bigint>, b array<bigint>")
+
+
+def test_unrolled_dot_and_cosine_match_generic_form(spark):
+    """The one-call SQL-text unrolled int_dot / cosine_from_quantized
+    equal the generic higher-order form bit for bit, and a size mismatch
+    gives NULL (the size guard), never a prefix dot."""
+    got = {
+        r["id"]: r
+        for r in _dot_pairs(spark)
+        .select(
+            "id",
+            S.int_dot("a", "b", dim=64).alias("dot_u"),
+            S.int_dot(F.col("a"), F.col("b")).alias("dot_g"),
+            S.cosine_from_quantized("a", "b", dim=64).alias("cos_u"),
+            S.cosine_from_quantized(F.col("a"), F.col("b")).alias("cos_g"),
+        )
+        .collect()
+    }
+    assert len(got) == 42
+    for i, r in got.items():
+        assert r["dot_u"] == r["dot_g"], i
+        assert r["cos_u"] == r["cos_g"], i  # bit-equal doubles (or both NULL)
+    assert got[41]["dot_u"] is None and got[41]["cos_u"] is None
+    assert got[40]["dot_u"] == 0 and got[40]["cos_u"] is None  # 0/0 → NULL
+    assert all(got[i]["cos_u"] is not None for i in range(40))
+
+
+def test_unrolled_cosine_builds_in_few_jvm_calls(spark):
+    """Building a 64-dim cosine (three unrolled dots, ~750 expression
+    nodes) costs a handful of py4j round-trips, not one per node."""
+    import py4j.clientserver as cs
+
+    calls = []
+    orig = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(1)
+        return orig(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        S.cosine_from_quantized("qv", "cv", dim=64)
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    assert 0 < len(calls) <= 10, len(calls)
+
+
+def test_ivf_centroids_match_numpy_replay(emb):
+    """ivf_centroids on the sf0.001 embeddings equals a pure-numpy
+    replay: seeds first in md5(salt || id) order, then two Lloyd steps
+    (argmax cosine, ties → higher index; floor(sum/count + 0.5) means;
+    an empty cell keeps its centroid)."""
+    import hashlib
+
+    import numpy as np
+
+    k = 16
+    rows = emb.select("vec_id", S.quantize("embedding").alias("qv")).collect()
+    ids = [r["vec_id"] for r in rows]
+    Q = np.array([r["qv"] for r in rows], dtype=np.int64)
+    order = sorted(
+        range(len(ids)),
+        key=lambda j: (hashlib.md5(f"{S.IVF_SEED_SALT}{ids[j]}".encode()).hexdigest(), ids[j]),
+    )
+    C = Q[order[:k]].copy()
+    for _ in range(2):
+        qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
+        cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = (Q @ C.T).astype(np.float64) / (qn[:, None] * cn[None, :])
+        cos[np.isnan(cos)] = -np.inf
+        cell = k - 1 - np.argmax(cos[:, ::-1], axis=1)  # ties → higher index
+        for c in range(k):
+            members = Q[cell == c]
+            if len(members):
+                C[c] = np.floor(members.sum(axis=0) / len(members) + 0.5)
+    assert S.ivf_centroids(emb, n_centroids=k, iters=2) == C.tolist()
+
+
 def test_ivf_precision_and_recall(emb):
     """knn_ivf: every IVF neighbor carries the brute-force-exact cosine
     (precision absolute — the rerank is the same integer arithmetic);
@@ -975,7 +1067,7 @@ def test_ivf_arrow_cos_col_matches_expression(spark):
         .join(F.broadcast(cent_df), "cell")
         .withColumn(
             "c2c",
-            S.cosine_from_quantized(F.col("qv"), F.col("cen"), dim=4),
+            S.cosine_from_quantized("qv", "cen", dim=4),
         )
         .collect()
     )
