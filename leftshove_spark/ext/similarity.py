@@ -1698,15 +1698,14 @@ def semdedup(
     # plan hazard — SemDeDup's n_centroids scales ~√n precisely to
     # bound cells.
     import numpy as np
+    import pandas as pd
 
     id_type = withc.schema["id"].dataType
     pair_schema = T.StructType(
         [T.StructField("id_a", id_type), T.StructField("id_b", id_type)]
     )
 
-    def cell_pairs(key: tuple, pdf) -> "pd.DataFrame":
-        import pandas as pd
-
+    def cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": []})

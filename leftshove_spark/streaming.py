@@ -251,6 +251,54 @@ def make_schema_drift_guard(landing_dir: str, pinned_schema) -> Callable[[], Non
     return check
 
 
+def _start_file_stream(
+    spark: SparkSession,
+    *,
+    query_name: str,
+    landing_dir: str,
+    checkpoint_dir: str,
+    batch_fn: Callable[[DataFrame, int], None],
+    once: bool,
+    processing_time: str,
+    max_files_per_trigger: int | None = None,
+    source_schema=None,
+    plan: Callable[[DataFrame], DataFrame] | None = None,
+) -> StreamingQuery:
+    """The one skeleton every ``start_*`` stream here starts through:
+    the file source (:func:`_streaming_source`), ``plan`` over it
+    (default: the source itself), and a named ``foreachBatch`` query
+    triggered availableNow (``once``) or every ``processing_time``.
+    Each batch first runs :func:`make_schema_drift_guard`, so a landed
+    file carrying fields the source schema lacks fails the stream
+    BEFORE ``batch_fn`` writes anything, checkpoint uncommitted;
+    ``batch_fn`` then runs inside ``ext.cache.pin_scope``, which
+    releases the pins the batch took and keeps those held outside the
+    stream."""
+    from .ext import cache
+
+    src = _streaming_source(
+        spark, landing_dir, max_files_per_trigger, schema=source_schema
+    )
+    drift_guard = make_schema_drift_guard(landing_dir, src.schema)
+    out = src if plan is None else plan(src)
+
+    def guarded_batch(batch_df: DataFrame, batch_id: int) -> None:
+        drift_guard()
+        with cache.pin_scope():
+            batch_fn(batch_df, batch_id)
+
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    trigger = {"availableNow": True} if once else {"processingTime": processing_time}
+    return (
+        out.writeStream.queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(guarded_batch)
+        .outputMode("append")
+        .trigger(**trigger)
+        .start()
+    )
+
+
 def build_stream_capture(
     src: DataFrame,
     nms_col: str,
@@ -309,18 +357,10 @@ def start_stream_capture(
 
     ``once=True`` ≙ ``-runonce`` (availableNow: drain and stop);
     otherwise a continuous micro-batch loop at ``processing_time`` ≙
-    ``for { cdc() }`` with the sink batch period (main.go:47-65).
-    """
-    src = _streaming_source(spark, landing_dir, max_files_per_trigger)
-    cap = build_stream_capture(
-        src,
-        nms_col,
-        buffer_secs=buffer_secs,
-        munge_to_null=munge_to_null,
-        munge_to_min=munge_to_min,
-        min_ts=min_ts,
-        transform=transform,
-    )
+    ``for { cdc() }`` with the sink batch period (main.go:47-65). A
+    landed file with fields the inferred schema lacks fails the stream
+    before any write (:func:`_start_file_stream`), never captured
+    without them."""
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         # W5: the append happens inside the batch; Spark commits the
@@ -342,18 +382,25 @@ def start_stream_capture(
         finally:
             batch_df.unpersist()
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    writer = (
-        cap.writeStream.queryName(f"capture_{name}")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_fn)
-        .outputMode("append")
+    return _start_file_stream(
+        spark,
+        query_name=f"capture_{name}",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
+        plan=lambda src: build_stream_capture(
+            src,
+            nms_col,
+            buffer_secs=buffer_secs,
+            munge_to_null=munge_to_null,
+            munge_to_min=munge_to_min,
+            min_ts=min_ts,
+            transform=transform,
+        ),
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def sessionize_stream(
@@ -813,7 +860,6 @@ def start_current_state_stream(
     retention_sec: float | None = None,
     source_schema=None,
     files_per_bucket: int | None = None,
-    guard_schema_drift: bool = False,
 ) -> StreamingQuery:
     """W26 — Structured Streaming maintenance of the W25 materialized
     current-state table: every micro-batch of landed versions folds
@@ -835,27 +881,19 @@ def start_current_state_stream(
     :func:`current_state_lookup`) between triggers.
 
     ``keep_generations`` / ``retention_sec`` thread through to the
-    manifest GC (r13: THIS maintainer is the fast-cadence deployment
-    the SCALE.md reader-latency envelope is about — a 20 s trigger with
-    a >40 s analytical reader MUST widen the retention here, so the
-    knob has to be reachable from the stream API, not only from the
-    batch fold).
+    manifest GC: THIS maintainer is the fast-cadence deployment the
+    SCALE.md reader-latency envelope is about — a 20 s trigger with a
+    >40 s analytical reader MUST widen the retention here, so the knob
+    has to be reachable from the stream API, not only from the batch
+    fold.
 
     ``source_schema`` lets the stream start on a still-empty landing
-    dir (the live composed pipeline's downstream stages, W28)."""
-    src = _streaming_source(
-        spark, landing_dir, max_files_per_trigger, schema=source_schema
-    )
-    drift_guard = (
-        make_schema_drift_guard(landing_dir, src.schema)
-        if guard_schema_drift
-        else None
-    )
+    dir (the live composed pipeline's downstream stages, W28). A landed
+    file with fields the stream's schema lacks fails the stream before
+    any fold (:func:`_start_file_stream`): no generation is committed."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        if drift_guard is not None:
-            drift_guard()  # raises BEFORE any write — batch replays
         maintain_current_state(
             spark,
             state_dir,
@@ -869,18 +907,17 @@ def start_current_state_stream(
             files_per_bucket=files_per_bucket,
         )
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    writer = (
-        src.writeStream.queryName("current_state_maintenance")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_fn)
-        .outputMode("append")
+    return _start_file_stream(
+        spark,
+        query_name="current_state_maintenance",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
+        source_schema=source_schema,
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def _maintain_bucketed_state(
@@ -1093,7 +1130,6 @@ def start_near_dedup_stream(
     processing_time: str = "20 seconds",
     max_files_per_trigger: int | None = None,
     source_schema=None,
-    guard_schema_drift: bool = False,
 ) -> StreamingQuery:
     """W20 — streaming near-dup ADMISSION CONTROL: every micro-batch of
     documents is screened against the persisted LSH index before it may
@@ -1112,13 +1148,13 @@ def start_near_dedup_stream(
        (exact connected components — batches are small, the O(log d)
        rounds are cheap here);
     3. append survivors to ``out_dir`` — carrying EVERY landed column
-       (since r13; the admission stream chains into decontamination /
-       state materialization, which need the embedding and version
-       columns) — and their (id, sh, bands) rows to ``index_dir``:
-       the index grows with ADMITTED docs only. Because parquet dirs
-       with mixed column sets resolve to whichever file infers first,
-       point an upgraded deployment at a FRESH ``out_dir`` rather than
-       appending wide rows into a pre-r13 ``(id, content)``-only dir.
+       (the admission stream chains into decontamination / state
+       materialization, which need the embedding and version columns)
+       — and their (id, sh, bands) rows to ``index_dir``: the index
+       grows with ADMITTED docs only. Because parquet dirs with mixed
+       column sets resolve to whichever file infers first, point a
+       deployment at a FRESH ``out_dir`` rather than appending wide
+       rows into an ``(id, content)``-only dir.
 
     Delivery: the checkpoint offset commits after the appends, so a
     crash mid-batch replays it — appends are at-least-once. Replay is
@@ -1133,8 +1169,10 @@ def start_near_dedup_stream(
     dir (the live composed pipeline started ahead of the first wave);
     files landing later must physically match it — Spark-written
     micros timestamps, not raw nano parquet, which only the
-    inference path normalizes."""
-    import os as _os
+    inference path normalizes. A landed file with fields the stream's
+    schema lacks fails the stream before any write, and each batch
+    releases only the LSH pins it took (:func:`_start_file_stream`)."""
+    from pyspark.sql import types as T
 
     from .ext.dedup import (
         build_minhash_index,
@@ -1142,32 +1180,22 @@ def start_near_dedup_stream(
     )
     from .ext.graph import connected_components
 
-    src = _streaming_source(
-        spark, landing_dir, max_files_per_trigger, schema=source_schema
-    )
-    drift_guard = (
-        make_schema_drift_guard(landing_dir, src.schema)
-        if guard_schema_drift
-        else None
-    )
-    from pyspark.sql import types as _T
-
-    id_type = src.schema[id_col].dataType
-    if not isinstance(
-        id_type, (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType)
-    ):
-        # connected_components casts ids to long; a string id would
-        # cast to NULL (non-ANSI) and silently disable in-batch dedup —
-        # fail loudly instead (hash string ids to int64 upstream)
-        raise TypeError(
-            f"near-dedup admission needs an integral {id_col!r} "
-            f"(got {id_type.simpleString()}); hash string ids to int64 first"
-        )
+    def integral_ids(src: DataFrame) -> DataFrame:
+        id_type = src.schema[id_col].dataType
+        if not isinstance(
+            id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        ):
+            # connected_components casts ids to long; a string id would
+            # cast to NULL (non-ANSI) and silently disable in-batch dedup —
+            # fail loudly instead (hash string ids to int64 upstream)
+            raise TypeError(
+                f"near-dedup admission needs an integral {id_col!r} "
+                f"(got {id_type.simpleString()}); hash string ids to int64 first"
+            )
+        return src
 
     def batch_fn(full_df: DataFrame, batch_id: int) -> None:
-        if drift_guard is not None:
-            drift_guard()  # raises BEFORE any write — batch replays
-        # survivors keep EVERY landed column (r13: the admission stream
+        # survivors keep EVERY landed column (the admission stream
         # chains into downstream stages — decontamination needs the
         # embedding, state materialization the version column); only
         # the LSH mining itself projects to (id, content)
@@ -1176,8 +1204,8 @@ def start_near_dedup_stream(
         try:
             if batch_df.isEmpty():
                 return
-            have_index = _os.path.isdir(index_dir) and any(
-                not e.startswith(("_", ".")) for e in _os.listdir(index_dir)
+            have_index = os.path.isdir(index_dir) and any(
+                not e.startswith(("_", ".")) for e in os.listdir(index_dir)
             )
             if have_index:
                 idx = spark.read.parquet(index_dir)
@@ -1242,25 +1270,19 @@ def start_near_dedup_stream(
                 pairs.unpersist()
         finally:
             full_df.unpersist()
-            # the LSH stages pin shingle intermediates (ext.cache); a
-            # long-running stream must release them per batch or the
-            # block manager accumulates one pin set per trigger
-            from .ext import cache as _pin_cache
 
-            _pin_cache.release_pins()
-
-    _os.makedirs(checkpoint_dir, exist_ok=True)
-    writer = (
-        src.writeStream.queryName("near_dedup_admission")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_fn)
-        .outputMode("append")
+    return _start_file_stream(
+        spark,
+        query_name="near_dedup_admission",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
+        source_schema=source_schema,
+        plan=integral_ids,
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_decontaminate_stream(
@@ -1279,7 +1301,6 @@ def start_decontaminate_stream(
     processing_time: str = "20 seconds",
     max_files_per_trigger: int | None = None,
     source_schema=None,
-    guard_schema_drift: bool = False,
 ) -> StreamingQuery:
     """W27 — streaming SEMANTIC-DECONTAMINATION admission: every
     micro-batch of embedded documents is screened against the frozen
@@ -1307,21 +1328,12 @@ def start_decontaminate_stream(
     operator runs both — pytest-pinned across triggers).
 
     ``source_schema`` lets the stream start on a still-empty landing
-    dir (the live composed pipeline's downstream stages, W28)."""
+    dir (the live composed pipeline's downstream stages, W28). A landed
+    file with fields the stream's schema lacks fails the stream before
+    any write (:func:`_start_file_stream`)."""
     from .ext.pipeline import decontaminate_semantic
 
-    src = _streaming_source(
-        spark, landing_dir, max_files_per_trigger, schema=source_schema
-    )
-    drift_guard = (
-        make_schema_drift_guard(landing_dir, src.schema)
-        if guard_schema_drift
-        else None
-    )
-
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        if drift_guard is not None:
-            drift_guard()  # raises BEFORE any write — batch replays
         batch_df = batch_df.persist()
         try:
             if batch_df.isEmpty():
@@ -1349,18 +1361,17 @@ def start_decontaminate_stream(
         finally:
             batch_df.unpersist()
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    writer = (
-        src.writeStream.queryName("decontaminate_admission")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(batch_fn)
-        .outputMode("append")
+    return _start_file_stream(
+        spark,
+        query_name="decontaminate_admission",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
+        source_schema=source_schema,
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def maintain_rollup(
@@ -1648,10 +1659,10 @@ def start_embedding_index_stream(
 
     Per batch the work is one narrow Arrow encode pass over the
     batch (vectorized per-subspace argmin-L2, see pq_encode) and an
-    append of m small ints per row — O(batch), no shuffle, no state."""
+    append of m small ints per row — O(batch), no shuffle, no state.
+    A landed file with fields the inferred schema lacks fails the
+    stream before any write (:func:`_start_file_stream`)."""
     from .ext.similarity import pq_encode
-
-    src = _streaming_source(spark, landing_dir, max_files_per_trigger)
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1659,14 +1670,111 @@ def start_embedding_index_stream(
         enc = pq_encode(batch_df, books, id_col=id_col, vec_col=vec_col).drop("qv")
         enc.write.mode("append").parquet(index_dir)
 
-    writer = src.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_file_stream(
+        spark,
+        query_name="embedding_index",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
+
+
+def _corpus_stages(
+    spark: SparkSession,
+    *,
+    landing_dir: str,
+    work_dir: str,
+    benchmark_emb_dir: str,
+    cents: list[list[int]],
+    books: list[list[list[int]]],
+    text_col: str,
+    id_col: str,
+    vec_col: str,
+    order_col: str,
+    jaccard_threshold: float,
+    threshold: float,
+    n_buckets: int,
+    keep_generations: int | None,
+    retention_sec: float | None,
+    files_per_bucket: int | None,
+    admit_schema,
+    schema,
+    processing_time: str | None,
+) -> tuple[dict[str, str], dict[str, Callable[[], StreamingQuery]]]:
+    """The composed corpus pipeline's stage directories and its four
+    stage starters keyed by stage, upstream first — the one wiring both
+    deployments run. Admission reads ``admit_schema``, the three
+    downstream stages ``schema``. ``processing_time=None`` starts each
+    stage as an availableNow drain, otherwise as a loop at that period;
+    either way it checkpoints under ``work_dir/ck/<stage>``."""
+    dirs = {
+        d: os.path.join(work_dir, d)
+        for d in "admitted clean quarantine lsh_index ivfadc_index state".split()
+    }
+
+    def ck(stage: str) -> str:
+        return os.path.join(work_dir, "ck", stage)
+
+    if processing_time is None:
+        trigger = {"once": True}
     else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+        trigger = {"once": False, "processing_time": processing_time}
+    return dirs, {
+        "admit": lambda: start_near_dedup_stream(
+            spark,
+            landing_dir=landing_dir,
+            index_dir=dirs["lsh_index"],
+            out_dir=dirs["admitted"],
+            checkpoint_dir=ck("admit"),
+            content_col=text_col,
+            id_col=id_col,
+            jaccard_threshold=jaccard_threshold,
+            source_schema=admit_schema,
+            **trigger,
+        ),
+        "decontaminate": lambda: start_decontaminate_stream(
+            spark,
+            landing_dir=dirs["admitted"],
+            benchmark_emb_dir=benchmark_emb_dir,
+            out_dir=dirs["clean"],
+            checkpoint_dir=ck("decontaminate"),
+            quarantine_dir=dirs["quarantine"],
+            threshold=threshold,
+            id_col=id_col,
+            vec_col=vec_col,
+            source_schema=schema,
+            **trigger,
+        ),
+        "index": lambda: start_ivfadc_index_stream(
+            spark,
+            landing_dir=dirs["clean"],
+            index_dir=dirs["ivfadc_index"],
+            cents=cents,
+            books=books,
+            checkpoint_dir=ck("index"),
+            id_col=id_col,
+            vec_col=vec_col,
+            source_schema=schema,
+            **trigger,
+        ),
+        "state": lambda: start_current_state_stream(
+            spark,
+            landing_dir=dirs["clean"],
+            state_dir=dirs["state"],
+            checkpoint_dir=ck("state"),
+            key_cols=id_col,
+            order_col=order_col,
+            n_buckets=n_buckets,
+            keep_generations=keep_generations,
+            retention_sec=retention_sec,
+            files_per_bucket=files_per_bucket,
+            source_schema=schema,
+            **trigger,
+        ),
+    }
 
 
 def run_corpus_stream_pipeline(
@@ -1689,13 +1797,11 @@ def run_corpus_stream_pipeline(
     retention_sec: float | None = None,
     files_per_bucket: int | None = None,
     schema=None,
-    guard_schema_drift: bool = True,
 ) -> dict[str, str]:
-    """The COMPOSED streaming corpus story (VERDICT r12 next #6):
-    admit → decontaminate → index → materialize, wired as four
-    checkpointed ``availableNow`` streams chained by directories — the
-    Medallion-style DAG the four individually-tested streams were built
-    for, now one call:
+    """The COMPOSED streaming corpus story: admit → decontaminate →
+    index → materialize, wired as four checkpointed ``availableNow``
+    streams chained by directories — the Medallion-style DAG the four
+    individually-tested streams were built for, now one call:
 
     1. **W20 admission** (:func:`start_near_dedup_stream`): landed docs
        are screened against the persistent LSH index; near-dups of
@@ -1716,54 +1822,54 @@ def run_corpus_stream_pipeline(
     Each stage owns a checkpoint under ``work_dir/ck/``, so CALLING
     THIS AGAIN after more files land processes exactly the new files
     through all four stages — the incremental re-run is the deployment
-    story (a `processingTime` variant would run the same four streams
-    concurrently; availableNow keeps the demo/test deterministic).
-    Landed rows must carry ``(id_col, text_col, vec_col, order_col)``;
-    the composition is pytest-pinned ≡ the batch composition of the
-    same four operators (tests/test_streaming_composed.py). Returns
-    the stage directory map.
+    story (:func:`start_corpus_stream_pipeline_live` runs the same four
+    streams concurrently; availableNow keeps the demo/test
+    deterministic). Landed rows must carry ``(id_col, text_col,
+    vec_col, order_col)``; the composition is pytest-pinned ≡ the batch
+    composition of the same four operators
+    (tests/test_streaming_composed.py). Returns the stage directory
+    map.
 
     A stage that has not drained within ``timeout_sec`` raises
-    ``TimeoutError`` (r13: ``awaitTermination``'s False return is a
-    TIMEOUT, not completion — silently starting the next stage would
-    snapshot a partial upstream directory and drop the stragglers from
-    clean/index/state with no error anywhere). ``keep_generations`` /
+    ``TimeoutError``: ``awaitTermination``'s False return is a TIMEOUT,
+    not completion — silently starting the next stage would snapshot a
+    partial upstream directory and drop the stragglers from
+    clean/index/state with no error anywhere. ``keep_generations`` /
     ``retention_sec`` reach stage 4's manifest GC.
 
-    Mid-landing schema evolution gets the SAME discipline as the live
-    form (W30, r16): with ``guard_schema_drift`` each stage fails
-    loudly — checkpoint uncommitted — when a landed file carries
-    fields its schema lacks (a pinned/inferred-schema source silently
-    projects them away, and a plain inference may sample a NARROW
-    footer even when wider files landed). The lossless remedy is the
-    same re-run with ``schema`` set to the mergeSchema-derived wider
-    shape (``spark.read.option('mergeSchema','true')
+    Mid-landing schema evolution: each stage fails loudly — checkpoint
+    uncommitted — when a landed file carries fields its schema lacks (a
+    pinned/inferred-schema source silently projects them away, and a
+    plain inference may sample a NARROW footer even when wider files
+    landed). The lossless remedy is the same re-run with ``schema`` set
+    to the mergeSchema-derived wider shape
+    (``spark.read.option('mergeSchema','true')
     .parquet(landing_dir).schema``) — the flagged files then read in
     full and older narrow files NULL-pad; ``schema=None`` keeps
-    per-stage inference for the stable-schema common case.
-
-    Stage directories are schema-owned by the FIRST deployment that
-    writes them: ``admitted/`` carries every landed column (since r13
-    — pre-r13 admission wrote only ``(id, content)``), so point a
-    fresh ``work_dir`` at this pipeline rather than reusing one an
-    older narrow-schema admission stream populated (parquet dirs with
-    mixed column sets resolve to whichever file infers first)."""
-    dirs = {
-        "admitted": os.path.join(work_dir, "admitted"),
-        "clean": os.path.join(work_dir, "clean"),
-        "quarantine": os.path.join(work_dir, "quarantine"),
-        "lsh_index": os.path.join(work_dir, "lsh_index"),
-        "ivfadc_index": os.path.join(work_dir, "ivfadc_index"),
-        "state": os.path.join(work_dir, "state"),
-    }
-
-    def ck(name: str) -> str:
-        return os.path.join(work_dir, "ck", name)
-
-    def drain(q, stage: str) -> None:
-        # awaitTermination(timeout) returns False on TIMEOUT — the
-        # stream is still writing; snapshotting its output dir for the
-        # next stage would silently drop the stragglers (r13)
+    per-stage inference for the stable-schema common case."""
+    dirs, stages = _corpus_stages(
+        spark,
+        landing_dir=landing_dir,
+        work_dir=work_dir,
+        benchmark_emb_dir=benchmark_emb_dir,
+        cents=cents,
+        books=books,
+        text_col=text_col,
+        id_col=id_col,
+        vec_col=vec_col,
+        order_col=order_col,
+        jaccard_threshold=jaccard_threshold,
+        threshold=threshold,
+        n_buckets=n_buckets,
+        keep_generations=keep_generations,
+        retention_sec=retention_sec,
+        files_per_bucket=files_per_bucket,
+        admit_schema=schema,
+        schema=schema,
+        processing_time=None,
+    )
+    for stage, start in stages.items():
+        q = start()
         if not q.awaitTermination(timeout_sec):
             q.stop()
             raise TimeoutError(
@@ -1771,66 +1877,6 @@ def run_corpus_stream_pipeline(
                 "downstream stages would snapshot a partial directory — "
                 "raise timeout_sec or reduce the landed wave"
             )
-
-    q = start_near_dedup_stream(
-        spark,
-        landing_dir=landing_dir,
-        index_dir=dirs["lsh_index"],
-        out_dir=dirs["admitted"],
-        checkpoint_dir=ck("admit"),
-        content_col=text_col,
-        id_col=id_col,
-        jaccard_threshold=jaccard_threshold,
-        once=True,
-        source_schema=schema,
-        guard_schema_drift=guard_schema_drift,
-    )
-    drain(q, "admit")
-    q = start_decontaminate_stream(
-        spark,
-        landing_dir=dirs["admitted"],
-        benchmark_emb_dir=benchmark_emb_dir,
-        out_dir=dirs["clean"],
-        checkpoint_dir=ck("decontaminate"),
-        quarantine_dir=dirs["quarantine"],
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        once=True,
-        source_schema=schema,
-        guard_schema_drift=guard_schema_drift,
-    )
-    drain(q, "decontaminate")
-    q = start_ivfadc_index_stream(
-        spark,
-        landing_dir=dirs["clean"],
-        index_dir=dirs["ivfadc_index"],
-        cents=cents,
-        books=books,
-        checkpoint_dir=ck("index"),
-        id_col=id_col,
-        vec_col=vec_col,
-        once=True,
-        source_schema=schema,
-        guard_schema_drift=guard_schema_drift,
-    )
-    drain(q, "index")
-    q = start_current_state_stream(
-        spark,
-        landing_dir=dirs["clean"],
-        state_dir=dirs["state"],
-        checkpoint_dir=ck("state"),
-        key_cols=id_col,
-        order_col=order_col,
-        n_buckets=n_buckets,
-        once=True,
-        keep_generations=keep_generations,
-        retention_sec=retention_sec,
-        files_per_bucket=files_per_bucket,
-        source_schema=schema,
-        guard_schema_drift=guard_schema_drift,
-    )
-    drain(q, "state")
     return dirs
 
 
@@ -1854,17 +1900,15 @@ def start_corpus_stream_pipeline_live(
     retention_sec: float | None = None,
     schema=None,
     files_per_bucket: int | None = None,
-    guard_schema_drift: bool = True,
 ) -> tuple[dict[str, str], list[StreamingQuery]]:
-    """The CONTINUOUS deployment mode of the composed corpus pipeline
-    (VERDICT r13 next #2): the same four stages as
-    :func:`run_corpus_stream_pipeline` — admit → decontaminate → index
-    → materialize — but started as four CONCURRENTLY-RUNNING
-    ``processingTime`` streams chained by directories. New files
-    landing in ``landing_dir`` flow through all four stages while they
-    run; each stage's file source picks up its upstream's appends on
-    its next trigger, so end-to-end latency is a few trigger periods,
-    not a re-run.
+    """The CONTINUOUS deployment mode of the composed corpus pipeline:
+    the same four stages as :func:`run_corpus_stream_pipeline` — admit
+    → decontaminate → index → materialize — but started as four
+    CONCURRENTLY-RUNNING ``processingTime`` streams chained by
+    directories. New files landing in ``landing_dir`` flow through all
+    four stages while they run; each stage's file source picks up its
+    upstream's appends on its next trigger, so end-to-end latency is a
+    few trigger periods, not a re-run.
 
     The downstream stages start on still-EMPTY intermediate dirs, so
     their sources take an explicit schema — derived from the landing
@@ -1888,16 +1932,11 @@ def start_corpus_stream_pipeline_live(
     availableNow re-run, and vice versa (same checkpoints, same stage
     contracts; pytest pins live end-state ≡ chained end-state).
 
-    Mid-stream schema evolution (VERDICT r15 next #3, the W29 pin):
-    with ``guard_schema_drift`` (default ON here), every stage checks
-    each trigger — before any write — that no landed file carries
-    columns its pinned schema lacks, and FAILS LOUDLY when one does
-    (:func:`make_schema_drift_guard`): a pinned-schema file source
-    would otherwise silently project the new column away, and once the
-    batch's checkpoint committed, drop it for good. The failing batch's
-    checkpoint stays uncommitted, so the additive-evolution path is a
-    lossless RESTART: stop the pipeline, re-start it with the widened
-    ``schema`` — the flagged file re-reads in full, downstream narrow
+    Mid-stream schema evolution: a stage whose landed file carries
+    columns its pinned schema lacks FAILS LOUDLY before any write
+    (:func:`make_schema_drift_guard`), checkpoint uncommitted, so
+    additive evolution is a lossless RESTART with the widened
+    ``schema``: the flagged file re-reads in full, downstream narrow
     files NULL-pad through mergeSchema/unionByName, and the state fold
     widens additively (D7a discipline). Never a silent column drop.
 
@@ -1911,95 +1950,42 @@ def start_corpus_stream_pipeline_live(
     alone). The state stage remains the statestore's ONE writer — the
     four streams write disjoint dirs, so the concurrency adds no new
     commit race."""
-    dirs = {
-        "admitted": os.path.join(work_dir, "admitted"),
-        "clean": os.path.join(work_dir, "clean"),
-        "quarantine": os.path.join(work_dir, "quarantine"),
-        "lsh_index": os.path.join(work_dir, "lsh_index"),
-        "ivfadc_index": os.path.join(work_dir, "ivfadc_index"),
-        "state": os.path.join(work_dir, "state"),
-    }
     admit_schema = schema  # explicit only for a still-empty landing dir
     if schema is None:
         # the BATCH-VISIBLE schema (nano → TimestampType) — what stage
         # 1's normalized frames carry and the intermediate parquet is
         # physically written with; stage 1 itself keeps inference so
-        # raw nano landing files read correctly (r14 review)
+        # raw nano landing files read correctly
         from .sources import read_parquet_normalized
 
         schema = read_parquet_normalized(spark, landing_dir).schema
+    dirs, stages = _corpus_stages(
+        spark,
+        landing_dir=landing_dir,
+        work_dir=work_dir,
+        benchmark_emb_dir=benchmark_emb_dir,
+        cents=cents,
+        books=books,
+        text_col=text_col,
+        id_col=id_col,
+        vec_col=vec_col,
+        order_col=order_col,
+        jaccard_threshold=jaccard_threshold,
+        threshold=threshold,
+        n_buckets=n_buckets,
+        keep_generations=keep_generations,
+        retention_sec=retention_sec,
+        files_per_bucket=files_per_bucket,
+        admit_schema=admit_schema,
+        schema=schema,
+        processing_time=processing_time,
+    )
     # the sources must EXIST before their streams start; the
     # intermediate schemas equal the landing schema (both stages
     # preserve every landed column)
-    os.makedirs(landing_dir, exist_ok=True)
-    os.makedirs(dirs["admitted"], exist_ok=True)
-    os.makedirs(dirs["clean"], exist_ok=True)
-
-    def ck(name: str) -> str:
-        return os.path.join(work_dir, "ck", name)
-
-    queries = [
-        start_near_dedup_stream(
-            spark,
-            landing_dir=landing_dir,
-            index_dir=dirs["lsh_index"],
-            out_dir=dirs["admitted"],
-            checkpoint_dir=ck("admit"),
-            content_col=text_col,
-            id_col=id_col,
-            jaccard_threshold=jaccard_threshold,
-            once=False,
-            processing_time=processing_time,
-            source_schema=admit_schema,
-            guard_schema_drift=guard_schema_drift,
-        ),
-        start_decontaminate_stream(
-            spark,
-            landing_dir=dirs["admitted"],
-            benchmark_emb_dir=benchmark_emb_dir,
-            out_dir=dirs["clean"],
-            checkpoint_dir=ck("decontaminate"),
-            quarantine_dir=dirs["quarantine"],
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            once=False,
-            processing_time=processing_time,
-            source_schema=schema,
-            guard_schema_drift=guard_schema_drift,
-        ),
-        start_ivfadc_index_stream(
-            spark,
-            landing_dir=dirs["clean"],
-            index_dir=dirs["ivfadc_index"],
-            cents=cents,
-            books=books,
-            checkpoint_dir=ck("index"),
-            id_col=id_col,
-            vec_col=vec_col,
-            once=False,
-            processing_time=processing_time,
-            source_schema=schema,
-            guard_schema_drift=guard_schema_drift,
-        ),
-        start_current_state_stream(
-            spark,
-            landing_dir=dirs["clean"],
-            state_dir=dirs["state"],
-            checkpoint_dir=ck("state"),
-            key_cols=id_col,
-            order_col=order_col,
-            n_buckets=n_buckets,
-            once=False,
-            processing_time=processing_time,
-            keep_generations=keep_generations,
-            retention_sec=retention_sec,
-            source_schema=schema,
-            guard_schema_drift=guard_schema_drift,
-            files_per_bucket=files_per_bucket,
-        ),
-    ]
-    return dirs, queries
+    for d in (landing_dir, dirs["admitted"], dirs["clean"]):
+        os.makedirs(d, exist_ok=True)
+    return dirs, [start() for start in stages.values()]
 
 
 def stop_corpus_stream_pipeline(queries: list[StreamingQuery]) -> None:
@@ -2028,7 +2014,6 @@ def start_ivfadc_index_stream(
     processing_time: str = "20 seconds",
     max_files_per_trigger: int | None = None,
     source_schema=None,
-    guard_schema_drift: bool = False,
 ) -> StreamingQuery:
     """W24 — streaming IVFADC index maintenance: W23's frozen-codebook
     discipline applied to the two-level index. Every micro-batch is
@@ -2046,31 +2031,24 @@ def start_ivfadc_index_stream(
     vec_id at search time (knn_ivfadc_codes' dedup flag). O(batch) per
     trigger, no shuffle, no state. ``source_schema`` lets the stream
     start on a still-empty landing dir (the live composed pipeline's
-    downstream stages, W28)."""
+    downstream stages, W28); a landed file with fields that schema
+    lacks fails the stream before any write (:func:`_start_file_stream`)."""
     from .ext.similarity import ivfadc_encode
 
-    src = _streaming_source(
-        spark, landing_dir, max_files_per_trigger, schema=source_schema
-    )
-    drift_guard = (
-        make_schema_drift_guard(landing_dir, src.schema)
-        if guard_schema_drift
-        else None
-    )
-
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        if drift_guard is not None:
-            drift_guard()  # raises BEFORE any write — batch replays
         if batch_df.isEmpty():
             return
         enc = ivfadc_encode(batch_df, cents, books, id_col, vec_col)
         enc.write.mode("append").partitionBy("cell").parquet(index_dir)
 
-    writer = src.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_file_stream(
+        spark,
+        query_name="ivfadc_index",
+        landing_dir=landing_dir,
+        checkpoint_dir=checkpoint_dir,
+        batch_fn=batch_fn,
+        once=once,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
+        source_schema=source_schema,
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

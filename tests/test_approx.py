@@ -270,6 +270,25 @@ def test_pq_codes_compress_and_recall_is_pinned(spark):
     assert recall_rerank > recall_adc
 
 
+def test_semdedup_build_infers_its_pandas_udf_type(spark):
+    """The within-cell pair UDF carries full type hints, so building a
+    semdedup plan logs no "Cannot infer the eval type" warning."""
+    import warnings
+
+    from leftshove_spark.ext import similarity as S
+
+    corpus = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(4)]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        S.semdedup(corpus, n_centroids=2)
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
+
+
 def test_semdedup_admit_invariants(spark):
     """Incremental SemDeDup admission (the semantic W20): (a) the
     admitted set never contains a within-threshold pair — against the

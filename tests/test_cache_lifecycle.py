@@ -193,6 +193,42 @@ def test_pin_scope_holds_entry_pins_alive(spark, docs):
     assert _cache_empty(spark)
 
 
+def test_pin_held_outside_a_stream_survives_it(spark, docs, tmp_path):
+    """A stream batch releases only the pins it took: a frame pinned
+    before a near-dedup admission stream runs is still cached and
+    registered after the stream drains, while the LSH pins the batch
+    took are gone."""
+    import os
+
+    from leftshove_spark.streaming import start_near_dedup_stream
+
+    held = cache.pin(docs.select("doc_id"))
+    held.count()
+    landing = str(tmp_path / "landing")
+    out = str(tmp_path / "out")
+    os.makedirs(landing)
+    spark.createDataFrame(
+        [(i, " ".join(f"tok{i} word{j}" for j in range(12))) for i in range(4)],
+        "doc_id long, text string",
+    ).coalesce(1).write.mode("append").parquet(landing)
+    q = start_near_dedup_stream(
+        spark,
+        landing_dir=landing,
+        index_dir=str(tmp_path / "index"),
+        out_dir=out,
+        checkpoint_dir=str(tmp_path / "ck"),
+        once=True,
+    )
+    assert q.awaitTermination(120), "admission stream did not drain"
+    assert spark.read.parquet(out).count() == 4
+    try:
+        assert held.is_cached
+        assert any(p is held for p in cache._PINNED)
+        assert cache.pinned_count() == 1
+    finally:
+        cache.release_pins()
+
+
 class _FakeFrame:
     """Stands in for a DataFrame in the registry race: records only
     whether it is persisted."""

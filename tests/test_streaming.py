@@ -118,6 +118,53 @@ def test_transform_hook(spark, tmp_path):
     assert vals and all(v == v.upper() for v in vals)
 
 
+def test_capture_stream_fails_loudly_on_schema_drift(spark, tmp_path):
+    """A file landing with a column the capture stream's schema lacks
+    stops the stream before it writes: the sink keeps only the rows
+    captured before the drift, and the watermark does not move. The
+    stream runs continuously so its schema is inferred while only the
+    narrow file has landed."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    landing = str(tmp_path / "landing")
+    sink = str(tmp_path / "sink")
+    os.makedirs(landing)
+    spark.createDataFrame(
+        [(1, datetime(2024, 1, 1)), (2, datetime(2024, 1, 2))],
+        "id long, ts timestamp",
+    ).coalesce(1).write.mode("append").parquet(landing)
+    state = StateStore()
+    state.upsert(TableState(name="drift", dsn="0", nms_column="ts"))
+    q = start_stream_capture(
+        spark,
+        name="drift",
+        landing_dir=landing,
+        sink_path=sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        nms_col="ts",
+        state=state,
+        once=False,
+        processing_time="1 second",
+    )
+    try:
+        q.processAllAvailable()
+        assert spark.read.parquet(sink).count() == 2
+        nms = state.get("drift", "0").nms
+        assert nms == datetime(2024, 1, 2)
+
+        spark.createDataFrame(
+            [(3, datetime(2024, 1, 3), "en")], "id long, ts timestamp, lang string"
+        ).coalesce(1).write.mode("append").parquet(landing)
+        with pytest.raises(StreamingQueryException, match="schema drift.*lang"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert spark.read.parquet(sink).count() == 2
+    assert state.get("drift", "0").nms == nms
+
+
 def test_tumbling_window_stream_matches_batch(spark, tmp_path):
     """W7 streaming — daily tumbling counts via memory sink == batch."""
     ev = load_table(spark, SF0001, "events")
@@ -540,6 +587,57 @@ def test_current_state_stream_equals_batch_fold(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_current_state_stream_fails_loudly_on_schema_drift(spark, tmp_path):
+    """A standalone W26 stream guards its landing dir: after a first
+    batch, a file landing with a column the stream's schema lacks
+    fails the next run before any fold, so the table's committed
+    generation does not change."""
+    import os
+
+    from leftshove_spark import statestore
+    from leftshove_spark.streaming import (
+        current_state_table,
+        start_current_state_stream,
+    )
+
+    landing = str(tmp_path / "landing")
+    state = str(tmp_path / "cur")
+    os.makedirs(landing)
+    spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b")], "k long, v long, p string"
+    ).coalesce(1).write.mode("append").parquet(landing)
+    narrow = spark.read.parquet(landing).schema
+
+    def run():
+        return start_current_state_stream(
+            spark,
+            landing_dir=landing,
+            state_dir=state,
+            checkpoint_dir=str(tmp_path / "ck"),
+            key_cols="k",
+            order_col="v",
+            n_buckets=4,
+            once=True,
+            source_schema=narrow,
+        )
+
+    assert run().awaitTermination(120), "current-state stream did not drain"
+    gens = statestore.list_generations(state)
+    assert gens and current_state_table(spark, state).count() == 2
+
+    spark.createDataFrame(
+        [(3, 2, "c", "en")], "k long, v long, p string, lang string"
+    ).coalesce(1).write.mode("append").parquet(landing)
+    q = run()
+    try:
+        with pytest.raises(Exception, match="schema drift.*lang"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert statestore.list_generations(state) == gens
+    assert current_state_table(spark, state).count() == 2
 
 
 def test_maintain_current_state_map_payload(spark, tmp_path):
