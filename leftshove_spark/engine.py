@@ -850,12 +850,7 @@ class Engine:
                 "watermark": st.nms.isoformat() if st.nms else None,
                 "last_row_count": st.last_row_count,
                 "sink_path": self.sink_path(st),
-                "output_type": self.config.output_type,
-                "batch": {
-                    "count": self.config.batch_count,
-                    "bytes": self.config.batch_bytes,
-                    "period_secs": self.config.batch_period_secs,
-                },
+                "batch": {"count": self.config.batch_count},
                 "replication_buffer_secs": self.config.replication_buffer_secs,
                 "has_transform": st.name in self.transforms,
                 "sink_schema": st.sink_schema_json,

@@ -165,7 +165,9 @@ def q17_small_quantity_revenue(spark: SparkSession, sf: str) -> DataFrame:
     average is exact-int-sum ÷ count in IEEE double on both engines, so
     the 0.2·avg threshold is deterministic."""
     li = load_table(spark, sf, "lineitem")
-    pa = li.groupBy("l_partkey").agg(
+    # pa's key is renamed so the join predicate compares two distinct
+    # attributes, not l_partkey with itself
+    pa = li.groupBy(F.col("l_partkey").alias("pa_partkey")).agg(
         (F.sum(_cents("l_quantity")).cast("double") / F.count(F.lit(1))).alias(
             "avg_qty_c"
         )
@@ -173,7 +175,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf: str) -> DataFrame:
     p = load_table(spark, sf, "part").filter(F.col("p_brand") == "Brand#23")
     return (
         li.join(_maybe_broadcast(p, sf, "part"), li.l_partkey == p.p_partkey)
-        .join(pa, li.l_partkey == pa.l_partkey)
+        .join(pa, li.l_partkey == pa.pa_partkey)
         .filter(_cents("l_quantity") < 0.2 * F.col("avg_qty_c"))
         .agg(
             (F.sum(_cents("l_extendedprice")).cast("double") / 100.0 / 7.0).alias(

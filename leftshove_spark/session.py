@@ -82,27 +82,28 @@ class EngineConfig:
     Field ↔ reference mapping:
       replication_buffer_secs  ↔ PG_REPLICATION_BUFFER_SECS (sample.env:7)
       batch_count              ↔ BQ_BATCH_COUNT   (benthos.go:113-116)
-      batch_bytes              ↔ BQ_BATCH_BYTES   (benthos.go:117-120)
-      batch_period_secs        ↔ BQ_BATCH_PERIOD  (benthos.go:121-124)
       concurrent_streams       ↔ BENTHOS_CONCURRENT_STREAMS (cdc.go:115-118)
       munge_invalid_ts_to_null ↔ MUNGE_INVALID_TIMESTAMPS_TO_NULL (postgres.go:72-79)
       munge_invalid_ts_to_min  ↔ MUNGE_INVALID_TIMESTAMPS_TO_MIN  (postgres.go:80-85)
       munge_min_timestamp      ↔ MUNGE_MIN_TIMESTAMP (postgres.go:72-101; default epoch)
       max_step_hours           ↔ 336h max watermark advance (cdc.go:70, 80)
       backlog_batches          ↔ 8×batch catch-up trigger (cdc.go:69)
+
+    BQ_BATCH_BYTES and BQ_BATCH_PERIOD (benthos.go:117-124) have no
+    analog: they size and time the reference's BigQuery load batches,
+    and every capture here is one Spark write per window, so no field
+    would change anything. Neither has OUTPUT_TYPE (benthos.go:85-105):
+    the sink is always parquet.
     """
 
     replication_buffer_secs: int = 180
     batch_count: int = 4096
-    batch_bytes: int = 40_000_000
-    batch_period_secs: int = 20
     concurrent_streams: int = 1
     munge_invalid_ts_to_null: bool = False
     munge_invalid_ts_to_min: bool = False
     munge_min_timestamp: str = "1970-01-01 00:00:00"
     max_step_hours: int = 336
     backlog_batches: int = 8
-    output_type: str = "parquet"  # reference: BQ | FILE (benthos.go:85-105)
     # D7: apply additive schema drift to sinks (ADD-COLUMN analog,
     # bigquery.go:366-389). False = reference default (log drift only).
     evolve_schema: bool = False

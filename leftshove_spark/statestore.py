@@ -24,7 +24,14 @@ A manifest is the complete file listing of one table generation::
 
     {"gen": 7, "partition_col": "__bucket",
      "files": {"3": ["__bucket=3/g0000000007-part-...parquet"], ...},
-     "garbage": ["__bucket=3/g0000000004-part-...parquet"]}
+     "garbage": ["__bucket=3/g0000000004-part-...parquet"],
+     "schema": {"type": "struct", "fields": [...]}}
+
+``schema`` is the read schema of the data columns (partition column
+excluded), recorded by every commit and widened across evolutions at
+every depth (a field added inside a struct merges in); it
+is the store's only schema source — no read infers one from parquet
+footers, and a manifest without it is refused.
 
 Commit protocol (:func:`commit_fold`) — single writer, lock-free readers:
 
@@ -285,7 +292,6 @@ def read_changed(
     spark: SparkSession,
     state_dir: str,
     since_gen: int,
-    merge_schema: bool = True,
     to_gen: int | None = None,
 ) -> DataFrame:
     """The rows of every partition :func:`changed_partitions` reports —
@@ -307,8 +313,8 @@ def read_changed(
     and the scanned files resolve against the SAME retained
     generation. ``to_gen=None`` keeps the convenience form for
     one-shot reads where the caller does no generation bookkeeping —
-    and since r14 (ADVICE r13) even that form snapshots the current
-    generation ONCE internally, so a fold committing mid-call can
+    and even that form snapshots the current generation ONCE
+    internally, so a fold committing mid-call can
     never tear the partition list from the scanned files: the
     difference from passing ``to_gen`` yourself is only WHOSE
     bookkeeping records the generation, never consistency."""
@@ -324,7 +330,6 @@ def read_changed(
         partition_values=changed_partitions(
             state_dir, since_gen, to_gen=to_gen
         ),
-        merge_schema=merge_schema,
         generation=to_gen,
     )
 
@@ -758,19 +763,14 @@ def compact_partitions(
     Layout inside a rewritten partition is a deterministic content
     salt — ``pmod(xxhash64(data columns), n)`` — so the output file
     count is reproducible and independent of the input task layout.
-    Mixed-schema selections union with missing columns NULL-padded, so
-    compacting an old narrow partition beside an evolved one widens it
-    to the selection's merged schema — exactly what any read through
+    The selection is read at the manifest's recorded schema, so an old
+    narrow partition compacted beside an evolved one is rewritten at
+    that schema (missing columns NULL) — exactly what any read through
     :func:`read_state` already returns for it.
     Returns the executed plan (``{partition_value: target_file_count}``;
     empty = nothing qualified, no commit made). Raises
     :class:`ConcurrentCommitError` like any fold if a writer races the
-    compaction; the store is left intact. The fused plan grows with the
-    selection (one pruned scan branch per partition) — compact the
-    worst offenders per call (``min_files`` / ``partitions``) rather
-    than thousands at once."""
-    import functools
-
+    compaction; the store is left intact."""
     plan = compaction_plan(state_dir, target_file_bytes, min_files, partitions)
     if not plan:
         return {}
@@ -779,14 +779,19 @@ def compact_partitions(
     touched = sorted(plan)
     total = sum(plan.values())
     if pcol:
-        # Exact group→task routing, keyed on the MANIFEST's file lists,
-        # never on partition-VALUE equality: directory names are
-        # path-escaped (':' → '%3A') and NULL is a sentinel dir, so a
-        # join on the decoded column vs the manifest key would silently
-        # drop those partitions' rows — and commit_fold would then
-        # DELETE them (r15 review). Each selected partition is read
-        # pruned-by-manifest and tagged with literal (base, n); the
-        # union is the same scan set as one multi-partition read.
+        # Exact group→task routing. The selection is ONE pruned read
+        # with the partition column typed as an explicit STRING — never
+        # let discovery TYPE it (p=01 alone infers int 1; rewriting
+        # through partitionBy would then re-render it canonically and
+        # silently re-key the partition). Rows get their (base, n) by a
+        # null-safe broadcast join against the DECODED manifest key,
+        # never the raw one: directory names are path-escaped (':' →
+        # '%3A') and NULL is a sentinel dir (→ NULL string →
+        # eqNullSafe), so matching the raw key would drop those
+        # partitions' rows and commit_fold would then DELETE them. Every
+        # manifest key is a directory name Spark's own partitionBy
+        # wrote, and its escaping ('%' itself → '%25', uppercase hex)
+        # decodes injectively, so no two keys share a route.
         #
         # Each row's global ordinal = base + a deterministic content
         # salt pmod(xxhash64(data cols), n). A plain hash repartition
@@ -798,105 +803,34 @@ def compact_partitions(
         # residue mod ``total``: repartition then puts every group in
         # its own task, landing exactly the planned file count at
         # ~target_file_bytes each.
+        from pyspark.sql.types import StringType, StructField
+
         from .schema import type_contains_map
 
-        # ONE schema inference for the whole selection (r16, guide §1.2
-        # driver-side work): the per-partition pruned reads below each
-        # paid their own mergeSchema footer pass — 16 selected
-        # partitions cost ~2.4 s of pure driver plan-building at bench
-        # scale. Inferring over the union selection once and fanning the
-        # schema out is value-identical (it IS the schema the union of
-        # per-partition mergeSchema reads resolves to) and leaves one
-        # footer pass regardless of selection width.
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        # The manifest-recorded schema (r16) IS the selection's resolved
-        # data-column schema — when present, building a read just to ask
-        # for .schema would pay a distributed leaf-file-listing job over
-        # the full selection (and, pre-recording, a footer pass too) for
-        # metadata the commit pointer already holds.
-        if m.get("schema") is not None:
-            sel_fields = list(StructType.fromJson(m["schema"]).fields)
-        else:
-            sel_fields = [
-                f
-                for f in read_state(
-                    spark,
-                    state_dir,
-                    partition_values=touched,
-                    generation=gen,
-                    _manifest=m,
-                ).schema.fields
-                if f.name != pcol
-            ]
-        # Partition identity discipline (ADVICE r15): never let discovery
-        # TYPE the partition column (p=01 alone infers int 1; rewriting
-        # through partitionBy would then re-render it canonically and
-        # silently re-key the partition). ADVICE's first remedy — read
-        # the column with an explicit STRING type — keeps the dir-name ↔
-        # value mapping bijective for every canonical (Spark-escaped)
-        # directory, so the whole selection can be ONE pruned read (r16,
-        # guide §1.2: the former per-partition literal loop built 16
-        # separate driver read plans, ~1.2 s of pure plan building at
-        # bench scale) with (base, n) routing attached by a null-safe
-        # broadcast join on the decoded key. NULL rides the sentinel dir
-        # → NULL string → eqNullSafe. Injectivity of the decode over the
-        # touched set is asserted in Python below; a NON-canonical
-        # hand-made dir pair that decodes to one string ('%3A' beside
-        # '%3a') falls back to the per-partition literal reads, which
-        # key rows by the pruned scan itself and cannot collide.
-        decoded = [_decode_partition_value(v) for v in touched]
-        if len(set(decoded)) == len(touched):
-            str_schema = StructType(
-                list(sel_fields) + [StructField(pcol, StringType())]
-            )
-            df = read_state(
-                spark,
-                state_dir,
-                partition_values=touched,
-                generation=gen,
-                _manifest=m,
-                _schema=str_schema,
-            )
-            route_rows, base = [], 0
-            for v, d in zip(touched, decoded):
-                route_rows.append((d, base, int(plan[v])))
-                base += plan[v]
-            rdf = spark.createDataFrame(
-                route_rows, "__cp_k string, __cp_base bigint, __cp_n bigint"
-            )
-            df = df.join(
-                F.broadcast(rdf),
-                F.col(pcol).eqNullSafe(F.col("__cp_k")),
-                "inner",
-            ).drop("__cp_k")
-        else:
-            # fallback: per-partition pruned reads, partition key carried
-            # as a LITERAL of the decoded manifest key (r15 shape)
-            parts, base = [], 0
-            for v in touched:
-                p = read_state(
-                    spark,
-                    state_dir,
-                    partition_values=[v],
-                    generation=gen,
-                    _manifest=m,
-                    # data columns only: the reader appends the inferred
-                    # partition column, which the next line drops anyway
-                    _schema=StructType(list(sel_fields)),
-                )
-                p = p.drop(pcol).withColumn(
-                    pcol, F.lit(_decode_partition_value(v)).cast("string")
-                )
-                parts.append(
-                    p.withColumn(
-                        "__cp_base", F.lit(base).cast("bigint")
-                    ).withColumn("__cp_n", F.lit(int(plan[v])).cast("bigint"))
-                )
-                base += plan[v]
-            df = functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
+        str_schema = StructType(
+            list(manifest_schema(state_dir, m).fields)
+            + [StructField(pcol, StringType())]
+        )
+        df = read_state(
+            spark,
+            state_dir,
+            partition_values=touched,
+            generation=gen,
+            _manifest=m,
+            _schema=str_schema,
+        )
+        route_rows, base = [], 0
+        for v in touched:
+            route_rows.append((_decode_partition_value(v), base, int(plan[v])))
+            base += plan[v]
+        rdf = spark.createDataFrame(
+            route_rows, "__cp_k string, __cp_base bigint, __cp_n bigint"
+        )
+        df = df.join(
+            F.broadcast(rdf),
+            F.col(pcol).eqNullSafe(F.col("__cp_k")),
+            "inner",
+        ).drop("__cp_k")
         tids = _injective_task_ids(spark, total)
         odf = spark.createDataFrame(
             list(enumerate(tids)), "__cp_ord int, __cp_tid long"
@@ -928,7 +862,7 @@ def compact_partitions(
         )
     else:
         df = read_state(
-            spark, state_dir, partition_values=touched, generation=gen
+            spark, state_dir, partition_values=touched, generation=gen, _manifest=m
         ).repartition(total)
     if _pre_commit_hook is not None:
         _pre_commit_hook()  # test seam: interpose a racing fold here
@@ -942,8 +876,8 @@ def compact_partitions(
         retention_sec=retention_sec,
         # the read above pinned generation `gen`: committing over a
         # LATER base would silently revert a racing fold's touched
-        # partitions to their pinned-gen contents (ADVICE r15 lost-
-        # update window) — commit_fold re-checks the base and raises
+        # partitions to their pinned-gen contents (a lost update) —
+        # commit_fold re-checks the base and raises
         # ConcurrentCommitError instead, store intact
         expected_base_gen=gen,
         _maintenance=True,
@@ -973,16 +907,21 @@ def commit_fold(
     racing writer violates the single-writer contract. See the module
     docstring for the protocol.
 
-    ``expected_base_gen`` pins the commit to a read snapshot (ADVICE
-    r15): a caller that derived ``out`` from generation G passes G, and
-    the commit then lands as EXACTLY G+1 or raises — a racer committing
+    ``expected_base_gen`` pins the commit to a read snapshot: a caller
+    that derived ``out`` from generation G passes G, and the commit
+    then lands as EXACTLY G+1 or raises — a racer committing
     G+1 first is caught either by the pre-write base check here or by
     the manifest link's generation CAS, never silently overwritten with
     data pinned to the older generation. Pass 0 to assert the store has
     never committed. ``_maintenance`` stamps the manifest as a
     contents-preserving rewrite (compaction) — the marker
     :func:`commit_fold_retrying` consults to decide a lost race is safe
-    to retry over."""
+    to retry over.
+
+    Raises ValueError — before anything is written, store and
+    generation unchanged — when ``out``'s data columns retype a
+    recorded column non-wideningly (``v string`` then ``v long``): no
+    single read schema could open both generations' files."""
     cur = load_manifest(state_dir)
     if cur is not None and cur.get("partition_col") != partition_col:
         raise ValueError(
@@ -999,8 +938,21 @@ def commit_fold(
                 "commit; nothing was written"
             )
     gen = (cur["gen"] + 1) if cur else 1
+    # the read schema this commit records, checked BEFORE any write:
+    # out's data columns, widened against the recorded schema (relaxed
+    # too: a store may have recorded nested non-null flags)
+    written = _relax_nullability(
+        StructType([f for f in out.schema.fields if f.name != partition_col])
+    )
+    prev = _relax_nullability(manifest_schema(state_dir, cur)) if cur else None
+    try:
+        widened = _widen_schema(prev, written) if prev else written
+    except ValueError as e:
+        raise ValueError(
+            f"state store {state_dir}: {e}; nothing was written"
+        ) from None
     data = os.path.join(state_dir, _DATA_DIR)
-    # a UNIQUE scratch dir per commit (r16 review): the sanctioned
+    # a UNIQUE scratch dir per commit: the sanctioned
     # concurrent writers — a maintenance compaction racing a live fold
     # — would otherwise share (and rmtree / cross-read) one
     # .fold_tmp, failing the fold with FileNotFoundException instead
@@ -1040,7 +992,7 @@ def commit_fold(
             # scratch-write stamp, so a fold whose Spark write took
             # longer than ORPHAN_SWEEP_GRACE_SEC would move files that
             # already look old — and a racing loser's sweep would
-            # delete them as debris despite the grace (r13 review).
+            # delete them as debris despite the grace.
             # Age must measure time-since-entry-into-data/, not
             # time-since-write.
             os.utime(dst, None)
@@ -1058,27 +1010,23 @@ def commit_fold(
             files[v] = rels
         else:
             files.pop(v, None)
+    # a commit that wrote no files keeps the recorded schema — except
+    # the first, which has none to keep
+    schema = widened if prev is None or any(new_files.values()) else prev
     manifest = {
         "gen": gen,
         "partition_col": partition_col,
         "files": files,
         "garbage": garbage,
         "committed_at": time.time(),
+        "schema": schema.jsonValue(),
     }
-    # record the read schema in the commit pointer (r16, guide §6):
-    # read_state then skips its per-read footer-inference job entirely.
-    # out.schema is free (no job) and IS what these files read back as.
-    rec = _recorded_read_schema(
-        cur, out.schema, partition_col, any(new_files.values())
-    )
-    if rec is not None:
-        manifest["schema"] = rec.jsonValue()
     if _maintenance:
         manifest["maintenance"] = True
     # pre-flip orphan sweep: files a CRASHED commit moved into the
     # touched partitions but never referenced, exempting the files this
     # commit just moved (bounded to this commit's partitions). Swept
-    # over the UNION of touched and written partitions (ADVICE r12): a
+    # over the UNION of touched and written partitions: a
     # touched partition whose fold output is empty — a pure deletion —
     # appears in touched_values but not new_files, and a crashed prior
     # attempt's orphans there must still be removed.
@@ -1225,118 +1173,98 @@ def maintain_store(
     return out
 
 
-def _nullable_tops(schema: StructType) -> StructType:
-    """Top-level fields forced nullable (metadata dropped) — the shape a
-    parquet READ reports regardless of what the writing DataFrame
-    declared (file-based relations surface every top-level column as
-    nullable; NESTED nullability round-trips through parquet exactly,
-    so it is left untouched)."""
-    from pyspark.sql.types import StructField
+def _relax_nullability(dt):
+    """``dt`` with every nullability flag true at every depth (struct
+    fields, array elements, map values) and field metadata dropped —
+    the form a manifest records. Reading non-null data as nullable is
+    always safe, and a parquet read reports top-level columns nullable
+    whatever the writer declared, so two writes that differ only in
+    declared nullability (``array<bigint>`` with and without
+    ``containsNull``) never count as a retype."""
+    from pyspark.sql.types import ArrayType, MapType, StructField
 
-    return StructType(
-        [StructField(f.name, f.dataType, True) for f in schema.fields]
-    )
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _relax_nullability(f.dataType), True)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_relax_nullability(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _relax_nullability(dt.keyType),
+            _relax_nullability(dt.valueType),
+            True,
+        )
+    return dt
 
 
-def _widen_structs(prev: StructType, new: StructType) -> StructType:
-    """Merge two recorded read schemas the way a mergeSchema read (or
-    its widening fallback) resolves them: matching columns keep the
-    WIDER type (schema.is_widening's lossless ladder), prev's column
-    order is preserved, new-only columns append. Raises ValueError on a
-    non-widening retype — callers fall back to recording no schema, so
-    reads of such stores keep today's footer-inference behavior."""
-    from pyspark.sql.types import StructField
+def _widen_schema(prev, new, path: str = ""):
+    """The read schema that opens files written at both ``prev`` and
+    ``new``, merged at every depth: struct fields match by name (prev's
+    order kept, new-only fields appended — a field added inside a
+    struct surfaces as NULL in older files), array elements and map
+    keys and values merge the same way, and a leaf keeps the WIDER type
+    (schema.is_widening's lossless ladder). Raises ValueError naming
+    the (dotted) column on a non-widening retype."""
+    from pyspark.sql.types import ArrayType, MapType, StructField
 
     from .schema import widen_types
 
-    by_name = {f.name: f for f in new.fields}
-    out = []
-    for f in prev.fields:
-        nf = by_name.pop(f.name, None)
-        if nf is None or nf.dataType == f.dataType:
-            out.append(f)
-        else:
-            out.append(StructField(f.name, widen_types(f.dataType, nf.dataType), True))
-    out.extend(by_name[f.name] for f in new.fields if f.name in by_name)
-    return StructType(out)
-
-
-def _recorded_read_schema(
-    cur: dict | None,
-    out_schema: StructType,
-    partition_col: str | None,
-    wrote_any: bool,
-) -> StructType | None:
-    """The DATA-column read schema (partition column excluded) to record
-    in the next manifest — the §6 manifest-metadata move: reads resolve
-    their schema from the commit pointer instead of paying a parquet
-    footer-inference job per :func:`read_state` (one job per fold read,
-    per consumer scan, per compaction selection — at 100 TB a footer
-    pass over every live file, per read). The recorded schema is
-    exactly what the mergeSchema read it replaces would resolve: this
-    commit's written schema (top-level nullable like any file read)
-    widened against the previous recorded schema. Returns None — and
-    the manifest then carries no schema, keeping footer-inference reads
-    — for legacy manifests that never recorded one (upgrading them
-    would need a full footer pass here) and for non-widening retypes
-    (where mergeSchema itself would raise; behavior preserved)."""
-    written = (
-        _nullable_tops(
-            StructType(
-                [f for f in out_schema.fields if f.name != partition_col]
-            )
-        )
-        if wrote_any
-        else None
-    )
-    if cur is None:
-        return written
-    prev_json = cur.get("schema")
-    if prev_json is None:
-        return None
-    prev = StructType.fromJson(prev_json)
-    if written is None:
+    if prev == new:
         return prev
+    if isinstance(prev, StructType) and isinstance(new, StructType):
+        by_name = {f.name: f for f in new.fields}
+        out = []
+        for f in prev.fields:
+            nf = by_name.pop(f.name, None)
+            dt = f.dataType if nf is None else _widen_schema(
+                f.dataType, nf.dataType, f"{path}{f.name}."
+            )
+            out.append(StructField(f.name, dt, True))
+        out.extend(by_name[f.name] for f in new.fields if f.name in by_name)
+        return StructType(out)
+    if isinstance(prev, ArrayType) and isinstance(new, ArrayType):
+        return ArrayType(
+            _widen_schema(prev.elementType, new.elementType, f"{path}element."),
+            True,
+        )
+    if isinstance(prev, MapType) and isinstance(new, MapType):
+        return MapType(
+            _widen_schema(prev.keyType, new.keyType, f"{path}key."),
+            _widen_schema(prev.valueType, new.valueType, f"{path}value."),
+            True,
+        )
     try:
-        return _widen_structs(prev, written)
+        return widen_types(prev, new)
     except ValueError:
-        return None
+        raise ValueError(
+            f"column {path.rstrip('.')} is recorded as "
+            f"{prev.simpleString()} and cannot widen to "
+            f"{new.simpleString()}"
+        ) from None
 
 
-def _widened_schema_of_files(paths: list[str]):
-    """Widest Spark schema over the given parquet footers — the
-    explicit-schema fallback when mergeSchema refuses a pre-/post-
-    widening mix (schema.widened_live_schema, scoped to a file list)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from .schema import is_widening
-
-    merged: dict = {}
-    order: list[str] = []
-    for p in sorted(paths):
-        sch = from_arrow_schema(pq.read_schema(p))
-        for fld in sch.fields:
-            if fld.name not in merged:
-                merged[fld.name] = fld.dataType
-                order.append(fld.name)
-            elif merged[fld.name] != fld.dataType:
-                if is_widening(merged[fld.name], fld.dataType):
-                    merged[fld.name] = fld.dataType
-                elif not is_widening(fld.dataType, merged[fld.name]):
-                    raise ValueError(
-                        f"state files disagree non-wideningly on column "
-                        f"{fld.name}: {merged[fld.name]} vs {fld.dataType}"
-                    )
-    return T.StructType([T.StructField(n, merged[n], True) for n in order])
+def manifest_schema(state_dir: str, m: dict) -> StructType:
+    """The read schema of manifest ``m``'s data columns (partition
+    column excluded) — the store's only schema source. Raises
+    ValueError naming ``state_dir`` for a manifest that records none:
+    such a store predates schema recording and is not readable."""
+    if m.get("schema") is None:
+        raise ValueError(
+            f"{state_dir}: generation {m['gen']} records no read schema; "
+            "the store predates schema recording and must be rebuilt "
+            "(delete the state dir and re-run the fold)"
+        )
+    return StructType.fromJson(m["schema"])
 
 
 def read_state(
     spark: SparkSession,
     state_dir: str,
     partition_values: list[str] | None = None,
-    merge_schema: bool = True,
     generation: int | None = None,
     _manifest: dict | None = None,
     _schema=None,
@@ -1346,72 +1274,43 @@ def read_state(
     nothing this read sees (its files survive one further generation).
     ``partition_values`` prunes to the named partitions *before Spark
     ever lists a file* — stronger than partition-filter pruning: the
-    scan's file list IS the pruned set. ``merge_schema`` tolerates
-    schema-evolved stores (added columns surface as NULL in old files;
-    widened types fall back to an explicit widest-footer schema).
-    A directory with no manifest is not a store: the read raises
-    ValueError naming it.
+    scan's file list IS the pruned set. The read schema is the one the
+    manifest records (:func:`manifest_schema`), so no read infers it
+    from parquet footers and every selection reads at the same shape:
+    columns added after a file was written surface as NULL in it, and
+    widened types up-cast. A directory with no manifest, or whose
+    manifest records no schema, is not a readable store: the read
+    raises ValueError naming it.
 
     ``generation`` pins the read to a RETAINED older generation (time
     travel for audits/debug: 'what did the state look like before that
     fold?'); the readable window is :func:`list_generations` — raises
     KeyError past it (widen ``keep_generations``/``retention_sec`` on
     the maintainer for a longer window)."""
-    # ``_manifest`` lets per-partition callers (sync_state,
-    # compact_partitions) reuse their already-pinned manifest instead
-    # of re-parsing the JSON once per partition.
+    # ``_manifest`` lets callers reuse their already-pinned manifest;
+    # ``_schema`` overrides the recorded schema (compaction reads the
+    # partition column as a string)
     m = _manifest if _manifest is not None else load_manifest(state_dir, generation)
     if m is None:
         raise ValueError(f"{state_dir} has no committed state manifest")
+    schema = manifest_schema(state_dir, m) if _schema is None else _schema
     data = os.path.join(state_dir, _DATA_DIR)
     sel = m["files"]
     if partition_values is not None:
         want = {str(v) for v in partition_values}
         sel = {v: rels for v, rels in sel.items() if v in want}
     paths = [os.path.join(data, rel) for rels in sel.values() for rel in rels]
+    reader = spark.read.schema(schema)
+    if m["partition_col"]:
+        reader = reader.option("basePath", data)
     if not paths:
         # empty selection (or empty table): read ONE committed file
         # (limit 0) so callers get a well-typed empty relation with the
         # partition column's true derived type
-        all_paths = [
-            os.path.join(data, rel)
-            for rels in m["files"].values()
-            for rel in rels
-        ]
-        if not all_paths:
+        first = next((rels[0] for rels in m["files"].values() if rels), None)
+        if first is None:
             raise ValueError(f"state store {state_dir} holds no data")
-        reader = spark.read
-        if m["partition_col"]:
-            reader = reader.option("basePath", data)
-        return reader.parquet(all_paths[0]).limit(0)
-    reader = spark.read
-    if m["partition_col"]:
-        reader = reader.option("basePath", data)
-    if _schema is None and merge_schema and m.get("schema") is not None:
-        # manifest-recorded schema (r16, guide §6): the commit pointer
-        # already carries exactly what a mergeSchema footer pass over
-        # this generation's live files resolves — data columns only,
-        # widened across evolutions at each commit; the partition
-        # column is appended by directory inference either way. Skips
-        # the per-read footer job (one Spark job per read_state call;
-        # at 100 TB, a footer pass over every live file, per read).
-        _schema = StructType.fromJson(m["schema"])
-    if _schema is not None:
-        # caller-supplied schema (r16 optimization): skips the driver's
-        # per-reader footer inference entirely — per-partition callers
-        # (compact_partitions) infer ONCE over the full selection and
-        # fan that schema out to every pruned branch; the value-level
-        # result is identical to the mergeSchema read that produced it
-        return reader.schema(_schema).parquet(*paths)
-    if merge_schema:
-        try:
-            return reader.option("mergeSchema", "true").parquet(*paths)
-        except Exception as e:
-            if "CANNOT_MERGE_SCHEMAS" not in str(e):
-                raise
-            return reader.schema(_widened_schema_of_files(paths)).parquet(
-                *paths
-            )
+        return reader.parquet(os.path.join(data, first)).limit(0)
     return reader.parquet(*paths)
 
 
@@ -1484,14 +1383,14 @@ def sync_state(
     last_gen: int | None = None,
 ) -> int:
     """Bring a plain-parquet REPLICA of a manifest state store up to the
-    store's current generation — the change-feed CONSUMER helper
-    (VERDICT r13 next #1): incremental when the feed window allows,
-    full re-clone when it doesn't, with no retention-protocol
-    knowledge required of the caller. Returns the generation synced
-    to; the same value is persisted in the replica (``_SYNC_GEN``), so
-    the normal loop is just ``sync_state(spark, state_dir, replica)``
-    per maintenance wave — ``last_gen`` overrides the marker for
-    callers doing their own generation bookkeeping.
+    store's current generation — the change-feed CONSUMER helper:
+    incremental when the feed window allows, full re-clone when it
+    doesn't, with no retention-protocol knowledge required of the
+    caller. Returns the generation synced to; the same value is
+    persisted in the replica (``_SYNC_GEN``), so the normal loop is
+    just ``sync_state(spark, state_dir, replica)`` per maintenance
+    wave — ``last_gen`` overrides the marker for callers doing their
+    own generation bookkeeping.
 
     Protocol (the :func:`read_changed` pinned-sync protocol, packaged):
 
@@ -1515,14 +1414,14 @@ def sync_state(
        one further generation) → the sync completes as a CONSISTENT
        snapshot of the pinned generation and the next sync, unable to
        diff against the lapsed marker, full-resyncs. Schema drift is
-       handled per partition against the one schema the replica was
-       uniformly written with (``_SYNC_SCHEMA``) — a NARROWER incoming
-       partition (routine in a long-evolved store) is NULL-padded to
-       that shape and stays incremental, while new columns / changed
-       types (the store evolved wider) force a full re-clone at the
-       store's current merged schema, because a mixed-schema replica
-       makes a plain ``spark.read.parquet(replica)`` silently drop
-       columns the sampled footer lacks;
+       one comparison: the manifest's recorded schema against the one
+       the replica was uniformly written with (``_SYNC_SCHEMA``).
+       Equal → incremental, and every partition read returns that
+       shape (a narrow partition of a long-evolved store comes back
+       NULL-padded); different (the store evolved) or missing → a
+       full re-clone at the store's schema, because a mixed-schema
+       replica makes a plain ``spark.read.parquet(replica)`` silently
+       drop columns the sampled footer lacks;
     4. only after every partition landed, atomically advance the
        replica's marker. A crash anywhere re-syncs from the OLD marker
        next call — partition replacement is idempotent, so the replica
@@ -1551,8 +1450,7 @@ def sync_state(
         # message must reference state_dir, so a replica-side
         # FileNotFoundError (rewrite_dir_staged against a missing or
         # misconfigured replica path) surfaces on its FIRST occurrence
-        # instead of being silently retried as full re-clones
-        # (ADVICE r14).
+        # instead of being silently retried as full re-clones.
         if isinstance(e, KeyError):
             return True
         s = str(e)
@@ -1563,7 +1461,7 @@ def sync_state(
         ):
             return False
         # path-boundary match on the RESOLVED source path, not a raw
-        # substring (r15 review): '/a/state' is a substring of
+        # substring: '/a/state' is a substring of
         # '/a/state_replica', and a relative 'state' matches inside
         # 'replica_state/...' — both would re-mask replica-side errors
         # as retention lapses. A hit must start at a path boundary and
@@ -1579,21 +1477,11 @@ def sync_state(
             i = s.find(ap, i + 1)
         return False
 
-    # the recorded schema covers DATA columns only — the partition
-    # column is dropped before every replica write, and its INFERRED
-    # type varies with the read's selection (a single-partition read of
-    # p=1 infers int where the full store infers string; a NULL-only
-    # read infers void), so including it would misread routine syncs as
-    # drift and silently degrade them to full re-clones forever (r15
-    # review, reproduced)
+    # both schemas cover DATA columns only: the partition column never
+    # reaches the replica's data files
     recorded = _recorded_schema(replica_dir)
     rec_key = _schema_key(recorded) if recorded is not None else None
-    rec_pairs = (
-        {(f.name, f.dataType.simpleString()) for f in recorded.fields}
-        if recorded is not None
-        else None
-    )
-    synced_schema = recorded
+    schema = None
     full_cloned = False
     for attempt in range(3):
         gens = _list_manifests(state_dir)
@@ -1603,13 +1491,10 @@ def sync_state(
             )
         gen = gens[-1]
         if last_gen == gen:
-            # already current — a genuine no-op (ADVICE r14: this case
-            # previously fell through to the full-clone branch because
-            # touched stayed None, rewriting the whole replica on every
-            # idle maintenance wave). Skip all data work; still refresh
-            # the marker below so callers relying on it converge.
-            # Trust a CALLER-supplied claim only when the replica
-            # actually holds a prior sync (ADVICE r15): against a
+            # already current — a genuine no-op: skip all data work,
+            # still refresh the marker below so callers relying on it
+            # converge. Trust a CALLER-supplied claim only when the
+            # replica actually holds a prior sync: against a
             # missing/wiped replica_dir the skip would still stamp a
             # _SYNC_GEN marker, minting an empty replica every later
             # marker-driven sync treats as current. An empty replica
@@ -1625,39 +1510,35 @@ def sync_state(
         try:
             m = load_manifest(state_dir, gen)
             pcol = m["partition_col"]
+            schema = manifest_schema(state_dir, m)
+            # incremental only when the replica was uniformly written
+            # at the store's current read schema: every partition read
+            # returns that shape, so the replica stays uniform and a
+            # plain spark.read.parquet(replica) never meets a footer
+            # lacking a column. A replica with no marker or an older
+            # schema (the store evolved) is re-cloned whole.
             touched: list[str] | None = None
-            if last_gen is not None and last_gen != gen:
+            if last_gen is not None and _schema_key(schema) == rec_key:
                 try:
                     touched = changed_partitions(
                         state_dir, last_gen, to_gen=gen
                     )
                 except KeyError:
                     touched = None  # retention lapsed → full re-clone
-            frames: dict[str, DataFrame] = {}
-            if touched is not None:
-                # Schema-drift guard (r15): an incremental swap writes
-                # each touched partition with that PARTITION's own
-                # schema — if the store evolved, the replica would end
-                # up with mixed per-partition schemas and a plain
-                # spark.read.parquet(replica) silently drops whichever
-                # columns the footer it samples lacks. The replica
-                # records the one schema it was uniformly written with:
-                #  - an incoming partition whose (name, type) pairs are
-                #    a SUBSET of the recorded schema (a narrow partition
-                #    of a long-evolved store — routine) is NULL-padded
-                #    to the recorded shape and stays incremental;
-                #  - new columns or changed types (the store evolved
-                #    WIDER than the replica) force a full re-clone at
-                #    the store's current merged schema, re-recording it;
-                #  - a pre-marker replica full-re-clones once.
-                # Checked per PARTITION on the same frames the swap
-                # writes (a merged check over all touched partitions
-                # would pass while individual partitions are narrower —
-                # the mixed-footer hole again — and would double the
-                # footer I/O; r15 review).
-                for v in touched:
-                    if v not in m["files"]:
-                        continue
+            if touched is None:
+                full_cloned = True
+                rewrite_dir_staged(
+                    read_state(spark, state_dir, generation=gen, _manifest=m),
+                    replica_dir,
+                    partition_by=[pcol] if pcol else None,
+                )
+            for v in touched or []:
+                pdir = (
+                    os.path.join(replica_dir, f"{pcol}={v}")
+                    if pcol
+                    else replica_dir
+                )
+                if v in m["files"]:
                     part = read_state(
                         spark,
                         state_dir,
@@ -1665,63 +1546,11 @@ def sync_state(
                         generation=gen,
                         _manifest=m,
                     )
-                    if pcol:
-                        # drop BEFORE the schema compare: the partition
-                        # column's inferred type depends on which dirs
-                        # the read selects (int for p=1 alone, string
-                        # over the full store, void for the NULL
-                        # sentinel) and it never reaches the replica's
-                        # data files anyway
-                        part = part.drop(pcol)
-                    pairs = {
-                        (f.name, f.dataType.simpleString())
-                        for f in part.schema.fields
-                    }
-                    if rec_pairs is None or not pairs <= rec_pairs:
-                        touched = None  # → full re-clone below
-                        break
-                    frames[v] = part
-            if last_gen is None or touched is None:
-                full = read_state(
-                    spark, state_dir, generation=gen, _manifest=m
-                )
-                synced_schema = (
-                    StructType(
-                        [f for f in full.schema.fields if f.name != pcol]
-                    )
-                    if pcol
-                    else full.schema
-                )
-                full_cloned = True
-                rewrite_dir_staged(
-                    full, replica_dir, partition_by=[pcol] if pcol else None
-                )
-            elif last_gen != gen:
-                for v in touched:
-                    pdir = (
-                        os.path.join(replica_dir, f"{pcol}={v}")
-                        if pcol
-                        else replica_dir
-                    )
-                    if v in m["files"]:
-                        part = frames[v]  # pcol already dropped
-                        if _schema_key(part.schema) != rec_key:
-                            # narrow partition: pad to the recorded
-                            # shape so the replica stays uniform
-                            have = set(part.columns)
-                            for f in recorded.fields:
-                                if f.name not in have:
-                                    part = part.withColumn(
-                                        f.name, F.lit(None).cast(f.dataType)
-                                    )
-                            part = part.select(
-                                [f.name for f in recorded.fields]
-                            )
-                        rewrite_dir_staged(part, pdir)
-                    else:
-                        # the diff says the partition was deleted
-                        recover_staged(pdir)
-                        shutil.rmtree(pdir, ignore_errors=True)
+                    rewrite_dir_staged(part.drop(pcol) if pcol else part, pdir)
+                else:
+                    # the diff says the partition was deleted
+                    recover_staged(pdir)
+                    shutil.rmtree(pdir, ignore_errors=True)
             break
         except Exception as e:
             if attempt < 2 and _retention_shaped(e):
@@ -1733,21 +1562,14 @@ def sync_state(
     # OLD generation marker with the new schema — the next sync
     # re-applies from the old marker, and a stale compare can only err
     # toward a full re-clone, never toward a torn replica. Rewritten
-    # after EVERY full clone, not only on schema change (r15 review:
-    # the clone's root swap displaces the old marker to trash, so an
-    # unchanged-schema re-clone would otherwise leave the replica
-    # marker-less and force a second full clone next sync) — and
-    # whenever the file is missing (an unpartitioned store's
+    # after EVERY full clone (its root swap displaces the old marker to
+    # trash) and whenever the file is missing (an unpartitioned store's
     # incremental swap is also a root swap).
     spath = os.path.join(replica_dir, _SYNC_SCHEMA_FILE)
-    if synced_schema is not None and (
-        full_cloned
-        or not os.path.exists(spath)
-        or _schema_key(synced_schema) != rec_key
-    ):
+    if schema is not None and (full_cloned or not os.path.exists(spath)):
         sp = f"{spath}.{uuid.uuid4().hex[:8]}.part"
         with open(sp, "w", encoding="utf-8") as fh:
-            fh.write(json.dumps(synced_schema.jsonValue()))
+            fh.write(json.dumps(schema.jsonValue()))
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(sp, spath)

@@ -793,33 +793,27 @@ def current_state_lookup(
     the stored column's exact type, then through the maintainer's own
     ``cast(string) → concat_ws → crc32`` expression
     (statestore.bucket_expr) — so the rendering is byte-identical for
-    EVERY key type (ADVICE r11: a driver-side Python ``str(v)``
-    replica diverged from Spark's cast on booleans (``True`` vs
-    ``true``), many floats, and sub-second timestamps, silently probing
-    the wrong bucket). The scan then resolves only that bucket's files
+    EVERY key type (a driver-side Python ``str(v)`` diverges from
+    Spark's cast on booleans (``True`` vs ``true``), many floats, and
+    sub-second timestamps, silently probing the wrong bucket). The scan then resolves only that bucket's files
     from the current manifest (1/n of the table's bytes) before the row
     filter — a key probe, not a table scan.
 
     ``key_values`` must bind every key column the maintainer bucketed
     on, in the SAME order it was given (the bucket hash concatenates
     values in key order); ``n_buckets`` must match the maintainer's."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
     from . import statestore
 
     m = statestore.load_manifest(state_dir)
     if m is None:
         raise ValueError(f"{state_dir} has no committed state manifest")
-    # stored column types from one committed footer (driver-side, no
-    # Spark job) — the literals must pass through the EXACT stored type
-    # or float/decimal renderings diverge
-    data = os.path.join(state_dir, "data")
-    first = next(
-        os.path.join(data, rels[0]) for rels in m["files"].values() if rels
-    )
-    stored = from_arrow_schema(pq.read_schema(first))
-    stored_types = {f.name: f.dataType for f in stored.fields}
+    # stored column types from the manifest's recorded schema (no Spark
+    # job, no file read) — the literals must pass through the EXACT
+    # stored type or float/decimal renderings diverge
+    stored_types = {
+        f.name: f.dataType
+        for f in statestore.manifest_schema(state_dir, m).fields
+    }
     parts = [
         F.lit(v).cast(stored_types[k]).cast("string")
         for k, v in key_values.items()
@@ -828,10 +822,10 @@ def current_state_lookup(
         statestore.bucket_expr(parts, n_buckets).alias("b")
     ).collect()[0]["b"]
     df = statestore.read_state(
-        spark, state_dir, partition_values=[str(bucket)]
+        spark, state_dir, partition_values=[str(bucket)], _manifest=m
     )
-    # the ROW filter needs the same type fidelity as the bucket hash
-    # (ADVICE r12): an uncast F.lit widens a float32 column to double,
+    # the ROW filter needs the same type fidelity as the bucket hash:
+    # an uncast F.lit widens a float32 column to double,
     # so float32(0.1) != lit(0.1) and the probe resolves the right
     # bucket yet silently returns no rows — cast through the stored type
     for k, v in key_values.items():

@@ -495,6 +495,161 @@ def test_dir_without_manifest_is_not_a_store(spark, tmp_path):
         current_state_lookup(spark, state, {"k": 1})
 
 
+def test_non_widening_retype_is_refused_before_any_write(spark, tmp_path):
+    """A commit whose data columns retype a recorded column
+    non-wideningly (``v string`` then ``v long``) would leave a store no
+    single read schema opens. It raises ValueError before writing
+    anything: the generation list and the data files are unchanged, no
+    scratch dir is left, and the old rows still read."""
+    state = str(tmp_path / "retype")
+    statestore.commit_fold(
+        spark,
+        state,
+        spark.createDataFrame([(1, "1", "a")], "k long, p string, v string"),
+        "p",
+        ["1"],
+    )
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(dp, f), state)
+            for dp, _, fs in os.walk(state)
+            for f in fs
+        )
+
+    gens, before = statestore.list_generations(state), files()
+    with pytest.raises(ValueError, match="column v"):
+        statestore.commit_fold(
+            spark,
+            state,
+            spark.createDataFrame([(2, "1", 7)], "k long, p string, v long"),
+            "p",
+            ["1"],
+        )
+    assert statestore.list_generations(state) == gens
+    assert files() == before
+    got = [
+        (r["k"], r["v"]) for r in statestore.read_state(spark, state).collect()
+    ]
+    assert got == [(1, "a")]
+
+
+def test_nested_additive_evolution_merges_into_the_recorded_schema(
+    spark, tmp_path
+):
+    """A field added inside a struct (``meta struct<a>`` then
+    ``struct<a, lang>``) is the additive evolution the schema-drift
+    guard asks a restart to carry. The commit succeeds, the manifest
+    records the merged struct, and a row written before the change
+    reads back with ``meta.lang`` NULL. A nested non-widening retype
+    is still refused, naming the nested column."""
+    from pyspark.sql.types import StructType
+
+    state = str(tmp_path / "nested")
+    statestore.commit_fold(
+        spark,
+        state,
+        spark.createDataFrame(
+            [(1, "1", ("x",))], "k long, p string, meta struct<a: string>"
+        ),
+        "p",
+        ["1"],
+    )
+    statestore.commit_fold(
+        spark,
+        state,
+        spark.createDataFrame(
+            [(2, "2", ("y", "en"))],
+            "k long, p string, meta struct<a: string, lang: string>",
+        ),
+        "p",
+        ["2"],
+    )
+    recorded = StructType.fromJson(statestore.load_manifest(state)["schema"])
+    assert recorded["meta"].dataType.fieldNames() == ["a", "lang"]
+    got = sorted(
+        (r["k"], r["meta"]["a"], r["meta"]["lang"])
+        for r in statestore.read_state(spark, state).collect()
+    )
+    assert got == [(1, "x", None), (2, "y", "en")]
+    gens = statestore.list_generations(state)
+    with pytest.raises(ValueError, match="column meta.a"):
+        statestore.commit_fold(
+            spark,
+            state,
+            spark.createDataFrame(
+                [(3, "3", (7, "de"))],
+                "k long, p string, meta struct<a: long, lang: string>",
+            ),
+            "p",
+            ["3"],
+        )
+    assert statestore.list_generations(state) == gens
+
+
+def test_empty_first_commit_records_the_schema(spark, tmp_path):
+    """A first commit that writes no files still records its data
+    columns' read schema, so the store is readable once data lands and
+    every later manifest carries the schema too."""
+    from pyspark.sql.types import StructType
+
+    state = str(tmp_path / "emptyfirst")
+    schema = "k long, p string, v string"
+    statestore.commit_fold(
+        spark, state, spark.createDataFrame([], schema), "p", ["1"]
+    )
+    m1 = statestore.load_manifest(state)
+    assert m1["files"] == {}
+    assert m1.get("schema") is not None
+    assert StructType.fromJson(m1["schema"]).simpleString() == (
+        "struct<k:bigint,v:string>"
+    )
+    statestore.commit_fold(
+        spark, state, spark.createDataFrame([(1, "1", "a")], schema), "p", ["1"]
+    )
+    assert statestore.load_manifest(state).get("schema") == m1["schema"]
+    got = [
+        (r["k"], r["v"]) for r in statestore.read_state(spark, state).collect()
+    ]
+    assert got == [(1, "a")]
+
+
+def test_manifest_without_schema_is_refused(spark, tmp_path):
+    """A manifest that records no read schema (written before schema
+    recording) is refused: reads, point lookups and commits raise
+    ValueError naming the store instead of inferring a schema from
+    parquet footers, and the refused commit writes nothing."""
+    import json
+
+    state = str(tmp_path / "noschema")
+    statestore.commit_fold(
+        spark,
+        state,
+        spark.createDataFrame(
+            [(1, 3, "a"), (2, 5, "b")], "k long, __bucket int, v string"
+        ),
+        "__bucket",
+        ["3", "5"],
+    )
+    m = statestore.load_manifest(state)
+    del m["schema"]
+    with open(statestore._manifest_path(state, m["gen"]), "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match="noschema"):
+        statestore.read_state(spark, state)
+    with pytest.raises(ValueError, match="noschema"):
+        current_state_lookup(spark, state, {"k": 1})
+    with pytest.raises(ValueError, match="noschema"):
+        statestore.commit_fold(
+            spark,
+            state,
+            spark.createDataFrame([(3, 3, "c")], "k long, __bucket int, v string"),
+            "__bucket",
+            ["3"],
+        )
+    assert statestore.list_generations(state) == [m["gen"]]
+
+
 def test_pure_deletion_partition_sweeps_crashed_orphans(
     spark, tmp_path, monkeypatch
 ):

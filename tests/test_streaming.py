@@ -665,6 +665,41 @@ def test_maintain_current_state_map_payload(spark, tmp_path):
     assert got == {1: ("2030-02-01", {"a": 9}), 2: ("2030-01-01", {"b": 2})}
 
 
+def test_maintain_current_state_folds_a_field_added_inside_a_struct(
+    spark, tmp_path
+):
+    """The restart-with-wider-schema path the drift guard prescribes:
+    after folds at ``meta struct<a>``, a batch at ``struct<a, lang>``
+    folds into the same bucket as the old rows, the old version reads
+    back with ``meta.lang`` NULL, and a point lookup returns the new
+    field."""
+    from leftshove_spark.streaming import (
+        current_state_lookup,
+        current_state_table,
+        maintain_current_state,
+    )
+
+    state = str(tmp_path / "cur")
+    b1 = spark.createDataFrame(
+        [(1, "2030-01-01", ("x",)), (2, "2030-01-01", ("y",))],
+        "k long, d string, meta struct<a: string>",
+    )
+    maintain_current_state(spark, state, b1, "k", "d", n_buckets=1)
+    b2 = spark.createDataFrame(
+        [(2, "2030-02-01", ("z", "en"))],
+        "k long, d string, meta struct<a: string, lang: string>",
+    )
+    maintain_current_state(spark, state, b2, "k", "d", n_buckets=1)
+    maintain_current_state(spark, state, b2, "k", "d", n_buckets=1)
+    got = sorted(
+        (r["k"], r["d"], r["meta"]["a"], r["meta"]["lang"])
+        for r in current_state_table(spark, state).collect()
+    )
+    assert got == [(1, "2030-01-01", "x", None), (2, "2030-02-01", "z", "en")]
+    (row,) = current_state_lookup(spark, state, {"k": 2}, n_buckets=1).collect()
+    assert row["meta"]["lang"] == "en"
+
+
 def test_current_state_lookup_prunes_to_one_bucket(spark, tmp_path):
     """W25 point reads: current_state_lookup computes the maintainer's
     crc32 bucket with SPARK'S OWN cast/concat/crc32 expression, then
@@ -1035,6 +1070,48 @@ def test_corpus_stats_fold_and_duplication_signal(spark, tmp_path):
     v2 = corpus_stats_view(spark, state, k=64).first()
     assert v2["n_docs"] == 160
     assert v2["est_distinct_content"] == 40.0
+
+
+def test_corpus_stats_manifests_record_schema_and_reads_infer_none(
+    spark, tmp_path, monkeypatch
+):
+    """W22 folds rewrite the sketch columns (``array<bigint>``) with
+    nested nullability that differs between the first fold and later
+    ones. Nullability is not a retype, so every manifest the folds
+    write records the read schema, and resolving a read's schema runs
+    no Spark job (no parquet footer inference)."""
+    import pyspark.sql.functions as F
+
+    from leftshove_spark import statestore
+    from leftshove_spark.streaming import maintain_corpus_stats
+
+    written = []
+    real_write = statestore._write_manifest
+
+    def recording_write(state_dir, manifest):
+        written.append(manifest)
+        return real_write(state_dir, manifest)
+
+    monkeypatch.setattr(statestore, "_write_manifest", recording_write)
+    rows = [(i, "g", f"text body number {i % 40}") for i in range(120)]
+    df = spark.createDataFrame(rows, "doc_id long, g string, text string")
+    state = str(tmp_path / "stats")
+    for i in range(3):
+        maintain_corpus_stats(
+            spark, state, df.filter(F.col("doc_id") % 3 == i), "g", k=64
+        )
+    assert [m["gen"] for m in written] == [1, 2, 3]
+    assert all(m.get("schema") is not None for m in written)
+
+    sc = spark.sparkContext
+    group = "read-state-schema-probe"
+    sc.setJobGroup(group, "resolve a state read's schema")
+    try:
+        fields = statestore.read_state(spark, state).schema.fieldNames()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "content_kmv" in fields
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_embedding_index_stream_equals_batch_encode(spark, tmp_path):
