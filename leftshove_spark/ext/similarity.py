@@ -153,29 +153,38 @@ def _plane(p: int, dim: int) -> list[int]:
     return out
 
 
-def _long_array(xs: list[int]) -> Column:
-    """Literal array<bigint>, built in one call (the int_dot rule)."""
-    return F.expr("array(" + ", ".join(f"CAST({int(x)} AS BIGINT)" for x in xs) + ")")
+def _long_array_sql(xs: list[int]) -> str:
+    """SQL text of a literal array<bigint>."""
+    return "array(" + ", ".join(f"CAST({int(x)} AS BIGINT)" for x in xs) + ")"
 
 
-def lsh_bucket(vec_q: Column, dim: int, n_planes: int = N_PLANES) -> Column:
+def _generic_dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`int_dot`'s generic higher-order form."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+
+
+def _sql_ref(col: Column | str) -> str:
+    """A column reference as SQL text: a name as given, a Column (a
+    plain ``F.col``) as its text form."""
+    return col if isinstance(col, str) else col._jc.toString()
+
+
+def lsh_bucket(vec_q: Column | str, dim: int, n_planes: int = N_PLANES) -> Column:
     """Sign-random-projection bucket id: bit p = sign of <plane_p, v>.
     Planes are literal int arrays (driver-side deterministic), so the
     projection is an exact integer dot — the bucket id is reproducible
-    bit-for-bit on any engine or cluster."""
-    bits = []
-    for p in range(n_planes):
-        plane = _long_array(_plane(p, dim))
-        dot = F.aggregate(
-            F.zip_with(plane, vec_q, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    bit-for-bit on any engine or cluster. The whole sum is one SQL
+    expression built in one call (the :func:`int_dot` rule)."""
+    v = _sql_ref(vec_q)
+    bits = [
+        f"CASE WHEN {_generic_dot_sql(_long_array_sql(_plane(p, dim)), v)} > 0 "
+        f"THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for p in range(n_planes)
+    ]
+    return F.expr(" + ".join(bits))
 
 
 def knn_lsh(
@@ -193,7 +202,7 @@ def knn_lsh(
     shuffles once on bucket id; each query touches (1+planes) buckets'
     rows — never the whole corpus."""
     q = queries.select(F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv"))
-    q = q.withColumn("bucket0", lsh_bucket(F.col("qv"), dim, n_planes))
+    q = q.withColumn("bucket0", lsh_bucket("qv", dim, n_planes))
     # multi-probe: own bucket + every bucket within hamming distance 2.
     # Probe count is 1 + p + p(p-1)/2 (37 at p=8) — constant per query,
     # independent of corpus size; recall rises steeply with probes on
@@ -202,10 +211,10 @@ def knn_lsh(
     flips += [
         (1 << i) | (1 << j) for i in range(n_planes) for j in range(i + 1, n_planes)
     ]
-    probes = F.array(*[F.col("bucket0").bitwiseXOR(F.lit(m)) for m in flips])
+    probes = F.expr("array(" + ", ".join(f"bucket0 ^ {m}" for m in flips) + ")")
     q = q.withColumn("bucket", F.explode(probes)).drop("bucket0")
     c = corpus.select(F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"))
-    c = c.withColumn("bucket", lsh_bucket(F.col("cv"), dim, n_planes))
+    c = c.withColumn("bucket", lsh_bucket("cv", dim, n_planes))
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -228,10 +237,12 @@ N_CENTROIDS = 16
 IVF_SEED_SALT = "ivfs:"
 
 
-def _centroid_scores(qv: Column, centroids: list[list[int]]) -> list[Column]:
+def _centroid_scores(qv: Column | str, centroids: list[list[int]]) -> list[Column]:
     """Exact integer dot of ``qv`` against each literal centroid, scaled
     to cosine. Centroids are driver-side int lists (k×dim — bytes, not
     data), so scoring is a per-row codegen loop with no join at all.
+    Each score is one SQL expression built in one call (the
+    :func:`int_dot` rule); ``qv`` is a column name or a plain ``F.col``.
 
     Zero-norm (all-zero quantized) vectors or centroids make the
     denominator 0 — under ANSI mode (Spark 4 default) a plain ``/``
@@ -242,28 +253,30 @@ def _centroid_scores(qv: Column, centroids: list[list[int]]) -> list[Column]:
     wins a nonzero row, and an all-NULL (zero-norm) row ties every cell
     and deterministically lands on the highest index. The Arrow path
     (:func:`_centroid_cosines_np`) replicates this with NaN→-inf."""
-    cols = []
+    return [F.expr(s) for s in _centroid_scores_sql(_sql_ref(qv), centroids)]
+
+
+def _centroid_scores_sql(qv: str, centroids: list[list[int]]) -> list[str]:
+    qq = _generic_dot_sql(qv, qv)
+    out = []
     for cen in centroids:
-        arr = _long_array(cen)
-        cols.append(
-            F.try_divide(
-                int_dot(arr, qv).cast("double"),
-                F.sqrt(int_dot(arr, arr).cast("double"))
-                * F.sqrt(int_dot(qv, qv).cast("double")),
-            )
+        arr = _long_array_sql(cen)
+        out.append(
+            f"try_divide(CAST({_generic_dot_sql(arr, qv)} AS DOUBLE), "
+            f"SQRT(CAST({_generic_dot_sql(arr, arr)} AS DOUBLE)) "
+            f"* SQRT(CAST({qq} AS DOUBLE)))"
         )
-    return cols
+    return out
 
 
-def _assign_cluster(qv: Column, centroids: list[list[int]]) -> Column:
-    """argmax-cosine centroid index (ties → higher index, deterministic)."""
-    scored = F.array(
-        *[
-            F.struct(c.alias("c"), F.lit(i).alias("i"))
-            for i, c in enumerate(_centroid_scores(qv, centroids))
-        ]
+def _assign_cluster(qv: Column | str, centroids: list[list[int]]) -> Column:
+    """argmax-cosine centroid index (ties → higher index, deterministic),
+    one SQL expression built in one call."""
+    cells = ", ".join(
+        f"named_struct('c', {s}, 'i', {i})"
+        for i, s in enumerate(_centroid_scores_sql(_sql_ref(qv), centroids))
     )
-    return F.array_max(scored).getField("i")
+    return F.expr(f"array_max(array({cells})).i")
 
 
 # Ceiling for the literal expression tree (k nested struct/dot

@@ -71,21 +71,6 @@ def pg_udt_to_spark(
     return T.StringType()
 
 
-def translate_catalog(columns: list[dict]) -> T.StructType:
-    """Translate a source column-catalog (list of dicts shaped like the
-    reference's information_schema JSON, postgres.go:166-178) into the
-    sink StructType, ordered by ordinal_position, all-nullable (Q2)."""
-    fields = []
-    for c in sorted(columns, key=lambda c: c.get("ordinal_position", 0)):
-        dt = pg_udt_to_spark(
-            c["udt_name"],
-            c.get("numeric_precision"),
-            c.get("numeric_scale"),
-        )
-        fields.append(T.StructField(c["column_name"], dt, nullable=True))
-    return T.StructType(fields)
-
-
 def sink_schema(src: T.StructType) -> T.StructType:
     """Source schema + the appended snapshot_tm TIMESTAMP column — the
     ``<table>_cdc`` shape (bigquery.go:355-358)."""

@@ -46,15 +46,6 @@ def write_json_lines(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_if_absent(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """S4's WriteEmpty disposition (bigquery.go:243:
-    ``WriteDisposition: bigquery.WriteEmpty`` — the load FAILS when the
-    destination already holds data). ``mode("errorifexists")`` is the
-    exact Spark analog: first load wins, a re-run raises instead of
-    duplicating rows."""
-    df.write.mode("errorifexists").format(fmt).save(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

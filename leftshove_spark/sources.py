@@ -230,71 +230,6 @@ def read_jdbc_window(
     return reader.load()
 
 
-def read_json_explicit_schema(spark: SparkSession, path: str, schema) -> DataFrame:
-    """S4 — line-JSON load with a DECLARED schema (bigquery.go:217-250:
-    the sample loads ``gs://...json`` into BigQuery with an explicit
-    2-field schema instead of autodetect). ``schema`` is a StructType or
-    DDL string. Declaring the schema skips Spark's inference pass — at
-    100 TB, inference is a full extra scan of the corpus; a declared
-    schema makes the load single-pass and keeps corrupt records visible
-    via the permissive-mode ``_corrupt_record`` pattern instead of
-    silently changing column types."""
-    return spark.read.schema(schema).json(path)
-
-
-def read_landing(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    *,
-    mode: str = "FAILFAST",
-    **options,
-) -> DataFrame:
-    """Format-agnostic landing reader — raw pipeline data arrives as
-    parquet, ORC, CSV, line-JSON, or XML (Spark 4 built-in source);
-    normalize all five behind one call (the S1/S4 source surface
-    generalized to file landings).
-
-    Parquet routes through :func:`read_parquet_normalized` (nanos
-    handling); ORC is self-describing; CSV and JSON REQUIRE an explicit
-    schema — inference is a full extra scan of the corpus and guesses
-    types, never acceptable at 100 TB. ``mode`` defaults to FAILFAST
-    (fail loud on malformed rows); pass PERMISSIVE plus a
-    ``columnNameOfCorruptRecord`` option to quarantine bad rows
-    instead."""
-    if fmt == "parquet":
-        # parquet is self-describing and routes through the normalizing
-        # reader; a schema/mode here would be silently ignored — refuse
-        # loudly instead of pretending to enforce it
-        if schema is not None or mode != "FAILFAST" or options:
-            raise ValueError(
-                "parquet landings are self-describing: schema/mode/options "
-                "are not applied — remove them or use csv/json/orc/xml"
-            )
-        return read_parquet_normalized(spark, path)
-    if fmt == "orc":
-        reader = spark.read.options(**options)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.orc(path)
-    if fmt in ("csv", "json", "xml"):
-        if schema is None:
-            raise ValueError(f"{fmt} landing requires an explicit schema")
-        reader = spark.read.schema(schema).option("mode", mode).options(**options)
-        if fmt == "csv":
-            return reader.option("header", options.get("header", "true")).csv(path)
-        if fmt == "xml":
-            # Spark 4 built-in XML source; rowTag names the repeating
-            # record element (same explicit-schema rule as csv/json —
-            # XML inference is an extra full scan plus type guessing)
-            return reader.option(
-                "rowTag", options.get("rowTag", "row")
-            ).format("xml").load(path)
-        return reader.json(path)
-    raise ValueError(f"unsupported landing format: {fmt}")
-
-
 def parquet_manifest(path: str, columns: list[str] | None = None) -> list[dict]:
     """Per-file statistics manifest of a parquet directory, read from
     footers via pyarrow — NO Spark jobs, so it is a driver-side ops

@@ -85,6 +85,7 @@ import os
 import shutil
 import time
 import uuid
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,10 +175,21 @@ def bucket_expr(string_cols: list, n_buckets: int):
     already-``cast("string")`` columns (maintainers cast the stored
     column; lookups cast a literal to the stored column's exact type
     first, so both render bytes identically — ADVICE r11: a Python
-    ``str(v)`` re-implementation diverged on bool/float/timestamp)."""
+    ``str(v)`` re-implementation diverged on bool/float/timestamp).
+    :func:`bucket_of` is its driver twin for the integral and string
+    keys whose Python rendering is byte-identical."""
     return (
         F.abs(F.crc32(F.concat_ws("\x1f", *string_cols))) % n_buckets
     ).cast("int")
+
+
+def bucket_of(parts: list[str | None], n_buckets: int) -> int:
+    """:func:`bucket_expr` on the driver, over key values already
+    rendered as Spark's ``cast(string)`` renders them (None for NULL).
+    It hashes the same bytes: ``concat_ws`` skips NULLs, and crc32 is
+    non-negative, so ``abs`` changes nothing."""
+    joined = "\x1f".join(p for p in parts if p is not None)
+    return zlib.crc32(joined.encode("utf-8")) % n_buckets
 
 
 def _fs_now(state_dir: str) -> float:
@@ -1312,6 +1324,106 @@ def read_state(
             raise ValueError(f"state store {state_dir} holds no data")
         return reader.parquet(os.path.join(data, first)).limit(0)
     return reader.parquet(*paths)
+
+
+def _arrow_readable(dt) -> bool:
+    """Whether every leaf of ``dt`` is a type a driver-side pyarrow read
+    returns as Spark's parquet reader does: numbers, plain strings,
+    binary, booleans, dates and timestamps, inside structs, arrays and
+    maps. A schema with any other leaf keeps its reads on Spark."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, StructType):
+        return all(_arrow_readable(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _arrow_readable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _arrow_readable(dt.keyType) and _arrow_readable(dt.valueType)
+    if isinstance(dt, T.StringType):
+        return dt == T.StringType()  # a collated string compares differently
+    return isinstance(
+        dt,
+        (
+            T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+            T.FloatType, T.DoubleType, T.DecimalType, T.BinaryType,
+            T.DateType, T.TimestampType, T.TimestampNTZType,
+        ),
+    )
+
+
+def _same_clock(at, dt) -> bool:
+    """Whether a file's Arrow type ``at`` stores timestamps the way the
+    read type ``dt`` reads them, at every depth: an instant (tz-aware,
+    as TIMESTAMP_MICROS is written) for TIMESTAMP, a wall clock (naive)
+    for TIMESTAMP_NTZ. A naive TIMESTAMP (legacy INT96) is not, because
+    Arrow's conversion would localize it, so such a read stays on
+    Spark."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if pa.types.is_timestamp(at):
+        return (at.tz is None) == isinstance(dt, T.TimestampNTZType)
+    if pa.types.is_struct(at) and isinstance(dt, StructType):
+        want = {f.name: f.dataType for f in dt.fields}
+        fields = [at.field(i) for i in range(at.num_fields)]
+        return all(
+            f.name not in want or _same_clock(f.type, want[f.name]) for f in fields
+        )
+    if pa.types.is_list(at) and isinstance(dt, T.ArrayType):
+        return _same_clock(at.value_type, dt.elementType)
+    if pa.types.is_map(at) and isinstance(dt, T.MapType):
+        return _same_clock(at.key_type, dt.keyType) and _same_clock(
+            at.item_type, dt.valueType
+        )
+    return True  # any other shape mismatch fails the cast instead
+
+
+# Spark stamps files written in the LEGACY (Julian) calendar with these
+# keys; their dates and timestamps need Spark's rebase
+_LEGACY_CALENDAR_KEYS = {b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96"}
+
+
+def read_partition_arrow(state_dir: str, m: dict, value, row_filter):
+    """Partition ``value`` of manifest ``m`` read on the driver with
+    pyarrow, launching no Spark job: only the rows matching the pyarrow
+    expression ``row_filter``, conformed to the manifest's read schema
+    as :func:`read_state` reads it (a column missing from a file reads
+    as NULL, a widened type is cast; the partition column is left out).
+    An empty partition gives an empty table of that schema. Returns
+    None when a type or a file is outside what this read renders
+    exactly (:func:`_arrow_readable`, :func:`_same_clock`, a
+    legacy-calendar file, a cast Arrow refuses); the caller then reads
+    with Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = manifest_schema(state_dir, m)
+    if not _arrow_readable(schema):
+        return None
+    target = to_arrow_schema(schema)
+    data = os.path.join(state_dir, _DATA_DIR)
+    tables = []
+    try:
+        for rel in m["files"].get(str(value), []):
+            t = pq.read_table(
+                os.path.join(data, rel), filters=row_filter, partitioning=None
+            )
+            if _LEGACY_CALENDAR_KEYS & set(t.schema.metadata or {}):
+                return None
+            cols = []
+            for af, sf in zip(target, schema.fields):
+                if af.name not in t.column_names:
+                    cols.append(pa.nulls(t.num_rows, af.type))
+                    continue
+                c = t.column(af.name)
+                if not _same_clock(c.type, sf.dataType):
+                    return None
+                cols.append(c.cast(af.type))
+            tables.append(pa.Table.from_arrays(cols, schema=target))
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError):
+        return None
+    return pa.concat_tables(tables) if tables else target.empty_table()
 
 
 _SYNC_GEN_FILE = "_SYNC_GEN"

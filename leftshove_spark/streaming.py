@@ -782,22 +782,58 @@ def current_state_table(
     ).drop("__bucket")
 
 
+# bits of each integral type: a Python int inside its range renders
+# under Spark's cast(string) as str() renders it
+_INTEGRAL_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
+def _driver_key_parts(key_values: dict, stored_types: dict) -> list | None:
+    """Each bound key as Spark's ``cast(<stored type>) → cast(string)``
+    renders it (None for NULL), when every pair is one whose rendering
+    is proven byte-identical in Python: an ``int`` (not ``bool``) inside
+    an integral column's range, or a ``str`` against a plain string
+    column. None when any pair is not, so the lookup stays on Spark."""
+    parts = []
+    for k, v in key_values.items():
+        dt = stored_types[k]
+        bits = _INTEGRAL_BITS.get(dt.simpleString())
+        if bits is not None and (v is None or type(v) is int):
+            if v is not None and not -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+                return None
+            parts.append(None if v is None else str(v))
+        elif dt.simpleString() == "string" and (v is None or type(v) is str):
+            parts.append(v)
+        else:
+            return None
+    return parts
+
+
 def current_state_lookup(
     spark: SparkSession,
     state_dir: str,
     key_values: dict[str, object],
     n_buckets: int = 16,
 ) -> DataFrame:
-    """Point lookup against a W25 table with BUCKET PRUNING: the key's
-    crc32 bucket is computed by SPARK ITSELF — each literal is cast to
-    the stored column's exact type, then through the maintainer's own
-    ``cast(string) → concat_ws → crc32`` expression
-    (statestore.bucket_expr) — so the rendering is byte-identical for
-    EVERY key type (a driver-side Python ``str(v)`` diverges from
-    Spark's cast on booleans (``True`` vs ``true``), many floats, and
-    sub-second timestamps, silently probing the wrong bucket). The scan then resolves only that bucket's files
-    from the current manifest (1/n of the table's bytes) before the row
-    filter — a key probe, not a table scan.
+    """Point lookup against a W25 table with BUCKET PRUNING: only the
+    key's crc32 bucket is read, from the files the current manifest
+    lists for it (1/n of the table's bytes), then filtered to the key —
+    a key probe, not a table scan.
+
+    Integral and string keys are served on the driver with no Spark
+    job: for a Python ``int`` (not ``bool``) inside an integral
+    column's range, or a ``str`` against a string column, Python's
+    rendering is byte-identical to Spark's ``cast(string)``, so
+    :func:`statestore.bucket_of` hashes the bytes
+    :func:`statestore.bucket_expr` hashes, and
+    :func:`statestore.read_partition_arrow` reads the bucket with
+    pyarrow into a local relation. Every other key (boolean, float,
+    decimal, date and timestamp columns, a value whose Python type does
+    not match the column) and every bucket the driver read cannot
+    render exactly goes through Spark: each literal is cast to the
+    stored column's exact type, then through the maintainer's own
+    ``cast(string) → concat_ws → crc32`` expression, because Python's
+    ``str(v)`` diverges from Spark's cast on booleans (``True`` vs
+    ``true``), many floats and sub-second timestamps.
 
     ``key_values`` must bind every key column the maintainer bucketed
     on, in the SAME order it was given (the bucket hash concatenates
@@ -807,13 +843,23 @@ def current_state_lookup(
     m = statestore.load_manifest(state_dir)
     if m is None:
         raise ValueError(f"{state_dir} has no committed state manifest")
-    # stored column types from the manifest's recorded schema (no Spark
-    # job, no file read) — the literals must pass through the EXACT
-    # stored type or float/decimal renderings diverge
-    stored_types = {
-        f.name: f.dataType
-        for f in statestore.manifest_schema(state_dir, m).fields
-    }
+    schema = statestore.manifest_schema(state_dir, m)
+    stored_types = {f.name: f.dataType for f in schema.fields}
+    driver_parts = _driver_key_parts(key_values, stored_types)
+    if driver_parts is not None:
+        import pyarrow.compute as pc
+
+        cond = None
+        for k, v in key_values.items():
+            e = pc.field(k).is_null() if v is None else pc.field(k) == v
+            cond = e if cond is None else cond & e
+        table = statestore.read_partition_arrow(
+            state_dir, m, statestore.bucket_of(driver_parts, n_buckets), cond
+        )
+        if table is not None:
+            return spark.createDataFrame(table, schema=schema)
+    # the literals must pass through the EXACT stored type, or float
+    # and decimal renderings diverge
     parts = [
         F.lit(v).cast(stored_types[k]).cast("string")
         for k, v in key_values.items()

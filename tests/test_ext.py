@@ -214,6 +214,43 @@ def test_unrolled_cosine_builds_in_few_jvm_calls(spark):
     assert 0 < len(calls) <= 10, len(calls)
 
 
+def test_centroid_and_lsh_expressions_build_in_few_jvm_calls(spark):
+    """Centroid scoring, cluster assignment, the SRP bucket and the
+    37-entry multi-probe array are each one SQL expression, so building
+    them costs tens of py4j round-trips, not one per node: built Column
+    by Column, a 16-centroid assignment took about 6,600 and a
+    ``knn_lsh`` plan about 4,800."""
+    import py4j.clientserver as cs
+
+    cents = [[(i * 7 + j * 13) % 201 - 100 for j in range(64)] for i in range(16)]
+    q = spark.createDataFrame([(0, [1.0] * 64)], "vec_id long, embedding array<float>")
+    counts = {}
+    orig = cs.ClientServerConnection.send_command
+
+    def count(label, build):
+        calls = []
+
+        def counting(self, command):
+            calls.append(1)
+            return orig(self, command)
+
+        cs.ClientServerConnection.send_command = counting
+        try:
+            build()
+        finally:
+            cs.ClientServerConnection.send_command = orig
+        counts[label] = len(calls)
+
+    count("assign", lambda: S._assign_cluster(F.col("qv"), cents))
+    count("scores", lambda: S._centroid_scores("qv", cents))
+    count("bucket", lambda: S.lsh_bucket("qv", 64))
+    count("knn_lsh", lambda: S.knn_lsh(q, q, dim=64, k=5))
+    assert 0 < counts["assign"] <= 40, counts
+    assert 0 < counts["scores"] <= 80, counts
+    assert 0 < counts["bucket"] <= 20, counts
+    assert 0 < counts["knn_lsh"] <= 800, counts
+
+
 def test_ivf_centroids_match_numpy_replay(emb):
     """ivf_centroids on the sf0.001 embeddings equals a pure-numpy
     replay: seeds first in md5(salt || id) order, then two Lloyd steps

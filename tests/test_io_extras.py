@@ -1,6 +1,6 @@
-"""S4/S7 parity tests: explicit-schema JSON load + WriteEmpty-disposition
-sink (bigquery.go:217-250) and the per-table stream-config dump
-(benthos.go:146-160)."""
+"""S3/S4/S7 parity tests: the line-JSON sink loaded with an explicit
+schema (benthos.go:95-104, bigquery.go:217-250) and the per-table
+stream-config dump (benthos.go:146-160)."""
 
 import json
 import os
@@ -10,23 +10,24 @@ from pyspark.sql import functions as F
 
 from leftshove_spark.engine import Engine
 from leftshove_spark.session import EngineConfig
-from leftshove_spark.sinks import write_if_absent, write_json_lines
-from leftshove_spark.sources import load_table, read_json_explicit_schema
+from leftshove_spark.sinks import write_json_lines
+from leftshove_spark.sources import load_table
 
 from conftest import SF0001
 
 
 def test_s4_json_load_with_explicit_schema(spark, tmp_path):
-    """S4 — the declared schema is authoritative: no inference pass, and
-    a field absent from the JSON arrives as a typed null column."""
+    """S3's line-JSON sink output loads as S4 does (bigquery.go:217-250):
+    the declared schema is authoritative, with no inference pass, and a
+    field absent from the JSON arrives as a typed null column."""
     src = load_table(spark, SF0001, "nation").select("n_nationkey", "n_name")
     json_dir = str(tmp_path / "nation_json")
     write_json_lines(src, json_dir)
 
     # declared schema: one real field narrowed + one absent field
-    loaded = read_json_explicit_schema(
-        spark, json_dir, "n_nationkey INT, n_name STRING, missing_field DOUBLE"
-    )
+    loaded = spark.read.schema(
+        "n_nationkey INT, n_name STRING, missing_field DOUBLE"
+    ).json(json_dir)
     assert [f.simpleString() for f in loaded.schema.fields] == [
         "n_nationkey:int",
         "n_name:string",
@@ -37,19 +38,6 @@ def test_s4_json_load_with_explicit_schema(spark, tmp_path):
     assert all(r["missing_field"] is None for r in rows)
     names = {r["n_name"] for r in rows}
     assert {r["n_name"] for r in src.collect()} == names
-
-
-def test_s4_write_empty_disposition(spark, tmp_path):
-    """WriteEmpty analog: first load succeeds, second raises instead of
-    appending duplicates."""
-    df = load_table(spark, SF0001, "region")
-    dest = str(tmp_path / "region_once")
-    write_if_absent(df, dest)
-    assert spark.read.parquet(dest).count() == df.count()
-    with pytest.raises(Exception, match="already exists|LOCATION_ALREADY_EXISTS"):
-        write_if_absent(df, dest)
-    # destination untouched by the failed second load
-    assert spark.read.parquet(dest).count() == df.count()
 
 
 def test_s7_stream_config_dump(spark, tmp_path):
@@ -77,27 +65,6 @@ def test_s7_stream_config_dump(spark, tmp_path):
     assert conf["has_transform"] is True
     assert conf["sink_path"].endswith("events_cdc")
     assert conf["watermark"] is not None  # seed computed a min-watermark
-
-
-def test_read_landing_csv_orc_roundtrip(spark, tmp_path):
-    """read_landing: CSV needs an explicit schema (FAILFAST default),
-    ORC is self-describing; both round-trip values exactly."""
-    import pytest as _pytest
-
-    from leftshove_spark.sources import read_landing
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", -0.25)], "id long, s string, v double"
-    )
-    csv_dir, orc_dir = str(tmp_path / "csv"), str(tmp_path / "orc")
-    df.write.option("header", "true").csv(csv_dir)
-    df.write.orc(orc_dir)
-    got_csv = read_landing(spark, csv_dir, "csv", schema="id long, s string, v double")
-    assert sorted(map(tuple, got_csv.collect())) == sorted(map(tuple, df.collect()))
-    got_orc = read_landing(spark, orc_dir, "orc")
-    assert sorted(map(tuple, got_orc.collect())) == sorted(map(tuple, df.collect()))
-    with _pytest.raises(ValueError):
-        read_landing(spark, csv_dir, "csv")  # schema is mandatory
 
 
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
@@ -340,27 +307,3 @@ def test_staged_swap_recovers_mid_displace_crash(spark, tmp_path):
     assert out.count() == 600
     assert out.filter("tag <> 'new'").count() == 0
     assert not os.path.exists(tmp) and not os.path.exists(trash)
-
-
-def test_read_landing_xml_roundtrip(spark, tmp_path):
-    """XML landing (Spark 4 built-in source) through the same explicit-
-    schema contract as csv/json: write, read back with the declared
-    schema, values intact including a null."""
-    from pyspark.sql import types as T
-
-    from leftshove_spark.sources import read_landing
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, None, -2.0)], "id long, s string, v double"
-    )
-    p = str(tmp_path / "xmlland")
-    (df.write.format("xml").option("rootTag", "rows").option("rowTag", "row").save(p))
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("s", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    back = read_landing(spark, p, fmt="xml", schema=schema)
-    assert sorted(map(tuple, back.collect())) == [(1, "a", 1.5), (2, None, -2.0)]

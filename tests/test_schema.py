@@ -54,19 +54,6 @@ def test_q1_scale_fix_regression():
     assert dt.precision == 10 and dt.scale == 2
 
 
-def test_translate_catalog_orders_by_ordinal_and_is_nullable():
-    cols = [
-        {"column_name": "b", "udt_name": "int8", "ordinal_position": 2},
-        {"column_name": "a", "udt_name": "text", "ordinal_position": 1},
-        {"column_name": "c", "udt_name": "numeric", "ordinal_position": 3,
-         "numeric_precision": 6, "numeric_scale": 2},
-    ]
-    st = sch.translate_catalog(cols)
-    assert [f.name for f in st.fields] == ["a", "b", "c"]
-    assert all(f.nullable for f in st.fields)  # Q2: everything nullable
-    assert st["c"].dataType == T.DecimalType(6, 2)
-
-
 def test_sink_schema_appends_snapshot_tm():
     src = T.StructType([T.StructField("id", T.LongType(), True)])
     sk = sch.sink_schema(src)

@@ -700,13 +700,28 @@ def test_maintain_current_state_folds_a_field_added_inside_a_struct(
     assert row["meta"]["lang"] == "en"
 
 
+def _jobs_during(spark, group, fn):
+    """``fn()``'s result and the Spark jobs it launched, counted under
+    a job group through the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_current_state_lookup_prunes_to_one_bucket(spark, tmp_path):
-    """W25 point reads: current_state_lookup computes the maintainer's
-    crc32 bucket with SPARK'S OWN cast/concat/crc32 expression, then
-    resolves only that bucket's files from the manifest — the scan's
-    file list IS one bucket (1/n of the bytes), and the probe returns
-    exactly the full-table filter's rows, including multi-key
-    concatenation."""
+    """W25 point reads resolve only the key's bucket from the manifest:
+    with every other bucket's data files deleted from a copy of the
+    store, each probe still returns exactly the full-table filter's row,
+    including under multi-key concatenation."""
+    import glob
+    import os
+    import shutil
+
+    from leftshove_spark import statestore
     from leftshove_spark.sources import load_table
     from leftshove_spark.streaming import (
         current_state_lookup,
@@ -725,19 +740,21 @@ def test_current_state_lookup_prunes_to_one_bucket(spark, tmp_path):
         for r in o.select("o_custkey").distinct().limit(20).collect()
     ]
     full = current_state_table(spark, state)
-    n_all_files = len(full.inputFiles())
-    for k in keys:
-        probe = current_state_lookup(spark, state, {"o_custkey": k})
+    stored = statestore.read_state(spark, state)
+    bucket_dirs = {
+        os.path.dirname(p) for p in glob.glob(f"{state}/data/__bucket=*/*.parquet")
+    }
+    assert len(bucket_dirs) > 1  # deleting the other buckets removes data
+    for i, k in enumerate(keys):
         want = sorted(map(tuple, full.filter(F.col("o_custkey") == k).collect()))
-        got = sorted(map(tuple, probe.collect()))
+        (b,) = {r["__bucket"] for r in stored.filter(F.col("o_custkey") == k).collect()}
+        pruned = str(tmp_path / f"pruned{i}")
+        shutil.copytree(state, pruned)
+        for f in glob.glob(f"{pruned}/data/__bucket=*/*.parquet"):
+            if f.split("__bucket=")[1].split("/")[0] != str(b):
+                os.remove(f)
+        got = sorted(map(tuple, current_state_lookup(spark, pruned, {"o_custkey": k}).collect()))
         assert got == want and len(got) == 1
-        # manifest pruning: the scan's file list is ONE bucket's files —
-        # pruned before Spark ever lists a file, stronger than a
-        # partition filter
-        files = probe.inputFiles()
-        dirs = {f.split("__bucket=")[1].split("/")[0] for f in files}
-        assert len(dirs) == 1
-        assert len(files) < n_all_files
 
     # multi-key maintainer: same shared-expression discipline
     state2 = str(tmp_path / "cur2")
@@ -751,6 +768,129 @@ def test_current_state_lookup_prunes_to_one_bucket(spark, tmp_path):
     assert len(got) == 1 and got[0]["o_orderkey"] == r0["o_orderkey"]
 
 
+def test_current_state_lookup_launches_no_spark_job(spark, tmp_path):
+    """Lookups on a ``long`` key and on a ``string`` key are served on
+    the driver: the lookup and its collect launch 0 Spark jobs, and each
+    returns the full-table filter's rows at the table's schema, for
+    present, absent and NULL keys."""
+    from leftshove_spark.streaming import (
+        current_state_lookup,
+        current_state_table,
+        maintain_current_state,
+    )
+
+    rows = [
+        (i, f"s{i}", datetime(2030, 1, 1, 0, 0, i % 60, 250000),
+         [i, -i], {"a": i}, ("x", i), "2030-01-01")
+        for i in range(60)
+    ]
+    schema = ("k long, s string, ts timestamp, arr array<int>, "
+              "m map<string,int>, st struct<a: string, b: int>, d string")
+    df = spark.createDataFrame(rows + [(None,) * 6 + ("2030-01-01",)], schema)
+    for key, probes in (("k", [0, 17, 59, 1000, None]), ("s", ["s3", "s59", "", "nope", None])):
+        state = str(tmp_path / f"by_{key}")
+        maintain_current_state(spark, state, df, key, "d", n_buckets=4)
+        full = current_state_table(spark, state)
+        for v in probes:
+            probe, jobs = _jobs_during(
+                spark, f"w25-census-{key}-{v}",
+                lambda: current_state_lookup(spark, state, {key: v}, n_buckets=4),
+            )
+            got, collect_jobs = _jobs_during(
+                spark, f"w25-census-collect-{key}-{v}", probe.collect
+            )
+            assert jobs == [] and collect_jobs == [], (key, v)
+            cond = F.col(key).isNull() if v is None else F.col(key) == v
+            want = full.filter(cond).collect()
+            assert sorted(map(str, got)) == sorted(map(str, want)), (key, v)
+            assert probe.schema == full.schema
+
+
+def test_current_state_lookup_on_driver_conforms_evolved_files(spark, tmp_path):
+    """A fold rewrites only the buckets it touches, so after a batch
+    that adds a column and widens another, untouched buckets still hold
+    files at the old schema. The driver read conforms them as Spark's
+    read does: the added column reads NULL, the widened one up-casts,
+    and every lookup launches no job and equals the full-table filter."""
+    from leftshove_spark.streaming import (
+        current_state_lookup,
+        current_state_table,
+        maintain_current_state,
+    )
+
+    state = str(tmp_path / "cur")
+    b1 = spark.createDataFrame(
+        [(k, k * 10, "2030-01-01") for k in range(40)], "k long, v int, d string"
+    )
+    maintain_current_state(spark, state, b1, "k", "d", n_buckets=8)
+    b2 = spark.createDataFrame(
+        [(3, 1 << 40, "2030-02-01", "new")], "k long, v long, d string, w string"
+    )
+    maintain_current_state(spark, state, b2, "k", "d", n_buckets=8)
+    full = current_state_table(spark, state)
+    assert full.schema["v"].dataType.simpleString() == "bigint"
+    for k in range(40):
+        got, jobs = _jobs_during(
+            spark, f"w25-evolved-{k}",
+            lambda: current_state_lookup(spark, state, {"k": k}, n_buckets=8).collect(),
+        )
+        assert jobs == [], k
+        assert got == full.filter(F.col("k") == k).collect(), k
+    (row,) = current_state_lookup(spark, state, {"k": 3}, n_buckets=8).collect()
+    assert (row["v"], row["w"]) == (1 << 40, "new")
+
+
+def test_driver_bucket_matches_bucket_expr(spark):
+    """The driver's bucket (``_driver_key_parts`` then
+    ``statestore.bucket_of``) equals Spark's ``bucket_expr`` over the
+    stored columns for seeded byte/short/int/long values (negatives,
+    min and max), strings (empty, non-ASCII, one holding the 0x1f
+    separator), NULL parts and multi-key tuples."""
+    import random
+
+    from pyspark.sql import types as T
+
+    from leftshove_spark import statestore
+    from leftshove_spark.streaming import _driver_key_parts
+
+    rng = random.Random(8)
+    bits = {"b": 8, "s": 16, "i": 32, "l": 64}
+    strings = ["", "a", "é", "日本語", "naïve\x1fsep", "\x1f", "tab\tnl\n", "🙂"]
+    rows = []
+    for n in range(200):
+        row = []
+        for c, w in bits.items():
+            lo, hi = -(1 << (w - 1)), (1 << (w - 1)) - 1
+            edge = [lo, hi, lo + 1, hi - 1, 0, -1, 1]
+            row.append(edge[n] if n < len(edge) else rng.randint(lo, hi))
+        row.append(strings[n % len(strings)] + ("" if n < len(strings) else str(rng.random())))
+        if n % 11 == 10:
+            row[n % 5] = None  # a NULL part
+        rows.append(tuple(row))
+    schema = "b tinyint, s smallint, i int, l bigint, t string"
+    df = spark.createDataFrame(rows, schema)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    assert isinstance(types["b"], T.ByteType) and isinstance(types["s"], T.ShortType)
+    key_sets = [["b"], ["s"], ["i"], ["l"], ["t"], ["i", "t"], ["t", "l", "b"],
+                ["b", "s", "i", "l", "t"]]
+    for n_buckets in (16, 7):
+        got = df.select(
+            *[
+                statestore.bucket_expr(
+                    [F.col(c).cast("string") for c in ks], n_buckets
+                ).alias("|".join(ks))
+                for ks in key_sets
+            ]
+        ).collect()
+        for row, spark_row in zip(rows, got):
+            named = dict(zip(["b", "s", "i", "l", "t"], row))
+            for ks in key_sets:
+                parts = _driver_key_parts({c: named[c] for c in ks}, types)
+                assert parts is not None, (ks, row)
+                want = spark_row["|".join(ks)]
+                assert statestore.bucket_of(parts, n_buckets) == want, (ks, row)
+
+
 def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
     """ADVICE r11: the lookup's bucket hash must be byte-identical to
     the maintainer's ``crc32(concat_ws(cast(k as string)))`` for EVERY
@@ -758,8 +898,13 @@ def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
     booleans (``True`` vs ``true``), floats near the scientific-
     notation switch, and sub-second timestamps, silently probing the
     wrong bucket (an existing key looked absent). Each probe must
-    return exactly the full-table filter's row."""
+    return exactly the full-table filter's row. Only an ``int`` on an
+    integral column and a ``str`` on a string column are served on the
+    driver; every other key type, and a Python value whose type does not
+    match the column (``5.0`` or ``True`` on a ``long``), takes the
+    Spark path, which launches jobs."""
     from datetime import datetime
+    from decimal import Decimal
 
     from leftshove_spark.streaming import (
         current_state_lookup,
@@ -768,16 +913,16 @@ def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
     )
 
     cases = [
-        # (schema, rows, probes) — probes list (key_value, n_expected)
+        # (schema, rows, probes) — probes list (key_value, n_expected, on_driver)
         (
             "k boolean, d string, v long",
             [(True, "2030-01-01", 1), (False, "2030-01-01", 2)],
-            [(True, 1), (False, 1)],
+            [(True, 1, False), (False, 1, False)],
         ),
         (
             "k double, d string, v long",
             [(0.1, "2030-01-01", 1), (1e16, "2030-01-01", 2), (0.5, "2030-01-01", 3)],
-            [(0.1, 1), (1e16, 1), (0.5, 1), (2.5, 0)],
+            [(0.1, 1, False), (1e16, 1, False), (0.5, 1, False), (2.5, 0, False)],
         ),
         # float32: ADVICE r12 — the ROW filter (not just the bucket
         # hash) must cast the literal, or the column widens to double
@@ -785,7 +930,7 @@ def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
         (
             "k float, d string, v long",
             [(0.1, "2030-01-01", 1), (2.7, "2030-01-01", 2), (0.5, "2030-01-01", 3)],
-            [(0.1, 1), (2.7, 1), (0.5, 1), (9.9, 0)],
+            [(0.1, 1, False), (2.7, 1, False), (0.5, 1, False), (9.9, 0, False)],
         ),
         (
             "k timestamp, d string, v long",
@@ -794,14 +939,27 @@ def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
                 (datetime(2030, 1, 2, 0, 0, 0), "2030-01-01", 2),
             ],
             [
-                (datetime(2030, 1, 1, 12, 0, 0, 500000), 1),
-                (datetime(2030, 1, 2, 0, 0, 0), 1),
+                (datetime(2030, 1, 1, 12, 0, 0, 500000), 1, False),
+                (datetime(2030, 1, 2, 0, 0, 0), 1, False),
             ],
+        ),
+        # decimal renders its scale ("1.10"), which str(Decimal("1.1")) does not
+        (
+            "k decimal(12,2), d string, v long",
+            [(Decimal("1.10"), "2030-01-01", 1), (Decimal("-3.00"), "2030-01-01", 2)],
+            [(Decimal("1.1"), 1, False), (Decimal("1.10"), 1, False),
+             (Decimal("-3"), 1, False), (Decimal("2.00"), 0, False)],
         ),
         (
             "k string, d string, v long",
             [("a", "2030-01-01", 1), (None, "2030-01-01", 2)],
-            [("a", 1), (None, 1)],
+            [("a", 1, True), (None, 1, True)],
+        ),
+        # mismatched Python values on a long column go through Spark's cast
+        (
+            "k long, d string, v long",
+            [(1, "2030-01-01", 1), (5, "2030-01-01", 2)],
+            [(5.0, 1, False), (True, 1, False), (5, 1, True), (1, 1, True)],
         ),
     ]
     for i, (schema, rows, probes) in enumerate(cases):
@@ -811,8 +969,12 @@ def test_current_state_lookup_key_type_fidelity(spark, tmp_path):
         )
         full = current_state_table(spark, state)
         ktype = full.schema["k"].dataType
-        for kv, n in probes:
-            got = current_state_lookup(spark, state, {"k": kv}).collect()
+        for kv, n, on_driver in probes:
+            got, jobs = _jobs_during(
+                spark, f"w25-fidelity-{i}-{kv!r}",
+                lambda: current_state_lookup(spark, state, {"k": kv}).collect(),
+            )
+            assert (jobs == []) == on_driver, f"{schema}: key {kv!r} launched {jobs}"
             # the reference filter casts the literal too — comparing a
             # float32 column against an uncast double literal misses
             cond = (
