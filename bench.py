@@ -106,12 +106,13 @@ HEADLINE = [
     # real tokenizer ships. Training is memoized module state, so the
     # warmup pass pays it once and the timed rounds measure inference.
     "x_bpe_50k_vocab",
-    # r13: the config-driven pipeline runner priced end-to-end — a
+    # the config-driven pipeline runner priced end-to-end — a
     # four-stage declarative spec (quality gate → exact dedup →
-    # decontaminate → hash split) driven as ONE fused plan
-    # (count_stages=False, the production mode). Composition overhead
-    # should be ~the sum of its stages; this row is where drift in
-    # that claim would show up.
+    # decontaminate → hash split) built as run_pipeline's one plan
+    # with count_stages=False (no observers, no action of its own):
+    # one scan, the stages filtering in place, and one exchange for
+    # the dedup window. Composition overhead should be ~the sum of its
+    # stages; this row is where drift in that claim would show up.
     "x_pipeline_curation",
     # r15: ONE new row, prior rows untouched for comparability — the
     # K20 small-file maintenance path priced end-to-end (W25 folds +

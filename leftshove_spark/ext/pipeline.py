@@ -716,48 +716,82 @@ def mixture_sample(
     map-side hash filter — the corpus itself NEVER shuffles. With
     explicit ``targets``, sources absent from the dict get weight 0
     (dropped), matching curation configs that whitelist domains."""
-    counts = df.groupBy(F.col(source_col).alias("s")).agg(
-        F.count(F.lit(1)).alias("n_s")
+    return _with_rate(
+        accept_at_source_rate(
+            df, mixture_rates(df, source_col, targets), source_col, id_col
+        ),
+        id_col,
+        source_col,
     )
+
+
+def mixture_rates(
+    df: DataFrame, source_col: str, targets: dict[str, float] | None = None
+) -> DataFrame:
+    """:func:`mixture_sample`'s ``(s, rate)`` acceptance table."""
+    n_s = F.col("n_s").cast("double")
     if targets is None:
         # uniform over observed sources: k·w_s/n_s reduces to min(n)/n_s
-        mn = counts.agg(F.min("n_s").alias("mn")).withColumn("j", F.lit(1))
-        rates = (
-            counts.withColumn("j", F.lit(1))
-            .join(F.broadcast(mn), "j")
-            .select(
-                "s",
-                F.least(
-                    F.lit(1.0), F.col("mn").cast("double") / F.col("n_s").cast("double")
-                ).alias("rate"),
-            )
+        counts = _beside_min(_source_counts(df, source_col), F.col("n_s"), "mn")
+        return counts.select(
+            "s", F.least(F.lit(1.0), F.col("mn").cast("double") / n_s).alias("rate")
         )
-    else:
-        w = F.lit(0.0)
-        for s, ws in targets.items():
-            w = F.when(F.col("s") == s, F.lit(float(ws))).otherwise(w)
-        wn = counts.withColumn("w", w)
-        k = (
-            wn.filter(F.col("w") > 0)
-            .agg(F.min(F.col("n_s").cast("double") / F.col("w")).alias("k"))
-            .withColumn("j", F.lit(1))
-        )
-        rates = (
-            wn.withColumn("j", F.lit(1))
-            .join(F.broadcast(k), "j")
-            .select(
-                "s",
-                F.when(F.col("w") > 0, F.least(
-                    F.lit(1.0),
-                    F.col("k") * F.col("w") / F.col("n_s").cast("double"),
-                )).otherwise(F.lit(0.0)).alias("rate"),
-            )
-        )
+    w = F.lit(0.0)
+    for s, ws in targets.items():
+        w = F.when(F.col("s") == s, F.lit(float(ws))).otherwise(w)
+    # k = min over weighted sources of n_s/w_s (NULL for an unweighted
+    # source, which min skips)
+    wn = _source_counts(df, source_col).withColumn("w", w)
+    k = F.when(F.col("w") > 0, n_s / F.col("w"))
+    return _beside_min(wn, k, "k").select(
+        "s",
+        F.when(F.col("w") > 0, F.least(
+            F.lit(1.0), F.col("k") * F.col("w") / n_s,
+        )).otherwise(F.lit(0.0)).alias("rate"),
+    )
+
+
+def _source_counts(df: DataFrame, source_col: str) -> DataFrame:
+    """``(s, n_s)``: rows per source, one |sources|-row aggregation."""
+    return df.groupBy(F.col(source_col).alias("s")).agg(
+        F.count(F.lit(1)).alias("n_s")
+    )
+
+
+def _beside_min(rows: DataFrame, value: Column, name: str) -> DataFrame:
+    """Every row of the |sources|-row frame ``rows`` with the minimum of
+    ``value`` over all of them as ``name``. The rows are gathered into
+    one list beside the min (partial aggregates into one partition) and
+    exploded back, so ``rows`` — and the input under it — is computed
+    once, not once more for a separate min joined back."""
+    return rows.agg(
+        F.collect_list(F.struct(*rows.columns)).alias("__rows"),
+        F.min(value).alias(name),
+    ).select(F.inline("__rows"), name)
+
+
+def accept_at_source_rate(
+    df: DataFrame, rates: DataFrame, source_col: str, id_col: str
+) -> DataFrame:
+    """The rows of ``df`` a mixture sample accepts, as ``df``'s own
+    columns plus ``__mix_rate``: the |sources|-row ``(s, rate)`` table
+    joins by broadcast and a row is kept when the salted md5 bucket of
+    its id falls under ``rate · SPLIT_BUCKETS`` — a map-side filter,
+    the corpus never shuffles. A NULL or unrated source is dropped."""
+    r = rates.select(
+        F.col("s").alias("__mix_s"), F.col("rate").alias("__mix_rate")
+    )
     b = _bucket(id_col, "mix:")
     return (
-        df.join(F.broadcast(rates), df[source_col] == F.col("s"))
-        .filter(b < F.floor(F.col("rate") * SPLIT_BUCKETS).cast("long"))
-        .select(F.col(id_col), F.col(source_col), F.col("rate"))
+        df.join(F.broadcast(r), F.col(source_col) == F.col("__mix_s"))
+        .filter(b < F.floor(F.col("__mix_rate") * SPLIT_BUCKETS).cast("long"))
+        .drop("__mix_s")
+    )
+
+
+def _with_rate(accepted: DataFrame, id_col: str, source_col: str) -> DataFrame:
+    return accepted.select(
+        F.col(id_col), F.col(source_col), F.col("__mix_rate").alias("rate")
     )
 
 
@@ -1003,26 +1037,24 @@ def temperature_mixture_sample(
     acceptance is a pure function of md5(id) at the scan — the corpus
     never shuffles, and the sample is stable under retries, appends
     and repartitioning."""
-    counts = df.groupBy(F.col(source_col).alias("s")).agg(
-        F.count(F.lit(1)).alias("n_s")
+    return _with_rate(
+        accept_at_source_rate(
+            df, temperature_rates(df, source_col, alpha), source_col, id_col
+        ),
+        id_col,
+        source_col,
     )
-    mn = counts.agg(F.min("n_s").alias("mn")).withColumn("j", F.lit(1))
+
+
+def temperature_rates(df: DataFrame, source_col: str, alpha: float) -> DataFrame:
+    """:func:`temperature_mixture_sample`'s ``(s, rate)`` acceptance table."""
     ratio = F.col("mn").cast("double") / F.col("n_s").cast("double")
     if alpha == 0.5:
         rate = F.least(F.lit(1.0), F.sqrt(ratio))
     else:
         rate = F.least(F.lit(1.0), F.pow(ratio, F.lit(1.0 - float(alpha))))
-    rates = (
-        counts.withColumn("j", F.lit(1))
-        .join(F.broadcast(mn), "j")
-        .select("s", rate.alias("rate"))
-    )
-    b = _bucket(id_col, "mix:")
-    return (
-        df.join(F.broadcast(rates), df[source_col] == F.col("s"))
-        .filter(b < F.floor(F.col("rate") * SPLIT_BUCKETS).cast("long"))
-        .select(F.col(id_col), F.col(source_col), F.col("rate"))
-    )
+    counts = _beside_min(_source_counts(df, source_col), F.col("n_s"), "mn")
+    return counts.select("s", rate.alias("rate"))
 
 
 # --------------------------------------------------------- repetition flags
@@ -1502,32 +1534,6 @@ def interleave_sources(
     )
     return exact_global_rank(
         keyed, ["vft", source_col, id_col], rank_col=pos_col
-    )
-
-
-def merge_fingerprints(
-    fps: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Fold shard-level :func:`dataset_fingerprint` rows into the
-    fingerprint of the combined corpus WITHOUT rescanning any shard —
-    every component is an associative aggregate (sums re-summed in
-    DECIMAL(38,0), XORs re-XORed, min/max re-extremed), so per-shard /
-    per-day fingerprints stored as accounting rows compose upward
-    exactly: merge(fp(A), fp(B)) ≡ fp(A ∪ B), pytest-pinned. Input
-    rows must be DISJOINT shards (a multiset union — double-merging a
-    shard double-counts it, by design: the sum component is exactly
-    what catches duplicated shards)."""
-    gcols = list(group_cols or [])
-    grouped = fps.groupBy(*gcols) if gcols else fps.groupBy()
-    return grouped.agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.sum(F.col("content_sum").cast("decimal(38,0)"))
-        .cast("string")
-        .alias("content_sum"),
-        F.bit_xor("content_xor").alias("content_xor"),
-        F.min("id_hash_min").alias("id_hash_min"),
-        F.max("id_hash_max").alias("id_hash_max"),
     )
 
 

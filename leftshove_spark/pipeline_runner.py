@@ -16,14 +16,21 @@ ad-hoc script.
          "group_cols": "source", "weight_col": "n_chars"},
     ]
     result = run_pipeline(spark, docs, spec)
-    result.df            # the composed frame (lazy — one plan)
-    result.counts        # per-stage row accounting (forced)
+    result.df            # the one composed plan, pinned and counted once
+    result.counts        # rows per stage, observed during that count
+
+With ``count_stages=False`` the runner builds the same plan and runs
+no action of its own: ``result.df`` executes on the caller's first
+action and ``result.counts`` is empty.
 
 Every stage maps onto an operator that is individually oracled or
 pytest-pinned; the runner adds only composition and accounting, no new
 semantics. Stages are applied in list order; each receives the prior
-stage's frame. Unknown ops or parameters fail fast with the available
-choices — config errors must not become silent no-ops at 100 TB.
+stage's frame and, where it can, filters that frame in place rather
+than joining a picked-id set back onto it (a join-back re-runs the
+whole upstream on both join sides). Unknown ops or parameters fail
+fast with the available choices — config errors must not become
+silent no-ops at 100 TB.
 """
 
 from __future__ import annotations
@@ -39,6 +46,18 @@ from pyspark.sql import functions as F
 # signatures, so a typo'd parameter is a config error caught before
 # anything runs, while a TypeError raised inside an operator surfaces
 # as the implementation error it is.
+
+
+def _range_summary_input(df):
+    """Pin (lazily) the input of a stage whose operator ranks rows
+    globally. Its range-summary job runs Spark's range partitioner,
+    which reads its input twice, a sampling pass and then the shuffle,
+    and the stage reads the input once more for its result. Unpinned,
+    each of those reads re-runs the whole upstream, and every row-count
+    observer upstream adds its rows once per run."""
+    from .ext.cache import pin
+
+    return pin(df)
 
 
 def _stage_quality_filter(
@@ -131,6 +150,8 @@ def _stage_decontaminate_semantic(
     ``embeddings`` maps the pipeline's docs to vectors (join on
     id_col = emb_id_col); ``benchmark_emb`` is the eval set's
     embedding relation (small — broadcast by the operator)."""
+    # join-back: the vectors live in a separate relation keyed by id,
+    # not on the stage's rows
     from .ext.pipeline import decontaminate_semantic
 
     corpus_emb = embeddings.join(
@@ -150,18 +171,25 @@ def _stage_decontaminate_semantic(
 def _stage_outlier_gate(
     spark, df, *, value_col="n_chars", group_cols=("lang",), c_num=3, c_den=1
 ):
+    # Filter-in-place: mad_outliers' windows run over the stage's own
+    # rows (one group-key exchange) and the flag filters them; a NULL
+    # flag (NULL value) keeps the row. The operator's working columns
+    # are dropped again, so an input column of the same name would be
+    # lost: refuse it.
     from .operators.analytic import mad_outliers
 
+    work = ["__v", "med", "abs_dev", "mad", "is_outlier"]
+    if clash := set(work) & set(df.columns):
+        raise ValueError(f"outlier_gate: input columns {sorted(clash)} clash")
     gcols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     flags = mad_outliers(
-        df.select("doc_id", *gcols, F.col(value_col).cast("long").alias("__v")),
+        df.withColumn("__v", F.col(value_col).cast("long")),
         "__v",
         gcols,
         c_num=c_num,
         c_den=c_den,
     )
-    drop = flags.filter(F.col("is_outlier")).select("doc_id")
-    return df.join(drop, "doc_id", "left_anti")
+    return flags.filter(~F.coalesce("is_outlier", F.lit(False))).drop(*work)
 
 
 def _stage_pii_redact(spark, df, *, text_col="text"):
@@ -190,10 +218,10 @@ def _stage_split_by_component(
 def _stage_mixture_sample(
     spark, df, *, source_col="source", id_col="doc_id", targets=None
 ):
-    from .ext.pipeline import mixture_sample
+    from .ext.pipeline import accept_at_source_rate, mixture_rates
 
-    picked = mixture_sample(df, source_col, id_col, targets).select(id_col)
-    return df.join(picked, id_col)
+    rates = mixture_rates(df, source_col, targets)
+    return accept_at_source_rate(df, rates, source_col, id_col).drop("__mix_rate")
 
 
 def _stage_token_budget_cap(
@@ -206,8 +234,11 @@ def _stage_token_budget_cap(
 
 
 def _stage_weighted_sample(spark, df, *, k, weight_col, id_col="doc_id"):
+    # join-back: a row's stride membership depends on the cumulative
+    # weight of every row before it in id order
     from .ext.pipeline import weighted_systematic_sample
 
+    df = _range_summary_input(df)
     picked = weighted_systematic_sample(df, k, weight_col, id_col).select(id_col)
     return df.join(picked, id_col)
 
@@ -242,17 +273,20 @@ def _stage_substring_redact(
 def _stage_temperature_mixture(
     spark, df, *, source_col="source", id_col="doc_id", alpha=0.5
 ):
-    from .ext.pipeline import temperature_mixture_sample
+    from .ext.pipeline import accept_at_source_rate, temperature_rates
 
-    picked = temperature_mixture_sample(df, source_col, id_col, alpha).select(id_col)
-    return df.join(picked, id_col)
+    rates = temperature_rates(df, source_col, alpha)
+    return accept_at_source_rate(df, rates, source_col, id_col).drop("__mix_rate")
 
 
 def _stage_dsir_sample(
     spark, df, *, target, k, text_col="text", id_col="doc_id", n_buckets=4096
 ):
+    # join-back: the k picks are a weighted systematic sample over the
+    # importance scores of the whole stage input
     from .ext.pipeline import dsir_sample
 
+    df = _range_summary_input(df)
     picked = dsir_sample(
         df, target, k, text_col=text_col, id_col=id_col, n_buckets=n_buckets
     ).select(id_col)
@@ -266,7 +300,8 @@ def _stage_lm_quality_gate(
     # CCNet-style quality gate: keep documents whose perplexity proxy
     # under the reference bigram model clears the threshold. Docs with
     # < 2 tokens carry a NULL proxy — dropped by default (no evidence
-    # of quality), kept when keep_short is set.
+    # of quality), kept when keep_short is set. Join-back: the score is
+    # an aggregation by id over the doc's exploded bigrams.
     from .ext.pipeline import lm_quality_score
 
     scored = lm_quality_score(
@@ -289,7 +324,9 @@ def _stage_interleave(
     # ordering by pos_col tolerate)
     from .ext.pipeline import interleave_sources
 
-    return interleave_sources(df, weights, source_col, id_col, pos_col)
+    return interleave_sources(
+        _range_summary_input(df), weights, source_col, id_col, pos_col
+    )
 
 
 def _stage_fingerprint(
@@ -321,15 +358,16 @@ def _stage_bpe_annotate(
     (``token_budget_cap`` with ``weight_col="n_tokens_bpe"``,
     ``mixture_sample``) then run on counts matching what the real
     tokenizer will emit, not the regex proxy."""
-    from .ext.text import bpe_token_counts, load_merges_file
+    from .ext.text import bpe_counts_col, load_merges_file
 
     if (merges_path is None) == (merges is None):
         raise ValueError(
             "bpe_annotate needs exactly one of merges_path / merges"
         )
     table = load_merges_file(merges_path) if merges_path else list(merges)
-    counts = bpe_token_counts(df, table, text_col, id_col)
-    return df.join(counts, id_col)
+    return df.withColumn("__bpe", bpe_counts_col(text_col, table)).select(
+        "*", "__bpe.*"
+    ).drop("__bpe")
 
 
 # Stages whose wrapper returns (frame, artifact) instead of a frame:
@@ -374,23 +412,29 @@ def run_pipeline(
     *,
     count_stages: bool = True,
 ) -> PipelineResult:
-    """Apply ``spec``'s stages in order; returns the composed frame and
-    (when ``count_stages``) per-stage row accounting keyed
-    ``<idx>_<op>`` plus ``ingested``.
+    """Apply ``spec``'s stages in order to build ONE composed plan;
+    returns its frame and, when ``count_stages``, per-stage row
+    accounting keyed ``<idx>_<op>`` plus ``ingested``.
 
-    Counting mode persists each stage's frame (via the engine's pin
-    registry — ``ext.cache.release_pins()`` frees everything) before
-    counting and unpersists its predecessor once consumed, so an
-    n-stage pipeline executes each stage ONCE (a naive count-per-stage
-    re-executes the whole uncached prefix per count — O(n²) stage
-    executions); the final frame stays pinned for the caller. Turn
-    counting off for one fused lazy plan in production and read the
-    counts from the sink instead.
+    ``count_stages=True`` (the default) attaches a row-count
+    ``Observation`` to the input and to every stage's output, pins the
+    final frame (via the engine's pin registry —
+    ``ext.cache.release_pins()`` frees it) and runs ONE ``count()`` on
+    it: every stage executes once, inside that job, and reports its
+    rows as it goes. Stage operators that run jobs of their own while
+    the plan is built (near_dedup's signature pin, the range summary of
+    weighted_sample, dsir_sample and interleave) fire the observers
+    upstream of them first, with the same full counts: an observer
+    reports the first action that runs it, so every one must run each
+    upstream row once, which is why the range-summary stages pin their
+    input. ``count_stages=False`` builds the same plan with no
+    observers and runs no action of its own: the caller's action (a
+    write, say) executes it.
 
     ``docs`` must carry a non-null ``doc_id``: stages that filter in
-    place (quality, decontaminate) read only the text, while the
-    sampling and join stages key on ``doc_id``, so a NULL-id row is
-    kept or dropped by rules no stage promises.
+    place read only their own columns, while the sampling and join
+    stages key on ``doc_id``, so a NULL-id row is kept or dropped by
+    rules no stage promises.
 
     Stage parameters are validated against the operator's signature
     BEFORE the call, so a config typo reports as a config error while
@@ -398,11 +442,18 @@ def run_pipeline(
     implementation error it is."""
     import inspect
 
-    counts: dict[str, int] = {}
+    from pyspark.sql import Observation
+
+    observers: dict[str, Observation] = {}
+
+    def observed(df: DataFrame, key: str) -> DataFrame:
+        if not count_stages:
+            return df
+        observers[key] = Observation()
+        return df.observe(observers[key], F.count(F.lit(1)).alias("rows"))
+
     artifacts: dict[str, DataFrame] = {}
-    if count_stages:
-        counts["ingested"] = docs.count()
-    out, prev_cached = docs, None
+    out = observed(docs, "ingested")
     for i, stage in enumerate(spec):
         stage = dict(stage)
         try:
@@ -425,12 +476,11 @@ def run_pipeline(
             out, artifacts[op] = fn(spark, out, **stage)
         else:
             out = fn(spark, out, **stage)
-        if count_stages:
-            from .ext.cache import pin
+        out = observed(out, f"{i}_{op}")
+    if count_stages:
+        from .ext.cache import pin
 
-            out = pin(out)
-            counts[f"{i}_{op}"] = out.count()
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = out
+        out = pin(out)
+        out.count()
+    counts = {key: obs.get["rows"] for key, obs in observers.items()}
     return PipelineResult(df=out, counts=counts, artifacts=artifacts)

@@ -4435,15 +4435,17 @@ def x_pipeline_curation(spark: SparkSession, sf: str) -> DataFrame:
     the stage decides something) → n-gram eval decontamination →
     deterministic hash split — runs through
     :func:`pipeline_runner.run_pipeline` with ``count_stages=False``
-    (ONE fused lazy plan, the production mode), and the oracle replays
-    the full composition as chained CTEs built from the four stages'
+    (its one plan, lazy, no observers), and the oracle replays the full
+    composition as chained CTEs built from the four stages'
     individually-certified SQL twins. What this adds over the
     per-stage rows: the RUNNER's composition semantics (stage order,
     frame threading, config binding) are what the driver hashes, not
-    just each operator in isolation. Plan: all-codegen projections +
-    three hash joins + one broadcast anti-join — no new shuffle class;
-    at 100 TB every stage keeps its own audited envelope (the runner
-    adds no execution machinery of its own)."""
+    just each operator in isolation. Plan: the corpus scanned once per
+    union branch, the quality and decontamination
+    stages as Arrow filters on it, and one exchange for the dedup
+    stage's min-id window — no join; at 100 TB every stage keeps its
+    own audited envelope (the runner adds no execution machinery of
+    its own)."""
     from .pipeline_runner import run_pipeline
 
     docs = load_table(spark, sf, "documents")

@@ -46,34 +46,6 @@ def write_json_lines(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    *,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed external table — the 100 TB CO-LOCATED JOIN primitive.
-
-    ``bucketBy(n, key)`` hash-partitions FILES by key at write time; two
-    tables bucketed on the same key with the same bucket count join with
-    ZERO exchange on either side (Catalyst proves the partitioning
-    matches — the shuffle is paid once at write, amortized over every
-    subsequent join/agg on that key). ``sortBy`` additionally pre-sorts
-    within buckets so sort-merge joins skip their sort. This is the
-    Spark analog of the co-located table layout the reference's
-    warehouse targets (BigQuery clustering, bigquery.go:217-250 S4) —
-    proven shuffle-free in tests/test_scale_ops.py by plan inspection.
-    """
-    w = df.write.mode(mode).option("path", path).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def write_clustered(
     df: DataFrame,
     path: str,

@@ -228,57 +228,3 @@ def read_jdbc_window(
     if fetchsize is not None:
         reader = reader.option("fetchsize", str(int(fetchsize)))
     return reader.load()
-
-
-def parquet_manifest(path: str, columns: list[str] | None = None) -> list[dict]:
-    """Per-file statistics manifest of a parquet directory, read from
-    footers via pyarrow — NO Spark jobs, so it is a driver-side ops
-    tool (the observability half of the layout writers: verify that
-    write_clustered/write_zordered produced tight per-file ranges, size
-    a compaction, audit a vacuum). Returns one dict per data file:
-    ``{file, rows, bytes, stats: {col: (min, max, null_count)}}``,
-    stats aggregated over the file's row groups for the requested
-    columns (all leaf columns when None).
-
-    At 100 TB the footer reads parallelize trivially (they are
-    O(files) metadata fetches); on object stores batch them or read
-    the table format's manifest instead — same shape."""
-    out: list[dict] = []
-    for dp, dns, fs in os.walk(path):
-        dns[:] = [d for d in dns if not d.startswith(("_", "."))]
-        for f in sorted(fs):
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(dp, f)
-            md = pq.ParquetFile(fp).metadata
-            names = [md.schema.column(i).path for i in range(md.num_columns)]
-            want = set(columns) if columns is not None else set(names)
-            stats: dict[str, tuple] = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for i in range(g.num_columns):
-                    name = names[i]
-                    if name not in want:
-                        continue
-                    st = g.column(i).statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    prev = stats.get(name)
-                    nulls = st.null_count if st.null_count is not None else 0
-                    if prev is None:
-                        stats[name] = (st.min, st.max, nulls)
-                    else:
-                        stats[name] = (
-                            min(prev[0], st.min),
-                            max(prev[1], st.max),
-                            prev[2] + nulls,
-                        )
-            out.append(
-                {
-                    "file": fp,
-                    "rows": md.num_rows,
-                    "bytes": os.path.getsize(fp),
-                    "stats": stats,
-                }
-            )
-    return out

@@ -1351,31 +1351,52 @@ def _arrow_readable(dt) -> bool:
     )
 
 
-def _same_clock(at, dt) -> bool:
+def _same_clock(at, dt, ft=None) -> bool:
     """Whether a file's Arrow type ``at`` stores timestamps the way the
     read type ``dt`` reads them, at every depth: an instant (tz-aware,
     as TIMESTAMP_MICROS is written) for TIMESTAMP, a wall clock (naive)
-    for TIMESTAMP_NTZ. A naive TIMESTAMP (legacy INT96) is not, because
-    Arrow's conversion would localize it, so such a read stays on
-    Spark."""
+    for TIMESTAMP_NTZ. A naive value read as TIMESTAMP is an instant
+    only when ``ft``, the type Spark wrote the file's column as, says
+    TIMESTAMP: Spark writes INT96 (its default output type) as a naive
+    UTC instant. Without that record the read stays on Spark."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
     if pa.types.is_timestamp(at):
-        return (at.tz is None) == isinstance(dt, T.TimestampNTZType)
+        if isinstance(dt, T.TimestampNTZType):
+            return at.tz is None
+        return at.tz is not None or isinstance(ft, T.TimestampType)
     if pa.types.is_struct(at) and isinstance(dt, StructType):
         want = {f.name: f.dataType for f in dt.fields}
+        wrote = (
+            {f.name: f.dataType for f in ft.fields}
+            if isinstance(ft, StructType) else {}
+        )
         fields = [at.field(i) for i in range(at.num_fields)]
         return all(
-            f.name not in want or _same_clock(f.type, want[f.name]) for f in fields
+            f.name not in want or _same_clock(f.type, want[f.name], wrote.get(f.name))
+            for f in fields
         )
     if pa.types.is_list(at) and isinstance(dt, T.ArrayType):
-        return _same_clock(at.value_type, dt.elementType)
-    if pa.types.is_map(at) and isinstance(dt, T.MapType):
-        return _same_clock(at.key_type, dt.keyType) and _same_clock(
-            at.item_type, dt.valueType
+        return _same_clock(
+            at.value_type, dt.elementType, getattr(ft, "elementType", None)
         )
+    if pa.types.is_map(at) and isinstance(dt, T.MapType):
+        return _same_clock(
+            at.key_type, dt.keyType, getattr(ft, "keyType", None)
+        ) and _same_clock(at.item_type, dt.valueType, getattr(ft, "valueType", None))
     return True  # any other shape mismatch fails the cast instead
+
+
+def _written_type(t, name: str):
+    """The Spark type column ``name`` of the pyarrow table ``t`` was
+    written as, from the row schema Spark stores in every parquet
+    footer it writes; None for a file another writer made."""
+    raw = (t.schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        return None
+    written = StructType.fromJson(json.loads(raw))
+    return written[name].dataType if name in written.names else None
 
 
 # Spark stamps files written in the LEGACY (Julian) calendar with these
@@ -1393,7 +1414,8 @@ def read_partition_arrow(state_dir: str, m: dict, value, row_filter):
     None when a type or a file is outside what this read renders
     exactly (:func:`_arrow_readable`, :func:`_same_clock`, a
     legacy-calendar file, a cast Arrow refuses); the caller then reads
-    with Spark."""
+    with Spark. INT96 timestamps read at microseconds, Spark's own
+    precision."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1407,7 +1429,8 @@ def read_partition_arrow(state_dir: str, m: dict, value, row_filter):
     try:
         for rel in m["files"].get(str(value), []):
             t = pq.read_table(
-                os.path.join(data, rel), filters=row_filter, partitioning=None
+                os.path.join(data, rel), filters=row_filter, partitioning=None,
+                coerce_int96_timestamp_unit="us",
             )
             if _LEGACY_CALENDAR_KEYS & set(t.schema.metadata or {}):
                 return None
@@ -1417,13 +1440,19 @@ def read_partition_arrow(state_dir: str, m: dict, value, row_filter):
                     cols.append(pa.nulls(t.num_rows, af.type))
                     continue
                 c = t.column(af.name)
-                if not _same_clock(c.type, sf.dataType):
+                if not _same_clock(c.type, sf.dataType) and not _same_clock(
+                    c.type, sf.dataType, _written_type(t, af.name)
+                ):
                     return None
                 cols.append(c.cast(af.type))
             tables.append(pa.Table.from_arrays(cols, schema=target))
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError):
         return None
-    return pa.concat_tables(tables) if tables else target.empty_table()
+    # an empty table of one empty chunk per column: createDataFrame
+    # refuses a struct-of-timestamp column with no chunks at all
+    if not any(t.num_rows for t in tables):
+        return target.empty_table()
+    return pa.concat_tables(tables)
 
 
 _SYNC_GEN_FILE = "_SYNC_GEN"

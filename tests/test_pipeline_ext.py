@@ -8,6 +8,7 @@ respects the budget, and the decontamination plan broadcasts the
 benchmark side.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from leftshove_spark.ext import pipeline as P
@@ -578,37 +579,6 @@ def test_weighted_systematic_sample_join_path_equals_tree(spark):
             ).collect()
         }
         assert tree == join, f"k={k}"
-
-
-def test_merge_fingerprints_equals_whole_corpus(spark):
-    """Shard accounting composes: fingerprint rows of disjoint shards
-    merge (sums/xors/extremes re-aggregated) into exactly the
-    fingerprint of the union — no rescan; grouped and global forms."""
-    from conftest import SF0001
-    from leftshove_spark.ext.pipeline import dataset_fingerprint, merge_fingerprints
-    from leftshove_spark.sources import load_table
-    import pyspark.sql.functions as F
-
-    docs = load_table(spark, SF0001, "documents")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-
-    merged = merge_fingerprints(
-        dataset_fingerprint(a, group_cols=["lang"]).unionByName(
-            dataset_fingerprint(b, group_cols=["lang"])
-        ),
-        ["lang"],
-    )
-    whole = dataset_fingerprint(docs, group_cols=["lang"])
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-    g = merge_fingerprints(
-        dataset_fingerprint(a).unionByName(dataset_fingerprint(b))
-    ).first()
-    w = dataset_fingerprint(docs).first()
-    assert tuple(g) == tuple(w)
 
 
 def test_weighted_systematic_sample_grouped_exact_pps(spark):
@@ -1271,3 +1241,180 @@ def test_run_pipeline_exact_dedup_stage_preserves_frame(spark):
         r["keep_id"] for r in exact_dedup(corp).collect()
     )
     assert got == want  # exactly the min-id survivors, as full rows
+
+
+def _pinned_prefix_counts(spark, docs, spec):
+    """The per-stage counts by pinning and counting every stage in
+    turn, each stage applied to the pinned output of the one before —
+    the independent expectation for run_pipeline's observed counts."""
+    from leftshove_spark.ext.cache import pin
+    from leftshove_spark.pipeline_runner import ARTIFACT_STAGES, STAGES
+
+    out = pin(docs)
+    counts = {"ingested": out.count()}
+    for i, stage in enumerate(spec):
+        params = {k: v for k, v in stage.items() if k != "op"}
+        out = STAGES[stage["op"]](spark, out, **params)
+        if stage["op"] in ARTIFACT_STAGES:
+            out = out[0]
+        out = pin(out)
+        counts[f"{i}_{stage['op']}"] = out.count()
+    return counts
+
+
+def _count_specs(spark):
+    docs = _docs(spark)
+    target = docs.filter(F.col("lang") == "en")
+    thr = float(
+        P.lm_quality_score(docs, target)
+        .agg(F.expr("percentile(ppl_proxy, 0.5)"))
+        .first()[0]
+    )
+    return {
+        # test_run_pipeline_config_equals_hand_composition's spec
+        "hand": (docs.filter(F.col("doc_id") % 97 != 0), [
+            {"op": "quality_filter", "min_tokens": 20, "min_uniq_ratio": 0.5,
+             "min_quality": 0.3},
+            {"op": "decontaminate", "benchmark": docs.filter(F.col("doc_id") % 97 == 0)},
+            {"op": "outlier_gate", "c_num": 6},
+            {"op": "hash_split"},
+            {"op": "sample_k_per_group", "group_cols": ["split", "source"], "k": 8},
+        ]),
+        # scripts/demo_pipeline.py's config pipeline
+        "demo": (docs, [
+            {"op": "substring_redact", "window": 20},
+            {"op": "lm_quality_gate", "reference": target, "max_ppl_proxy": thr,
+             "keep_short": True},
+            {"op": "temperature_mixture", "source_col": "lang"},
+            {"op": "dsir_sample", "target": target, "k": 50},
+            {"op": "fingerprint", "group_cols": ["lang"]},
+        ]),
+        # scripts/quickstart_curation.py's spec: near_dedup runs jobs of
+        # its own while the plan is built
+        "quickstart": (docs.select("doc_id", "text", "source"), [
+            {"op": "quality_filter", "min_tokens": 10},
+            {"op": "exact_dedup"},
+            {"op": "near_dedup", "jaccard_threshold": 0.6},
+            {"op": "decontaminate",
+             "benchmark": docs.filter(F.col("doc_id") < 5).select("doc_id", "text")},
+            {"op": "hash_split"},
+        ]),
+        "sampling": (docs, [
+            {"op": "bpe_annotate", "merges": [("t", "h"), ("th", "e"), ("i", "n")]},
+            {"op": "mixture_sample", "source_col": "lang"},
+            {"op": "mixture_sample", "source_col": "lang",
+             "targets": {"en": 2, "de": 1, "fr": 1}},
+            {"op": "weighted_sample", "k": 40, "weight_col": "n_chars"},
+            {"op": "token_budget_cap", "budget_per_group": 3000,
+             "group_cols": "lang", "weight_col": "n_tokens_bpe"},
+            {"op": "interleave", "source_col": "lang",
+             "weights": {"en": 2, "de": 1, "fr": 1, "es": 1, "zh": 1}},
+        ]),
+    }
+
+
+@pytest.mark.parametrize("name", ["hand", "demo", "quickstart", "sampling"])
+def test_run_pipeline_observed_counts_equal_pinned_counts(spark, name):
+    """count_stages=True observes each stage's rows on the one composed
+    plan during a single count; the counts equal pinning and counting
+    every stage in turn, including stages read on both sides of a
+    join-back or rate join and stages that run jobs of their own."""
+    from leftshove_spark.ext.cache import release_pins
+    from leftshove_spark.pipeline_runner import run_pipeline
+
+    docs, spec = _count_specs(spark)[name]
+    try:
+        want = _pinned_prefix_counts(spark, docs, spec)
+        release_pins()
+        res = run_pipeline(spark, docs, spec)
+        assert res.counts == want
+        assert list(res.counts) == list(want)  # ingested first, stage order
+        assert res.df.count() == want[f"{len(spec) - 1}_{spec[-1]['op']}"]
+    finally:
+        release_pins()
+
+
+def _last_sql_execution(spark) -> int:
+    """The id of the newest SQL execution (ids grow by one per action;
+    the status store's count stops at its retention limit)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def test_run_pipeline_counts_with_one_action(spark):
+    """Counting adds exactly one action to the uncounted build (the
+    final pinned count; weighted_sample's range summary runs in both),
+    whatever the number of stages; a stage read on both sides of a
+    join-back reports its rows once."""
+    from leftshove_spark.ext.cache import release_pins
+    from leftshove_spark.pipeline_runner import run_pipeline
+
+    docs = _docs(spark)
+    spec = [
+        {"op": "hash_split"},
+        {"op": "weighted_sample", "k": 40, "weight_col": "n_chars"},
+    ]
+    try:
+        n0 = _last_sql_execution(spark)
+        run_pipeline(spark, docs, spec, count_stages=False)
+        n1 = _last_sql_execution(spark)
+        res = run_pipeline(spark, docs, spec)
+        n2 = _last_sql_execution(spark)
+        assert n2 - n1 == n1 - n0 + 1
+        # hash_split's output feeds both sides of weighted_sample's
+        # join-back, so its observer sits in the plan more than once
+        plan = res.df._jdf.queryExecution().analyzed().toString()
+        assert plan.count("CollectMetrics") > 3
+        assert res.counts == {"ingested": 500, "0_hash_split": 500,
+                              "1_weighted_sample": res.df.count()}
+    finally:
+        release_pins()
+
+
+def test_mixture_stages_keep_duplicate_ids_once(spark):
+    """mixture_sample and temperature_mixture filter their own rows:
+    a doc_id carried by two rows yields at most those two rows (both or
+    neither — acceptance is a function of the id), where a join of the
+    picked ids back onto the input multiplied them to four. The
+    operators still return (id, source, rate) for the accepted rows."""
+    from leftshove_spark.pipeline_runner import run_pipeline
+
+    base = _docs(spark).select("doc_id", "text", "lang")
+    dup = base.unionByName(base.withColumn("text", F.concat("text", F.lit(" x"))))
+    for stage in ({"op": "mixture_sample", "source_col": "lang"},
+                  {"op": "temperature_mixture", "source_col": "lang"}):
+        out = run_pipeline(spark, dup, [stage], count_stages=False).df
+        per_id = out.groupBy("doc_id").count()
+        assert {r["count"] for r in per_id.collect()} == {2}, stage
+        assert out.columns == dup.columns
+    picked = P.temperature_mixture_sample(base, "lang")
+    assert picked.columns == ["doc_id", "lang", "rate"]
+    kept = run_pipeline(
+        spark, base, [{"op": "temperature_mixture", "source_col": "lang"}],
+        count_stages=False,
+    ).df
+    assert sorted(r[0] for r in picked.select("doc_id").collect()) == sorted(
+        r[0] for r in kept.select("doc_id").collect()
+    )
+
+
+def test_batch_mix_plan_scans_its_input_at_most_three_times(spark):
+    """The benchmark's curation spec builds one plan with no join on
+    doc_id: quality, dedup, decontaminate and the outlier gate work on
+    the stage's own rows, and temperature_mixture joins only its
+    per-source rate table, so the input file is scanned for the rows
+    and for the rate counts, not once per join-back."""
+    from perfbench.curation import spec as curation_spec
+
+    from leftshove_spark.pipeline_runner import run_pipeline
+
+    docs = _docs(spark)
+    bench = docs.filter(F.col("doc_id") % 50 == 0).select("text")
+    df = run_pipeline(spark, docs, curation_spec(bench), count_stages=False).df
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    join_keys = re.findall(r"Join \[([^\]]*)\], \[([^\]]*)\]", plan)
+    assert join_keys and not [k for k in join_keys if "doc_id" in str(k)], join_keys
+    assert 1 <= plan.count("FileScan parquet") <= 3

@@ -1,7 +1,4 @@
-"""Scale-path operators: bucketed co-located joins (plan-inspected — no
-exchange), salted joins/aggs (semantically transparent)."""
-
-import uuid
+"""Scale-path operators: salted joins/aggs (semantically transparent)."""
 
 import pytest
 from pyspark.sql import Row
@@ -9,39 +6,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF0001
 from leftshove_spark.operators import skew
-from leftshove_spark.sinks import write_bucketed
 from leftshove_spark.sources import load_table
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same key+count join with ZERO shuffle:
-    the write pays the partitioning once; every later join reuses it."""
-    o = load_table(spark, SF0001, "orders").select("o_orderkey", "o_orderpriority")
-    li = load_table(spark, SF0001, "lineitem").select("l_orderkey", "l_quantity")
-    tag = uuid.uuid4().hex[:8]
-    write_bucketed(
-        o, f"b_orders_{tag}", str(tmp_path / "o"),
-        bucket_cols=["o_orderkey"], n_buckets=8, sort_cols=["o_orderkey"],
-    )
-    write_bucketed(
-        li, f"b_lineitem_{tag}", str(tmp_path / "l"),
-        bucket_cols=["l_orderkey"], n_buckets=8, sort_cols=["l_orderkey"],
-    )
-    bo = spark.table(f"b_orders_{tag}")
-    bl = spark.table(f"b_lineitem_{tag}")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bo.join(bl, bo.o_orderkey == bl.l_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # co-located: no shuffle either side
-        # and it computes the same thing as the plain-source join
-        plain = o.join(li, o.o_orderkey == li.l_orderkey)
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS b_orders_{tag}")
-        spark.sql(f"DROP TABLE IF EXISTS b_lineitem_{tag}")
 
 
 def test_salted_join_matches_plain(spark):
@@ -125,27 +90,6 @@ def test_write_zordered_files_are_narrow_in_both_dimensions(spark, tmp_path):
     # average per-file span well under the whole domain on BOTH dims
     assert sum(u_fracs) / len(u_fracs) < 0.5, u_fracs
     assert sum(t_fracs) / len(t_fracs) < 0.5, t_fracs
-
-
-def test_parquet_manifest_reflects_clustered_layout(spark, tmp_path):
-    """The manifest (pure footer reads, no Spark jobs) exposes the
-    property clustering exists for: disjoint per-file key ranges on a
-    write_clustered output, total rows preserved, and per-file stats
-    for the requested column only."""
-    from leftshove_spark.sinks import write_clustered
-    from leftshove_spark.sources import parquet_manifest
-
-    df = spark.range(0, 10_000).selectExpr("id", "id % 97 AS k")
-    path = str(tmp_path / "c")
-    write_clustered(df, path, ["id"], n_files=8)
-
-    man = parquet_manifest(path, columns=["id"])
-    assert sum(m["rows"] for m in man) == 10_000
-    assert all(set(m["stats"]) == {"id"} for m in man)
-    spans = sorted((m["stats"]["id"][0], m["stats"]["id"][1]) for m in man)
-    for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-        assert hi1 < lo2  # disjoint ranges: the zone-map pruning property
-    assert all(m["stats"]["id"][2] == 0 for m in man)  # null counts
 
 
 def test_zorder_value_is_bijective_on_the_rank_grid(spark):

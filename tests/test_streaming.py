@@ -840,6 +840,55 @@ def test_current_state_lookup_on_driver_conforms_evolved_files(spark, tmp_path):
     assert (row["v"], row["w"]) == (1 << 40, "new")
 
 
+def test_current_state_lookup_on_driver_reads_int96_timestamps(spark, tmp_path):
+    """A store written by a session on Spark's default INT96 timestamp
+    output (no ``outputTimestampType`` conf) holds naive INT96 values.
+    The driver read takes them as the UTC instants Spark wrote: lookups
+    launch no job and return the Spark read's rows, for sub-second and
+    pre-1970 values at the top level and inside a struct."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from leftshove_spark.streaming import (
+        current_state_lookup,
+        current_state_table,
+        maintain_current_state,
+    )
+
+    stamps = [
+        datetime(2030, 1, 1, 0, 0, 1, 250001),
+        datetime(1969, 12, 31, 23, 59, 59, 999999),
+        datetime(1901, 3, 4, 5, 6, 7, 123456),
+    ]
+    df = spark.createDataFrame(
+        [(k, stamps[k % 3], (stamps[(k + 1) % 3],), "2030-01-01") for k in range(30)],
+        "k long, ts timestamp, st struct<t: timestamp>, d string",
+    )
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        state = str(tmp_path / "int96")
+        maintain_current_state(spark, state, df, "k", "d", n_buckets=4)
+    finally:
+        spark.conf.set(key, old)
+    sch = pq.ParquetFile(glob.glob(f"{state}/**/*.parquet", recursive=True)[0]).schema
+    physical = {sch.column(i).path: sch.column(i).physical_type for i in range(len(sch))}
+    assert physical["ts"] == physical["st.t"] == "INT96"
+    full = current_state_table(spark, state)
+    for v in (0, 1, 2, 29, 1000):
+        probe, jobs = _jobs_during(
+            spark, f"w25-int96-{v}",
+            lambda: current_state_lookup(spark, state, {"k": v}, n_buckets=4),
+        )
+        got, collect_jobs = _jobs_during(spark, f"w25-int96-collect-{v}", probe.collect)
+        assert jobs == [] and collect_jobs == [], v
+        want = full.filter(F.col("k") == v).collect()
+        assert sorted(map(str, got)) == sorted(map(str, want)), v
+        assert len(got) == (v < 30)
+
+
 def test_driver_bucket_matches_bucket_expr(spark):
     """The driver's bucket (``_driver_key_parts`` then
     ``statestore.bucket_of``) equals Spark's ``bucket_expr`` over the
