@@ -802,17 +802,51 @@ def _hashed_feature_buckets(text_col: str | Column, n_buckets: int) -> Column:
     :func:`hashing.hash60` mod ``n_buckets`` keeps the bucketing
     bit-identical cross-engine. Pure array expressions — no explode
     until the caller wants one."""
-    t = tokenize(text_col)
-    uni = F.transform(t, lambda x: hash60(x) % n_buckets)
-    big = F.when(
-        F.size(t) >= 2,
-        F.zip_with(
-            F.slice(t, 1, F.size(t) - 1),
-            F.slice(t, 2, F.size(t) - 1),
-            lambda a, b: hash60(F.concat_ws(" ", a, b)) % n_buckets,
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return F.concat(uni, big)
+    uni = F.transform(tokenize(text_col), lambda x: hash60(x) % n_buckets)
+    return F.concat(uni, _hashed_bigram_buckets(text_col, n_buckets))
+
+
+def _bucket_score(
+    feats: Column, bounded: DataFrame, n_buckets: int, weigh, names
+) -> Column:
+    """Per-row struct ``names`` = (n, s, s / (n·denom)) over a row's
+    bucket ids: n instances, int64 ``s = Σ weights[b]``, NULL ratio at
+    n = 0. ``weigh(ct)`` gives ``(weights, denom)`` from the BOUNDED
+    side's per-bucket counts, collected (as decontaminate_semantic
+    collects its benchmark) into ONE dense array literal of plain
+    ``<v>L`` elements (a CAST each costs analysis time; past int64 the
+    parse fails, never wraps): one fold over the row's own array, no
+    explode, no join, no group by id."""
+    ct = [0] * n_buckets
+    ex = bounded.select(F.explode(feats).alias("b"))
+    for b, c in ex.groupBy("b").count().collect():
+        ct[b] = c
+    weights, denom = weigh(ct)
+    w = F.expr(f"array({', '.join(f'{v}L' for v in weights)})")
+
+    def finish(acc):
+        n, s = acc.n, acc.s
+        r = F.when(n > 0, s.cast("double") / (n * F.lit(denom)).cast("double"))
+        return F.struct(n.alias(names[0]), s.alias(names[1]), r.alias(names[2]))
+
+    return F.aggregate(
+        F.coalesce(feats, F.array().cast("array<bigint>")),
+        F.expr("named_struct('n', 0L, 's', 0L)"),
+        lambda acc, b: F.struct((acc.n + 1).alias("n"), (acc.s + w[b]).alias("s")),
+        finish,
+    )
+
+
+def target_affinity_col(
+    target: DataFrame, text_col: str = "text", n_buckets: int = 4096
+) -> Column:
+    """:func:`target_affinity_scores`' per-row ``(n_feats, score,
+    affinity)`` struct, the column the dsir_sample stage samples on.
+    Runs one job now: the target's bucket counts."""
+    return _bucket_score(
+        _hashed_feature_buckets(text_col, n_buckets), target, n_buckets,
+        lambda ct: (ct, sum(ct) or 1), ("n_feats", "score", "affinity"),
+    )
 
 
 def target_affinity_scores(
@@ -838,39 +872,20 @@ def target_affinity_scores(
     :func:`weighted_systematic_sample` directly as integer PPS weights
     — that composition IS the importance-resampling step.
 
-    100 TB plan: the target count table is ≤ ``n_buckets`` rows —
-    broadcast; the corpus explodes features map-side, joins the
-    broadcast LEFT (unseen buckets score 0), and aggregates per doc
-    with map-side partials — ONE shuffle keyed by id, no corpus×corpus
-    anything. Returns (id, n_feats, score, affinity)."""
-    feats = _hashed_feature_buckets(text_col, n_buckets)
-    tgt = (
-        target.select(F.explode(feats).alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    tot = tgt.agg(F.sum("ct").alias("t_total")).withColumn("__j", F.lit(1))
-    tgt = tgt.withColumn("__j", F.lit(1)).join(F.broadcast(tot), "__j").select(
-        "b", "ct", "t_total"
-    )
-    ex = df.select(F.col(id_col), F.explode(feats).alias("b"))
+    100 TB plan: the ≤ ``n_buckets``-row target count table is
+    collected once into a dense array literal; each doc folds its own
+    feature array against it (:func:`target_affinity_col`) — a map-only
+    projection, no join, no shuffle. Docs with no token are omitted.
+    Returns (id, n_feats, score, affinity), one row per input row."""
+    # a filter on n_feats would be pushed below the projection and fold
+    # every doc twice
     return (
-        ex.join(F.broadcast(tgt), "b", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sum(F.coalesce("ct", F.lit(0))).alias("score"),
-            F.max("t_total").alias("__t"),
-        )
+        df.filter(F.size(tokenize(text_col)) > 0)
         .select(
-            id_col,
-            "n_feats",
-            F.col("score").cast("long").alias("score"),
-            (
-                F.col("score").cast("double")
-                / (F.col("n_feats") * F.coalesce("__t", F.lit(1))).cast("double")
-            ).alias("affinity"),
+            F.col(id_col),
+            target_affinity_col(target, text_col, n_buckets).alias("__a"),
         )
+        .select(id_col, "__a.*")
     )
 
 
@@ -888,6 +903,23 @@ def _hashed_bigram_buckets(text_col: str | Column, n_buckets: int) -> Column:
             lambda a, b: hash60(F.concat_ws(" ", a, b)) % n_buckets,
         ),
     ).otherwise(F.array().cast("array<bigint>"))
+
+
+def lm_quality_col(
+    ref: DataFrame, text_col: str = "text", n_buckets: int = 4096,
+    scale: int = 1_000_000,
+) -> Column:
+    """:func:`lm_quality_score`'s per-row ``(n_bigrams, surprisal,
+    ppl_proxy)`` struct, the column the lm_quality_gate stage filters
+    on. Runs one job now: the reference's bucket counts."""
+    def weigh(ct):
+        full = (sum(ct) + n_buckets) * scale
+        return [full // (c + 1) for c in ct], scale
+
+    return _bucket_score(
+        _hashed_bigram_buckets(text_col, n_buckets), ref, n_buckets, weigh,
+        ("n_bigrams", "surprisal", "ppl_proxy"),
+    )
 
 
 def lm_quality_score(
@@ -928,64 +960,16 @@ def lm_quality_score(
     unchanged). The REFERENCE side is the bounded one by construction
     (a curated known-good sample, like DSIR's target).
 
-    100 TB plan (the X55 shape): the reference model is ≤ n_buckets
-    rows + a 1-row total — broadcast; the corpus explodes bigrams
-    map-side, joins the broadcast LEFT (unseen buckets get the
-    full-surprisal default), and aggregates per doc with map-side
-    partials — ONE shuffle keyed by id, zero corpus×corpus anything.
-    Returns (id, n_bigrams, surprisal, ppl_proxy)."""
-    feats = _hashed_bigram_buckets(text_col, n_buckets)
-    ct = (
-        ref.select(F.explode(feats).alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    tot = ct.agg(F.sum("ct").alias("t_total")).withColumn("__j", F.lit(1))
-    wtab = (
-        ct.withColumn("__j", F.lit(1))
-        .join(F.broadcast(tot), "__j")
-        .select(
-            "b",
-            F.expr(
-                f"CAST((t_total + {n_buckets}) * {scale} DIV (ct + 1) AS BIGINT)"
-            ).alias("w"),
-        )
-    )
-    ex = df.select(F.col(id_col), F.explode(feats).alias("b")).withColumn(
-        "__j", F.lit(1)
-    )
-    scored = (
-        ex.join(F.broadcast(wtab), "b", "left")
-        .join(F.broadcast(tot), "__j")
-        .withColumn(
-            "__w",
-            F.coalesce(
-                "w",
-                F.expr(
-                    f"CAST((t_total + {n_buckets}) * {scale} DIV 1 AS BIGINT)"
-                ),
-            ),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("__w").alias("surprisal"),
-        )
-    )
-    base = df.select(id_col)
-    return (
-        base.join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("surprisal", F.lit(0)).cast("long").alias("surprisal"),
-            F.when(
-                F.col("n_bigrams") > 0,
-                F.col("surprisal").cast("double")
-                / (F.col("n_bigrams") * F.lit(scale)).cast("double"),
-            ).alias("ppl_proxy"),
-        )
-    )
+    100 TB plan (the X55 shape): the ≤ n_buckets-row reference model is
+    collected once into a dense weight-array literal (unseen buckets
+    carry the full-surprisal weight); each doc folds its own bigram
+    array against it (:func:`lm_quality_col`) — a map-only projection,
+    no join, no shuffle. Returns (id, n_bigrams, surprisal, ppl_proxy),
+    one row per input row."""
+    return df.select(
+        F.col(id_col),
+        lm_quality_col(ref, text_col, n_buckets, scale).alias("__q"),
+    ).select(id_col, "__q.*")
 
 
 def dsir_sample(
@@ -1002,7 +986,10 @@ def dsir_sample(
     probability is exactly min(1, k·score/Σscore): docs that look like
     the target are proportionally more likely to be kept, zero-affinity
     docs are never selected. Deterministic, overflow-safe, and
-    hash-replayable — the composition of two certified operators."""
+    hash-replayable — the composition of two certified operators.
+
+    100 TB plan: the scores are a map-only column of the doc's own row,
+    so the sampler's range-partitioned prefix sum is the only shuffle."""
     scored = target_affinity_scores(
         df, target, text_col=text_col, id_col=id_col, n_buckets=n_buckets
     )

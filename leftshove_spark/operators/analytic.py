@@ -32,6 +32,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 # Above this boundary count the O(p)-per-row indicator sum switches to
@@ -85,12 +86,13 @@ def exact_global_rank(
     O(num_partitions) control-plane read — bounded by cluster width, not
     data — the same class as watermark scalars, not a data collect.
 
-    Cost: one sampling pass (range shuffle + per-partition summary) +
-    one hash shuffle of the projected key columns for the ranking pass,
-    plus a broadcast of ≤ num_partitions offset rows. A naive global
-    window is a shuffle followed by a single-task sort of the entire
-    input; this form keeps every stage at full parallelism, which is
-    the difference between minutes and a dead executor at 100 TB.
+    Cost: one sampling pass (range shuffle + per-partition summary, the
+    input cached for that one job) + one hash shuffle of the projected
+    key columns for the ranking pass, plus a broadcast of ≤
+    num_partitions offset rows. A naive global window is a shuffle
+    followed by a single-task sort of the entire input; this form keeps
+    every stage at full parallelism, which is the difference between
+    minutes and a dead executor at 100 TB.
 
     Determinism (the r6→r7 bug): Spark's range partitioner seeds its
     reservoir sampling from the RDD id, which CHANGES between actions —
@@ -156,9 +158,19 @@ def _range_summary(
     parts = df.repartitionByRange(p, *order_cols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    summary = sorted(
-        parts.groupBy("__pid").agg(*aggs).collect(), key=lambda r: r["__pid"]
-    )
+    # the range partitioner reads its input twice (sampling, shuffle):
+    # cache it for this job so its upstream runs once; a caller's cache
+    # stays, ours is dropped so no persisted block outlives the call
+    held = df.storageLevel == StorageLevel.NONE
+    if held:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        summary = sorted(
+            parts.groupBy("__pid").agg(*aggs).collect(), key=lambda r: r["__pid"]
+        )
+    finally:
+        if held:
+            df.unpersist()
     # boundaries = maxima of all but the last non-empty partition;
     # membership in job-2 ≡ membership in job-1 because range
     # partitioning separates partitions exactly at these maxima

@@ -48,18 +48,6 @@ from pyspark.sql import functions as F
 # as the implementation error it is.
 
 
-def _range_summary_input(df):
-    """Pin (lazily) the input of a stage whose operator ranks rows
-    globally. Its range-summary job runs Spark's range partitioner,
-    which reads its input twice, a sampling pass and then the shuffle,
-    and the stage reads the input once more for its result. Unpinned,
-    each of those reads re-runs the whole upstream, and every row-count
-    observer upstream adds its rows once per run."""
-    from .ext.cache import pin
-
-    return pin(df)
-
-
 def _stage_quality_filter(
     spark, df, *, text_col="text", id_col="doc_id",
     min_tokens=20, min_uniq_ratio=0.5, min_quality=0.3,
@@ -111,6 +99,8 @@ def _stage_near_dedup(
     from .ext.dedup import minhash_lsh_pairs
     from .ext.graph import connected_components, resolve_keep_one_per_component
 
+    # anti-join: the non-representatives come out of the pair graph's
+    # components, a relation keyed by id, not a column of the row
     pairs = minhash_lsh_pairs(df, content_col, id_col, jaccard_threshold)
     comp = connected_components(pairs.select("id_a", "id_b"))
     return resolve_keep_one_per_component(df, comp, id_col)
@@ -234,13 +224,13 @@ def _stage_token_budget_cap(
 
 
 def _stage_weighted_sample(spark, df, *, k, weight_col, id_col="doc_id"):
-    # join-back: a row's stride membership depends on the cumulative
-    # weight of every row before it in id order
+    # the sampler returns the picked rows themselves; only its own
+    # columns are dropped
     from .ext.pipeline import weighted_systematic_sample
 
-    df = _range_summary_input(df)
-    picked = weighted_systematic_sample(df, k, weight_col, id_col).select(id_col)
-    return df.join(picked, id_col)
+    return weighted_systematic_sample(df, k, weight_col, id_col).drop(
+        "cum_weight", "stride", "multiplicity"
+    )
 
 
 def _stage_sample_k_per_group(spark, df, *, group_cols, k, id_col="doc_id"):
@@ -259,6 +249,8 @@ def _stage_substring_redact(
     # decision, not a redaction one)
     from .ext.dedup import redact_duplicated_spans
 
+    # join-back: redacted text is re-assembled per id from the doc's
+    # surviving token windows, a relation keyed by id, not a column
     red = redact_duplicated_spans(
         df, text_col, id_col, window=window, min_docs=min_docs,
         max_window_df=max_window_df,
@@ -282,15 +274,15 @@ def _stage_temperature_mixture(
 def _stage_dsir_sample(
     spark, df, *, target, k, text_col="text", id_col="doc_id", n_buckets=4096
 ):
-    # join-back: the k picks are a weighted systematic sample over the
-    # importance scores of the whole stage input
-    from .ext.pipeline import dsir_sample
+    # the k picks are a weighted systematic sample over each row's own
+    # affinity score (dsir_sample's column); a doc with no feature
+    # scores 0 and is never picked
+    from .ext.pipeline import target_affinity_col, weighted_systematic_sample
 
-    df = _range_summary_input(df)
-    picked = dsir_sample(
-        df, target, k, text_col=text_col, id_col=id_col, n_buckets=n_buckets
-    ).select(id_col)
-    return df.join(picked, id_col)
+    score = target_affinity_col(target, text_col, n_buckets)["score"]
+    return weighted_systematic_sample(
+        df.withColumn("__dsir_score", score), k, "__dsir_score", id_col
+    ).drop("__dsir_score", "cum_weight", "stride", "multiplicity")
 
 
 def _stage_lm_quality_gate(
@@ -298,20 +290,14 @@ def _stage_lm_quality_gate(
     n_buckets=4096, keep_short=False,
 ):
     # CCNet-style quality gate: keep documents whose perplexity proxy
-    # under the reference bigram model clears the threshold. Docs with
-    # < 2 tokens carry a NULL proxy — dropped by default (no evidence
-    # of quality), kept when keep_short is set. Join-back: the score is
-    # an aggregation by id over the doc's exploded bigrams.
-    from .ext.pipeline import lm_quality_score
+    # under the reference bigram model clears the threshold, filtering
+    # on lm_quality_score's column of the row itself. Docs with < 2
+    # tokens carry a NULL proxy — dropped by default (no evidence of
+    # quality), kept when keep_short is set.
+    from .ext.pipeline import lm_quality_col
 
-    scored = lm_quality_score(
-        df, reference, text_col=text_col, id_col=id_col, n_buckets=n_buckets
-    )
-    cond = F.col("ppl_proxy") <= max_ppl_proxy
-    if keep_short:
-        cond = cond | F.col("ppl_proxy").isNull()
-    kept = scored.filter(cond).select(id_col)
-    return df.join(kept, id_col)
+    ppl = lm_quality_col(reference, text_col, n_buckets)["ppl_proxy"]
+    return df.filter(F.coalesce(ppl <= max_ppl_proxy, F.lit(keep_short)))
 
 
 def _stage_interleave(
@@ -324,9 +310,7 @@ def _stage_interleave(
     # ordering by pos_col tolerate)
     from .ext.pipeline import interleave_sources
 
-    return interleave_sources(
-        _range_summary_input(df), weights, source_col, id_col, pos_col
-    )
+    return interleave_sources(df, weights, source_col, id_col, pos_col)
 
 
 def _stage_fingerprint(
@@ -426,10 +410,12 @@ def run_pipeline(
     weighted_sample, dsir_sample and interleave) fire the observers
     upstream of them first, with the same full counts: an observer
     reports the first action that runs it, so every one must run each
-    upstream row once, which is why the range-summary stages pin their
-    input. ``count_stages=False`` builds the same plan with no
-    observers and runs no action of its own: the caller's action (a
-    write, say) executes it.
+    upstream row once, which is why the global-rank operators cache
+    their input for their summary job. An observer whose subtree the
+    optimizer pruned (an emptied batch) reports nothing, and its frame
+    is counted directly. ``count_stages=False`` builds the same plan
+    with no observers and runs no action of its own: the caller's
+    action (a write, say) executes it.
 
     ``docs`` must carry a non-null ``doc_id``: stages that filter in
     place read only their own columns, while the sampling and join
@@ -442,15 +428,18 @@ def run_pipeline(
     implementation error it is."""
     import inspect
 
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
-    observers: dict[str, Observation] = {}
+    observers: dict[str, tuple[Observation, DataFrame]] = {}
 
     def observed(df: DataFrame, key: str) -> DataFrame:
         if not count_stages:
             return df
-        observers[key] = Observation()
-        return df.observe(observers[key], F.count(F.lit(1)).alias("rows"))
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        observers[key] = (obs, df)
+        return df
 
     artifacts: dict[str, DataFrame] = {}
     out = observed(docs, "ingested")
@@ -482,5 +471,12 @@ def run_pipeline(
 
         out = pin(out)
         out.count()
-    counts = {key: obs.get["rows"] for key, obs in observers.items()}
+    counts = {}
+    for key, (obs, df) in observers.items():
+        try:
+            counts[key] = obs.get["rows"]
+        except Py4JJavaError:
+            # a pruned subtree completes its observation with an empty
+            # row, which Observation.get cannot convert
+            counts[key] = df.count()
     return PipelineResult(df=out, counts=counts, artifacts=artifacts)

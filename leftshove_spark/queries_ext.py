@@ -4110,7 +4110,7 @@ def x_target_affinity(spark: SparkSession, sf: str) -> DataFrame:
     unigram+bigram bucket counts dot-producted against the target's —
     exact int64 (no float ln; see
     :func:`ext.pipeline.target_affinity_scores` for why and for the
-    one-shuffle broadcast plan), affinity = one IEEE division."""
+    map-only fold plan, no join on id), affinity = one IEEE division."""
     docs = load_table(spark, sf, "documents")
     return P.target_affinity_scores(
         docs, docs.filter(F.col("lang") == "en"), n_buckets=_DSIR_B
@@ -4198,8 +4198,8 @@ def x_lm_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     integer inverse-probability weights summed per doc, one IEEE
     division for the mean — the CCNet-style quality signal without the
     un-gateable float ``ln`` (the tf-idf/DSIR fixed-point discipline).
-    Broadcast model table, one id-keyed shuffle; see
-    :func:`ext.pipeline.lm_quality_score`."""
+    Dense model-array literal, one map-only fold per doc, no join on
+    id; see :func:`ext.pipeline.lm_quality_score`."""
     docs = load_table(spark, sf, "documents")
     return P.lm_quality_score(
         docs, docs.filter(F.col("lang") == "en"), n_buckets=_LMQ_B

@@ -150,6 +150,38 @@ def test_exact_global_rank_leaves_no_cached_blocks(spark):
     assert after == before
 
 
+def test_global_rank_operators_run_their_input_once(spark):
+    """Spark's range partitioner reads its input twice (a sampling
+    pass, then the shuffle); the summary job caches the input, so a
+    row-count observer on the input of a direct exact_global_rank or
+    weighted_systematic_sample call reports each row once, not twice.
+    The cache is the operator's own: it leaves no persisted RDD behind,
+    and a caller's cache of the input stays."""
+    from pyspark.sql import Observation
+
+    from leftshove_spark.ext.pipeline import weighted_systematic_sample
+
+    docs = load_table(spark, SF0001, "documents").select("doc_id", "n_chars")
+    n = docs.count()
+    runs = {
+        "rank": lambda df: A.exact_global_rank(df, ["doc_id"]),
+        "wss": lambda df: weighted_systematic_sample(df, 40, "n_chars"),
+    }
+    jsc = spark.sparkContext._jsc
+    for name, run in runs.items():
+        before = jsc.getPersistentRDDs().size()
+        obs = Observation()
+        assert run(docs.observe(obs, F.count(F.lit(1)).alias("rows"))).count() > 0
+        assert obs.get["rows"] == n, name
+        assert jsc.getPersistentRDDs().size() == before, name
+    cached = docs.filter(F.col("doc_id") % 2 == 0).cache()
+    try:
+        runs["rank"](cached).count()
+        assert cached.storageLevel.useMemory
+    finally:
+        cached.unpersist()
+
+
 def test_decile_formula_matches_ntile_at_tiny_n(spark):
     """The re-derived ntile math in x_quality_deciles must match the
     window ntile even when N < buckets (each row its own bucket: the

@@ -1299,6 +1299,18 @@ def _count_specs(spark):
              "benchmark": docs.filter(F.col("doc_id") < 5).select("doc_id", "text")},
             {"op": "hash_split"},
         ]),
+        # a batch the first stage empties: the optimizer prunes the
+        # observed subtrees under the second stage's empty side
+        **{
+            f"emptied_{second['op']}": (docs, [
+                {"op": "quality_filter", "min_tokens": 10**6}, second,
+            ])
+            for second in (
+                {"op": "temperature_mixture", "source_col": "lang"},
+                {"op": "weighted_sample", "k": 5, "weight_col": "n_chars"},
+                {"op": "interleave", "source_col": "lang", "weights": {"en": 1}},
+            )
+        },
         "sampling": (docs, [
             {"op": "bpe_annotate", "merges": [("t", "h"), ("th", "e"), ("i", "n")]},
             {"op": "mixture_sample", "source_col": "lang"},
@@ -1313,7 +1325,10 @@ def _count_specs(spark):
     }
 
 
-@pytest.mark.parametrize("name", ["hand", "demo", "quickstart", "sampling"])
+@pytest.mark.parametrize("name", [
+    "hand", "demo", "quickstart", "sampling", "emptied_temperature_mixture",
+    "emptied_weighted_sample", "emptied_interleave",
+])
 def test_run_pipeline_observed_counts_equal_pinned_counts(spark, name):
     """count_stages=True observes each stage's rows on the one composed
     plan during a single count; the counts equal pinning and counting
@@ -1344,15 +1359,17 @@ def _last_sql_execution(spark) -> int:
 
 def test_run_pipeline_counts_with_one_action(spark):
     """Counting adds exactly one action to the uncounted build (the
-    final pinned count; weighted_sample's range summary runs in both),
-    whatever the number of stages; a stage read on both sides of a
-    join-back reports its rows once."""
+    final pinned count; substring_redact's jobs and weighted_sample's
+    range summary run in both), whatever the number of stages; a stage
+    read on both sides of substring_redact's join-back reports its rows
+    once."""
     from leftshove_spark.ext.cache import release_pins
     from leftshove_spark.pipeline_runner import run_pipeline
 
     docs = _docs(spark)
     spec = [
         {"op": "hash_split"},
+        {"op": "substring_redact", "window": 20},
         {"op": "weighted_sample", "k": 40, "weight_col": "n_chars"},
     ]
     try:
@@ -1362,32 +1379,61 @@ def test_run_pipeline_counts_with_one_action(spark):
         res = run_pipeline(spark, docs, spec)
         n2 = _last_sql_execution(spark)
         assert n2 - n1 == n1 - n0 + 1
-        # hash_split's output feeds both sides of weighted_sample's
+        # hash_split's output feeds both sides of substring_redact's
         # join-back, so its observer sits in the plan more than once
         plan = res.df._jdf.queryExecution().analyzed().toString()
-        assert plan.count("CollectMetrics") > 3
+        assert plan.count("CollectMetrics") > len(res.counts)
         assert res.counts == {"ingested": 500, "0_hash_split": 500,
-                              "1_weighted_sample": res.df.count()}
+                              "1_substring_redact": 500,
+                              "2_weighted_sample": res.df.count()}
     finally:
         release_pins()
 
 
 def test_mixture_stages_keep_duplicate_ids_once(spark):
-    """mixture_sample and temperature_mixture filter their own rows:
-    a doc_id carried by two rows yields at most those two rows (both or
-    neither — acceptance is a function of the id), where a join of the
-    picked ids back onto the input multiplied them to four. The
-    operators still return (id, source, rate) for the accepted rows."""
+    """The sampling and quality stages filter their own rows: a doc_id
+    carried by two rows yields at most those two rows, where a join of
+    the picked ids back onto the input multiplied them to four. The
+    mixture stages keep both or neither (acceptance is a function of
+    the id); weighted_sample, dsir_sample and lm_quality_gate judge
+    each row on its own weight or score, so a score no longer sums over
+    rows that share an id. The input's columns keep their order. The
+    mixture operators still return (id, source, rate) for the accepted
+    rows."""
     from leftshove_spark.pipeline_runner import run_pipeline
 
-    base = _docs(spark).select("doc_id", "text", "lang")
+    base = _docs(spark).select("doc_id", "text", "lang", "n_chars")
     dup = base.unionByName(base.withColumn("text", F.concat("text", F.lit(" x"))))
-    for stage in ({"op": "mixture_sample", "source_col": "lang"},
-                  {"op": "temperature_mixture", "source_col": "lang"}):
+    target = base.filter(F.col("lang") == "en")
+    thr = float(
+        P.lm_quality_score(base, target)
+        .agg(F.expr("percentile(ppl_proxy, 0.5)"))
+        .first()[0]
+    )
+    gate = {"op": "lm_quality_gate", "reference": target, "max_ppl_proxy": thr}
+    for stage, want in (
+        ({"op": "mixture_sample", "source_col": "lang"}, {2}),
+        ({"op": "temperature_mixture", "source_col": "lang"}, {2}),
+        ({"op": "weighted_sample", "k": 120, "weight_col": "n_chars"}, {1, 2}),
+        ({"op": "dsir_sample", "target": target, "k": 120}, {1, 2}),
+        (gate, {1, 2}),
+    ):
         out = run_pipeline(spark, dup, [stage], count_stages=False).df
-        per_id = out.groupBy("doc_id").count()
-        assert {r["count"] for r in per_id.collect()} == {2}, stage
-        assert out.columns == dup.columns
+        per_id = {r["count"] for r in out.groupBy("doc_id").count().collect()}
+        # min(want) seen: a sampled row's copy is not carried along
+        assert min(want) in per_id and per_id <= want, (stage["op"], per_id)
+        assert out.columns == dup.columns, stage["op"]
+    # the gate keeps the same rows when the copies carry their own ids
+    shifted = base.unionByName(
+        base.withColumn("text", F.concat("text", F.lit(" x")))
+        .withColumn("doc_id", F.col("doc_id") + 10**7)
+    )
+
+    def gated(df):
+        out = run_pipeline(spark, df, [gate], count_stages=False).df
+        return sorted((r["doc_id"] % 10**7, r["text"]) for r in out.collect())
+
+    assert gated(dup) == gated(shifted)
     picked = P.temperature_mixture_sample(base, "lang")
     assert picked.columns == ["doc_id", "lang", "rate"]
     kept = run_pipeline(

@@ -45,17 +45,6 @@ _BNLJ_ALLOWED = {
     # single-row (n_docs, total_tokens) stats joined to the
     # ≤|query_terms|-row df table — x_tfidf_search's constant-key shape
     "x_bm25_search",
-    # single-row target-total joined to the ≤n_buckets-row target count
-    # table (both broadcast, both corpus-independent)
-    "x_target_affinity",
-    # same shape: single-row reference-model total joined constant-key
-    # to the ≤n_buckets-row model table AND to the exploded bigrams for
-    # the unseen-bucket default weight — ONE broadcast row per stream
-    # row, linear
-    "x_lm_quality_score",
-    # embeds x_target_affinity's scalar joins; the PPS stage itself is
-    # keyed (the X44 machinery)
-    "x_dsir_sample",
     # single-row corpus-count joined to the ≤|query_terms|-row
     # document-frequency table, same constant-key shape
     "x_tfidf_search",
