@@ -1,34 +1,58 @@
-"""Pinned-intermediate lifecycle: a session-wide registry so persisted
-stage outputs have an OWNER that releases them.
+"""The one owner of every persisted intermediate in the package.
 
-The shingle / simhash signature stages persist their Arrow-stage output
-because near-dup callers read it 2-3× (signature build + verification
-joins) — without the pin each reference re-runs tokenize+md5 over the
-whole corpus (420 s → 35 s for the minhash pipeline at sf0.1). But the
-returned DataFrames are lazy, so the pin must outlive the operator call;
-before r8 the only release path was a blanket ``spark.clearCache()``
-(bench.py did; a long-running engine process would leak cache slowly —
-SCALE.md known trade-off #1).
+Operators persist a stage output when its callers read it more than
+once: the shingle / simhash signature stages feed both the signature
+build and the verification joins, and without the cache each reference
+re-runs tokenize+md5 over the whole corpus (420 s → 35 s for the
+minhash pipeline at sf0.1). The returned frames are lazy, so the cache
+has to outlive the operator call, and something other than the
+operator has to drop it. Every persist therefore goes through
+:func:`pin`, and every pin belongs to exactly one owner:
 
-Every pin now registers here, and callers that finish consuming a
-dedup/fingerprint result call :func:`release_pins` — surgical (only our
-pins, not the caller's own cached tables) and idempotent.
+- the innermost open :class:`pin_scope` of the calling context, whose
+  exit releases exactly the pins taken in it. Scopes nest, and the
+  open scopes live in a ``contextvars.ContextVar``, so one thread's
+  scope (a stream's ``foreachBatch`` batch, say) never holds or
+  releases another thread's pins;
+- the root list ``_PINNED``, when no scope is open. :func:`release_pins`
+  releases the root together with the calling context's open scopes;
+  gate queries and the bench call it between runs.
+
+Release is surgical (only pinned frames, never a caller's own cached
+tables) and idempotent: a released frame recomputes if referenced
+again, it never breaks correctness.
 """
 
 from __future__ import annotations
 
 import threading
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _PINNED: list[DataFrame] = []
-# Guards every read-modify-write of _PINNED: a live stream's
-# foreachBatch thread calls release_pins() while other threads pin. A
-# pin is registered after it is persisted, and a release takes the
-# registry in one swap, so a racing pin() is either released by that
-# release or left registered — never persisted and unregistered.
+# The calling context's open scopes, innermost last. A tuple, so a
+# scope pushed in one context is never seen by another.
+_SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar(
+    "pin_scopes", default=()
+)
+# Guards every read-modify-write of a pin list: the root list is shared
+# by every thread. A pin is registered after it is persisted, and a
+# release empties each list in one swap, so a racing pin() is either
+# released by that release or left registered — never persisted and
+# unregistered.
 _LOCK = threading.Lock()
+
+
+def _release(lists: list[list[DataFrame]]) -> int:
+    with _LOCK:
+        released = [df for pins in lists for df in pins]
+        for pins in lists:
+            pins.clear()
+    for df in released:
+        df.unpersist()
+    return len(released)
 
 
 def pin(
@@ -36,7 +60,8 @@ def pin(
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     eager: bool = False,
 ) -> DataFrame:
-    """Persist ``df`` and register it for later :func:`release_pins`.
+    """Persist ``df`` and register it with the innermost open
+    :class:`pin_scope`, or with the root list when none is open.
 
     ``eager`` materializes the pin NOW with one count job. Use it when
     the first consuming action fans out into SEVERAL concurrent plan
@@ -49,39 +74,31 @@ def pin(
     consumer is a single serial stage (a seed sort, a lone aggregation)
     — it materializes the pin on its own without the extra read-back."""
     df.persist(level)
+    scopes = _SCOPES.get()
     with _LOCK:
-        _PINNED.append(df)
+        (scopes[-1] if scopes else _PINNED).append(df)
     if eager:
         df.count()
     return df
 
 
 def release_pins() -> int:
-    """Unpersist every registered pin (non-blocking); returns how many
-    were released. Safe to call at any time — an unpersisted stage
-    recomputes if referenced again, it never breaks correctness."""
-    with _LOCK:
-        released = _PINNED[:]
-        _PINNED.clear()
-    for df in released:
-        df.unpersist()
-    return len(released)
+    """Unpersist (non-blocking) the root pins and the pins of the
+    calling context's open scopes; returns how many were released.
+    Another thread's open scopes keep theirs."""
+    return _release([_PINNED, *_SCOPES.get()])
 
 
 def pinned_count() -> int:
-    return len(_PINNED)
+    """How many pins :func:`release_pins` would release right now."""
+    with _LOCK:
+        return sum(len(pins) for pins in [_PINNED, *_SCOPES.get()])
 
 
 class pin_scope:
-    """Context-manager form of the pin lifecycle (ADVICE r13) for
-    LIBRARY callers outside the gate/bench convention: operators that
-    pin intermediates (decontaminate(attribute=True), the LSH stages)
-    leak one persist per call into a long-lived session unless the
-    caller remembers :func:`release_pins`. Inside a scope, pins taken
-    by the wrapped calls are released on exit — but only the pins the
-    scope ADDED: pre-existing pins (an outer scope's, or a gate
-    query's) survive, so scopes nest and compose with the gate's
-    release-at-entry discipline.
+    """Owns the pins taken while it is open in the calling context and
+    releases exactly those on exit. Pins taken before it, by an outer
+    scope, or by another thread stay.
 
         with cache.pin_scope():
             hits = decontaminate(corpus, bench, attribute=True)
@@ -91,25 +108,10 @@ class pin_scope:
     """
 
     def __enter__(self) -> "pin_scope":
-        # IDENTITY accounting, not a length index: release_pins()
-        # running inside the scope (an operator's own cleanup, or the
-        # caller's) rewrites the registry under us, and pins taken
-        # after it would land below a length watermark and silently
-        # survive exit (r14 review). STRONG references, not bare id()s
-        # (ADVICE r14): if release_pins() inside the scope dropped the
-        # registry's reference and the DataFrame were collected, a
-        # later pin could reuse the freed id() and be misclassified as
-        # pre-existing on exit — holding the objects keeps every
-        # recorded id() unique for the scope's lifetime.
-        with _LOCK:
-            self._before: list[DataFrame] = list(_PINNED)
+        self._pins: list[DataFrame] = []
+        self._token = _SCOPES.set((*_SCOPES.get(), self._pins))
         return self
 
     def __exit__(self, *exc) -> None:
-        before_ids = {id(b) for b in self._before}
-        with _LOCK:
-            released = [df for df in _PINNED if id(df) not in before_ids]
-            _PINNED[:] = [df for df in _PINNED if id(df) in before_ids]
-        for df in released:
-            df.unpersist()
-        self._before = []
+        _SCOPES.reset(self._token)
+        _release([self._pins])

@@ -209,9 +209,9 @@ def _staged_shingles(
     pandas-UDF escape hatch: the semantics are expressible in built-ins,
     the throughput is not.
 
-    The result is pinned (persist MEMORY_AND_DISK, registered with
-    ext.cache so an owner can ``release_pins()`` after consumption) when
-    ``pin`` (the default): the near-dup callers read it at least twice
+    The result is pinned (``ext.cache.pin``: the caller's open
+    ``pin_scope`` releases it at exit, or ``release_pins()`` when no
+    scope is open) when ``pin`` (the default): the near-dup callers read it at least twice
     (signature build + verification joins), and without the pin each
     reference re-runs tokenize+md5 over the whole corpus (420 s → 35 s
     for the full minhash pipeline at sf0.1). Single-read callers
@@ -542,7 +542,7 @@ def build_minhash_index(
     check ``idx_params`` against the module's current values.
 
     The returned plan is UNPINNED — write it to a sink (the production
-    mode) or persist it yourself before passing it to
+    mode) or ``ext.cache.pin`` it before passing it to
     :func:`minhash_lsh_pairs_incremental`, which references it twice."""
     docs = _staged_shingles(df, content_col, id_col, pin=False)
     return docs.select(

@@ -184,10 +184,11 @@ def decontaminate(
 
     The attributed path PINS the joined hit relation (it feeds two
     aggregations with different grouping keys — the repo-wide pinned-
-    intermediate convention, ext.cache): long-running callers release
-    via :func:`ext.cache.release_pins` after consuming the result,
-    exactly as after any dedup/fingerprint operator (the gate and
-    bench do this automatically)."""
+    intermediate convention, ext.cache): the pin belongs to the
+    caller's open ``ext.cache.pin_scope`` and is released at its exit;
+    with no scope open, :func:`ext.cache.release_pins` releases it, as
+    after any dedup/fingerprint operator (the gate and bench call it
+    between runs)."""
     if not attribute:
         # Fused map-only form (r16 wave 5, guide §2.3/§2.4 taken to the
         # limit): the eval set is bounded by contract (thousands of
@@ -268,7 +269,7 @@ def decontaminate(
     # pin the corpus tokenize+md5 Arrow pass and the broadcast join run
     # TWICE (r13). Pinned, the second aggregation reads the
     # O(contaminated hit rows) relation — eval-set-bounded — from cache;
-    # gate/bench release via cache.release_pins like every dedup stage.
+    # owned by the caller's pin_scope (or root list) like every dedup stage.
     hit_rows = _cache.pin(c_ex.join(F.broadcast(b_pairs), "h"))
     per_bid = hit_rows.groupBy("id", "n_shingles", "bid").agg(
         F.count(F.lit(1)).alias("bid_hits")

@@ -712,8 +712,8 @@ def embedding_near_dup_lsh(
     # ONE pinned quantized relation (r16, guide §5 reuse-then-release):
     # the band-key stage and BOTH rerank vector joins read (id, qv);
     # unpinned, each reference re-scans and re-quantizes the source —
-    # 3 full upstream passes per call. Released by the gate/bench
-    # release_pins convention, same as the staged-shingles pin.
+    # 3 full upstream passes per call. Owned like the staged-shingles
+    # pin: the caller's pin_scope, or the root list release_pins empties.
     from leftshove_spark.ext import cache as _cache
 
     # eager (see cache.pin): the single consuming action fans out into

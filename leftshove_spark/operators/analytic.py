@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..ext import cache
+
 
 # Above this boundary count the O(p)-per-row indicator sum switches to
 # the O(log p) WHEN-tree binary search. 64 keeps the common local[32]
@@ -161,16 +163,12 @@ def _range_summary(
     # the range partitioner reads its input twice (sampling, shuffle):
     # cache it for this job so its upstream runs once; a caller's cache
     # stays, ours is dropped so no persisted block outlives the call
-    held = df.storageLevel == StorageLevel.NONE
-    if held:
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with cache.pin_scope():
+        if df.storageLevel == StorageLevel.NONE:
+            cache.pin(df)
         summary = sorted(
             parts.groupBy("__pid").agg(*aggs).collect(), key=lambda r: r["__pid"]
         )
-    finally:
-        if held:
-            df.unpersist()
     # boundaries = maxima of all but the last non-empty partition;
     # membership in job-2 ≡ membership in job-1 because range
     # partitioning separates partitions exactly at these maxima

@@ -402,10 +402,10 @@ def run_pipeline(
 
     ``count_stages=True`` (the default) attaches a row-count
     ``Observation`` to the input and to every stage's output, pins the
-    final frame (via the engine's pin registry —
-    ``ext.cache.release_pins()`` frees it) and runs ONE ``count()`` on
-    it: every stage executes once, inside that job, and reports its
-    rows as it goes. Stage operators that run jobs of their own while
+    final frame (``ext.cache.pin``: the caller's ``pin_scope`` exit, or
+    ``release_pins()`` with no scope open, frees it) and runs ONE
+    ``count()`` on it: every stage executes once, inside that job, and
+    reports its rows as it goes. Stage operators that run jobs of their own while
     the plan is built (near_dedup's signature pin, the range summary of
     weighted_sample, dsir_sample and interleave) fire the observers
     upstream of them first, with the same full counts: an observer

@@ -271,9 +271,10 @@ def _start_file_stream(
     Each batch first runs :func:`make_schema_drift_guard`, so a landed
     file carrying fields the source schema lacks fails the stream
     BEFORE ``batch_fn`` writes anything, checkpoint uncommitted;
-    ``batch_fn`` then runs inside ``ext.cache.pin_scope``, which
-    releases the pins the batch took and keeps those held outside the
-    stream."""
+    ``batch_fn`` then runs inside its own ``ext.cache.pin_scope``: the
+    frames it pins with ``cache.pin`` are released when it returns, and
+    pins taken outside the batch (by the caller, or by another thread
+    meanwhile) stay."""
     from .ext import cache
 
     src = _streaming_source(
@@ -361,26 +362,24 @@ def start_stream_capture(
     landed file with fields the inferred schema lacks fails the stream
     before any write (:func:`_start_file_stream`), never captured
     without them."""
+    from .ext import cache
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         # W5: the append happens inside the batch; Spark commits the
         # checkpoint offset only after this returns. A crash mid-append
         # ⇒ the batch re-runs ⇒ duplicate rows ⇒ J3 view dedups.
-        batch_df.persist()
-        try:
-            batch_df.write.mode("append").parquet(sink_path)
-            if state is not None:
-                row = batch_df.agg(
-                    F.max(nms_col).alias("hi"), F.count(F.lit(1)).alias("n")
-                ).collect()[0]
-                if row["hi"] is not None:
-                    st = state.get(name, dsn)
-                    now = datetime.now(timezone.utc).replace(tzinfo=None)
-                    new_nms = max(row["hi"], st.nms) if st and st.nms else row["hi"]
-                    if st is not None:
-                        state.commit_watermark(name, dsn, new_nms, row["n"], now)
-        finally:
-            batch_df.unpersist()
+        cache.pin(batch_df)
+        batch_df.write.mode("append").parquet(sink_path)
+        if state is not None:
+            row = batch_df.agg(
+                F.max(nms_col).alias("hi"), F.count(F.lit(1)).alias("n")
+            ).collect()[0]
+            if row["hi"] is not None:
+                st = state.get(name, dsn)
+                now = datetime.now(timezone.utc).replace(tzinfo=None)
+                new_nms = max(row["hi"], st.nms) if st and st.nms else row["hi"]
+                if st is not None:
+                    state.commit_watermark(name, dsn, new_nms, row["n"], now)
 
     return _start_file_stream(
         spark,
@@ -1211,9 +1210,10 @@ def start_near_dedup_stream(
     micros timestamps, not raw nano parquet, which only the
     inference path normalizes. A landed file with fields the stream's
     schema lacks fails the stream before any write, and each batch
-    releases only the LSH pins it took (:func:`_start_file_stream`)."""
+    releases only the pins it took (:func:`_start_file_stream`)."""
     from pyspark.sql import types as T
 
+    from .ext import cache
     from .ext.dedup import (
         build_minhash_index,
         minhash_lsh_pairs_incremental,
@@ -1239,77 +1239,67 @@ def start_near_dedup_stream(
         # chains into downstream stages — decontamination needs the
         # embedding, state materialization the version column); only
         # the LSH mining itself projects to (id, content)
-        full_df = full_df.persist()
+        full_df = cache.pin(full_df)
         batch_df = full_df.select(id_col, content_col)
-        try:
-            if batch_df.isEmpty():
-                return
-            have_index = os.path.isdir(index_dir) and any(
-                not e.startswith(("_", ".")) for e in os.listdir(index_dir)
+        if batch_df.isEmpty():
+            return
+        have_index = os.path.isdir(index_dir) and any(
+            not e.startswith(("_", ".")) for e in os.listdir(index_dir)
+        )
+        if have_index:
+            idx = spark.read.parquet(index_dir)
+            corpus_ids = idx.select(F.col("id").alias("__cid"))
+            pairs = minhash_lsh_pairs_incremental(
+                batch_df,
+                idx,
+                content_col,
+                id_col,
+                jaccard_threshold=jaccard_threshold,
             )
-            if have_index:
-                idx = spark.read.parquet(index_dir)
-                corpus_ids = idx.select(F.col("id").alias("__cid"))
-                pairs = minhash_lsh_pairs_incremental(
-                    batch_df,
-                    idx,
-                    content_col,
-                    id_col,
-                    jaccard_threshold=jaccard_threshold,
-                ).persist()
-            else:
-                from .ext.dedup import minhash_lsh_pairs
+        else:
+            from .ext.dedup import minhash_lsh_pairs
 
-                corpus_ids = None
-                pairs = minhash_lsh_pairs(
-                    batch_df,
-                    content_col,
-                    id_col,
-                    jaccard_threshold=jaccard_threshold,
-                ).persist()
-            try:
-                batch_ids = batch_df.select(F.col(id_col).alias("__bid")).distinct()
-                if corpus_ids is not None:
-                    # batch docs pairing with an admitted corpus doc: out
-                    vs_corpus = (
-                        pairs.join(
-                            corpus_ids, pairs.id_a == F.col("__cid"), "left_semi"
-                        )
-                        .select(F.col("id_b").alias("__drop"))
-                        .unionAll(
-                            pairs.join(
-                                corpus_ids, pairs.id_b == F.col("__cid"), "left_semi"
-                            ).select(F.col("id_a").alias("__drop"))
-                        )
-                        .distinct()
-                    )
-                else:
-                    vs_corpus = spark.createDataFrame([], "__drop long")
-                # batch-internal clusters: keep the min id per component
-                internal = pairs.join(
-                    batch_ids, pairs.id_a == F.col("__bid"), "left_semi"
-                ).join(batch_ids, pairs.id_b == F.col("__bid"), "left_semi")
-                comp = connected_components(internal.select("id_a", "id_b"))
-                internal_drops = comp.filter(
-                    F.col("node") != F.col("component")
-                ).select(F.col("node").alias("__drop"))
-                drops = vs_corpus.unionAll(internal_drops).distinct()
-                survivors = full_df.join(
-                    drops, full_df[id_col] == F.col("__drop"), "left_anti"
-                ).persist()
-                try:
-                    survivors.write.mode("append").parquet(out_dir)
-                    build_minhash_index(
-                        survivors.select(id_col, content_col),
-                        content_col,
-                        id_col,
-                    ).write.mode("append").parquet(index_dir)
-                finally:
-                    survivors.unpersist()
-            finally:
-                pairs.unpersist()
-        finally:
-            full_df.unpersist()
+            corpus_ids = None
+            pairs = minhash_lsh_pairs(
+                batch_df,
+                content_col,
+                id_col,
+                jaccard_threshold=jaccard_threshold,
+            )
+        pairs = cache.pin(pairs)
+        batch_ids = batch_df.select(F.col(id_col).alias("__bid")).distinct()
+        if corpus_ids is not None:
+            # batch docs pairing with an admitted corpus doc: out
+            vs_corpus = (
+                pairs.join(corpus_ids, pairs.id_a == F.col("__cid"), "left_semi")
+                .select(F.col("id_b").alias("__drop"))
+                .unionAll(
+                    pairs.join(
+                        corpus_ids, pairs.id_b == F.col("__cid"), "left_semi"
+                    ).select(F.col("id_a").alias("__drop"))
+                )
+                .distinct()
+            )
+        else:
+            vs_corpus = spark.createDataFrame([], "__drop long")
+        # batch-internal clusters: keep the min id per component
+        internal = pairs.join(
+            batch_ids, pairs.id_a == F.col("__bid"), "left_semi"
+        ).join(batch_ids, pairs.id_b == F.col("__bid"), "left_semi")
+        comp = connected_components(internal.select("id_a", "id_b"))
+        internal_drops = comp.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("__drop")
+        )
+        drops = vs_corpus.unionAll(internal_drops).distinct()
+        survivors = cache.pin(
+            full_df.join(drops, full_df[id_col] == F.col("__drop"), "left_anti")
+        )
+        survivors.write.mode("append").parquet(out_dir)
+        build_minhash_index(
+            survivors.select(id_col, content_col),
+            content_col,
+            id_col,
+        ).write.mode("append").parquet(index_dir)
 
     return _start_file_stream(
         spark,
@@ -1371,35 +1361,30 @@ def start_decontaminate_stream(
     dir (the live composed pipeline's downstream stages, W28). A landed
     file with fields the stream's schema lacks fails the stream before
     any write (:func:`_start_file_stream`)."""
+    from .ext import cache
     from .ext.pipeline import decontaminate_semantic
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            bench = spark.read.parquet(benchmark_emb_dir)
-            flagged = decontaminate_semantic(
+        batch_df = cache.pin(batch_df)
+        if batch_df.isEmpty():
+            return
+        bench = spark.read.parquet(benchmark_emb_dir)
+        flagged = cache.pin(
+            decontaminate_semantic(
                 batch_df,
                 bench,
                 threshold=threshold,
                 id_col=id_col,
                 vec_col=vec_col,
                 dim=dim,
-            ).persist()
-            try:
-                survivors = batch_df.join(
-                    flagged.select(id_col), id_col, "left_anti"
-                )
-                survivors.write.mode("append").parquet(out_dir)
-                if quarantine_dir is not None:
-                    batch_df.join(flagged, id_col).write.mode(
-                        "append"
-                    ).parquet(quarantine_dir)
-            finally:
-                flagged.unpersist()
-        finally:
-            batch_df.unpersist()
+            )
+        )
+        survivors = batch_df.join(flagged.select(id_col), id_col, "left_anti")
+        survivors.write.mode("append").parquet(out_dir)
+        if quarantine_dir is not None:
+            batch_df.join(flagged, id_col).write.mode("append").parquet(
+                quarantine_dir
+            )
 
     return _start_file_stream(
         spark,

@@ -6,7 +6,10 @@ near-dup callers read it 2-3×; every pin now registers with
 leftshove_spark.ext.cache so an owner can release it surgically. These
 tests prove the contract: after a dedup gate query completes and the
 owner calls release_pins(), the session's cache manager is empty — no
-slow cache leak in a long-running engine process.
+slow cache leak in a long-running engine process. A pin belongs to the
+innermost pin_scope open in the calling context, or to the root list;
+one thread's scope exit or release_pins() never reaches another
+thread's pins, and no module but ext.cache persists a frame.
 
 #5: the pre-Arrow-stage repartition exists only to fan a NARROW local
 scan out to the cluster width; when the input is already cluster-wide
@@ -16,6 +19,7 @@ for wide inputs, fans out to defaultParallelism for narrow ones.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import SF0001
 
@@ -165,31 +169,20 @@ def test_pin_scope_survives_mid_scope_release(spark, docs):
 
 
 def test_pin_scope_holds_entry_pins_alive(spark, docs):
-    """ADVICE r14: the scope records entry-time pins as STRONG
-    references, not bare id()s. If release_pins() inside the scope
-    dropped the registry's reference and the DataFrame were collected,
-    a later pin could reuse the freed id() and be misclassified as
-    pre-existing at exit (leaked past the scope). Holding the objects
-    makes id reuse impossible for the scope's lifetime."""
-    import gc
-    import weakref
-
+    """A scope keeps no record of the pins held when it opened: a
+    release_pins() inside it releases those with the scope's own, and a
+    pin taken after that release is still the scope's and is released
+    at exit."""
     pre = cache.pin(docs.select("doc_id"))
     pre.count()
-    ref = weakref.ref(pre)
-    with cache.pin_scope() as scope:
-        cache.release_pins()  # registry drops its reference
-        del pre  # caller drops theirs too
-        gc.collect()
-        assert ref() is not None  # the scope itself keeps it alive
-        assert any(ref() is b for b in scope._before)
+    with cache.pin_scope():
+        assert cache.release_pins() == 1
+        assert not pre.storageLevel.useMemory
         late = cache.pin(docs.select("text"))
         late.count()
-    # the late pin was correctly classified as scope-owned and released
+        assert cache.pinned_count() == 1
     assert cache.pinned_count() == 0
     assert not late.storageLevel.useMemory
-    gc.collect()
-    assert ref() is None  # exit drops the held references
     assert _cache_empty(spark)
 
 
@@ -227,6 +220,147 @@ def test_pin_held_outside_a_stream_survives_it(spark, docs, tmp_path):
         assert cache.pinned_count() == 1
     finally:
         cache.release_pins()
+
+
+def _held_pin_outlives_stream(spark, docs, run_stream):
+    """``run_stream()`` drains a stream while a frame pinned before it
+    is held: afterwards the session has exactly the persisted RDDs it
+    had before (the batch's pins are gone) and the held pin is still
+    cached and registered."""
+    held = cache.pin(docs.select("doc_id"))
+    held.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    try:
+        run_stream()
+        assert jsc.getPersistentRDDs().size() == before
+        assert held.storageLevel.useMemory
+        assert any(p is held for p in cache._PINNED)
+        assert cache.pinned_count() == 1
+    finally:
+        cache.release_pins()
+
+
+def test_pin_held_outside_a_capture_stream_survives_it(spark, docs, tmp_path):
+    from datetime import datetime
+
+    from leftshove_spark.state import StateStore, TableState
+    from leftshove_spark.streaming import start_stream_capture
+
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(
+        [(i, datetime(2024, 1, 1 + i)) for i in range(4)], "id long, ts timestamp"
+    ).coalesce(1).write.parquet(landing)
+    state = StateStore()
+    state.upsert(TableState(name="ev", dsn="0", nms_column="ts"))
+
+    def run_stream():
+        q = start_stream_capture(
+            spark,
+            name="ev",
+            landing_dir=landing,
+            sink_path=str(tmp_path / "sink"),
+            checkpoint_dir=str(tmp_path / "ck"),
+            nms_col="ts",
+            state=state,
+            once=True,
+        )
+        assert q.awaitTermination(120), "capture stream did not drain"
+        assert spark.read.parquet(str(tmp_path / "sink")).count() == 4
+        assert state.get("ev", "0").last_row_count == 4
+
+    _held_pin_outlives_stream(spark, docs, run_stream)
+
+
+def test_pin_held_outside_a_decontaminate_stream_survives_it(spark, docs, tmp_path):
+    from leftshove_spark.sources import load_table
+    from leftshove_spark.streaming import start_decontaminate_stream
+
+    em = load_table(spark, SF0001, "embeddings").select("vec_id", "embedding")
+    landing = str(tmp_path / "landing")
+    bench_dir = str(tmp_path / "bench")
+    quar = str(tmp_path / "quarantine")
+    em.filter(F.col("vec_id") < 40).coalesce(1).write.parquet(landing)
+    # the benchmark holds exact copies of two landed vectors
+    em.filter(F.col("vec_id") < 2).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
+    ).write.parquet(bench_dir)
+
+    def run_stream():
+        q = start_decontaminate_stream(
+            spark,
+            landing_dir=landing,
+            benchmark_emb_dir=bench_dir,
+            out_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ck"),
+            quarantine_dir=quar,
+            threshold=0.9,
+            dim=64,
+            once=True,
+        )
+        assert q.awaitTermination(120), "decontaminate stream did not drain"
+        assert spark.read.parquet(str(tmp_path / "out")).count() == 38
+        assert spark.read.parquet(quar).count() == 2
+
+    _held_pin_outlives_stream(spark, docs, run_stream)
+
+
+def _in_thread_scope(pins: list):
+    """Start a thread that opens a pin_scope, pins ``pins`` into it and
+    holds the scope open until the returned ``leave`` event is set."""
+    import threading
+
+    entered, leave = threading.Event(), threading.Event()
+
+    def batch():
+        with cache.pin_scope():
+            for df in pins:
+                cache.pin(df).count()
+            entered.set()
+            leave.wait(60)
+
+    t = threading.Thread(target=batch)
+    t.start()
+    assert entered.wait(60), "scope thread did not start"
+    return t, leave
+
+
+def test_scope_exit_keeps_another_threads_pin(spark, docs):
+    """A pin the main thread takes while thread A is inside a pin_scope
+    (a stream batch, say) is not A's: A's exit leaves it cached and in
+    the root list, and releases only A's own pin."""
+    own = docs.select("text")
+    t, leave = _in_thread_scope([own])
+    held = cache.pin(docs.select("doc_id"))
+    held.count()
+    leave.set()
+    t.join(60)
+    assert not t.is_alive()
+    try:
+        assert held.storageLevel.useMemory
+        assert any(p is held for p in cache._PINNED)
+        assert not own.storageLevel.useMemory
+    finally:
+        cache.release_pins()
+    assert _cache_empty(spark)
+
+
+def test_release_pins_leaves_another_threads_scope(spark, docs):
+    """A main-thread release_pins() while thread A's scope is open
+    releases the root list only: A's pin stays cached until A's exit
+    releases it."""
+    own = docs.select("text")
+    t, leave = _in_thread_scope([own])
+    try:
+        assert cache.release_pins() == 0
+        assert cache.pinned_count() == 0
+        assert own.storageLevel.useMemory
+    finally:
+        leave.set()
+        t.join(60)
+    assert not t.is_alive()
+    assert not own.storageLevel.useMemory
+    assert _cache_empty(spark)
 
 
 class _FakeFrame:
@@ -287,3 +421,34 @@ def test_pin_racing_release_is_released_or_kept():
     assert not leaked, f"{len(leaked)} persisted frames fell out of the registry"
     cache.release_pins()
     assert not any(f.persisted for f in frames)
+
+
+def test_only_ext_cache_persists():
+    """Every cached intermediate in the package is owned by ext.cache:
+    no module outside it calls ``.persist(``, ``.unpersist(`` or
+    ``.cache()``. (``localCheckpoint`` truncates lineage; it is no
+    cache and stays allowed.)"""
+    import ast
+    from pathlib import Path
+
+    import leftshove_spark
+
+    root = Path(leftshove_spark.__file__).parent
+    owner = root / "ext" / "cache.py"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            attr = node.func.attr
+            if attr in ("persist", "unpersist") or (
+                attr == "cache" and not node.args and not node.keywords
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno} .{attr}")
+    assert not found, "persist outside ext.cache (use cache.pin / pin_scope):\n" + (
+        "\n".join(found)
+    )
