@@ -338,7 +338,6 @@ class Engine:
                 sch.SNAPSHOT_COL,
                 tiebreak_cols=self._tiebreaks(cap, st),
                 n_buckets=self.config.current_state_buckets,
-                files_per_bucket=self.config.current_state_files_per_bucket,
             )
         # W5: commit only after a successful write. Row count from the
         # sink-side is not re-counted (the write succeeded); state carries
@@ -412,99 +411,42 @@ class Engine:
                     results[name] = n
         for st in self.state.all():
             self.refresh_view(st)
-        if self.config.vacuum_orphans_on_cycle:
-            for st in self.state.all():
-                self.vacuum_state_orphans(st.name)
         return results
-
-    def _state_store_path(self, table: str) -> str | None:
-        """``table``'s current-state store path, or None when it has no
-        manifest store (W25 off, or never folded). KeyError for a table
-        that was never seeded."""
-        from . import statestore
-
-        st = next((s for s in self.state.all() if s.name == table), None)
-        if st is None:
-            raise KeyError(f"{table}: not a seeded capture table")
-        path = self.current_state_path(st)
-        if not os.path.isdir(os.path.join(path, statestore._MANIFEST_DIR)):
-            return None
-        return path
-
-    def vacuum_state_orphans(self, table: str) -> list[str]:
-        """Sweep crash-loop debris from ``table``'s materialized
-        current-state store (statestore.vacuum_orphans — whole-store,
-        grace-respecting, never touches committed generations). No-op
-        for tables without a manifest store (W25 off, or never
-        folded). Runs per-cycle when
-        ``config.vacuum_orphans_on_cycle`` is set; callable directly
-        from a maintenance window otherwise."""
-        from . import statestore
-
-        path = self._state_store_path(table)
-        if path is None:
-            return []
-        return statestore.vacuum_orphans(path)
-
-    def compact_state(
-        self,
-        table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        min_files: int = 8,
-    ) -> dict[str, int]:
-        """Rewrite ``table``'s fragmented current-state partitions into
-        ~``target_file_bytes`` files (statestore.compact_partitions —
-        one fenced commit, contents untouched, pinned readers keep
-        their generation). A fold writes one file per (write task ×
-        touched bucket), so at cluster scale a capture loop's wide
-        shuffles re-fragment the hot buckets every cycle; run this
-        from a maintenance window when the live file population
-        matters (the default ``min_files=8`` only rewrites buckets at
-        least 8 files deep).
-        No-op for tables without a manifest store. Returns the
-        executed plan ``{bucket: target_file_count}``."""
-        from . import statestore
-
-        path = self._state_store_path(table)
-        if path is None:
-            return {}
-        return statestore.compact_partitions(
-            self.spark,
-            path,
-            target_file_bytes=target_file_bytes,
-            min_files=min_files,
-        )
 
     def maintain_state(
         self,
         table: str,
         target_file_bytes: int = 128 * 1024 * 1024,
         min_files: int = 8,
-        vacuum: bool = True,
     ) -> dict:
-        """One civilized maintenance pass over ``table``'s current-state
-        store — compaction + orphan vacuum via
-        :func:`statestore.maintain_store` — safe to run WHILE a live
-        capture loop / W26 stream folds the same store: a lost
-        generation race is absorbed (re-planned once, then deferred to
-        the next pass), never surfaced as an error, and the fold side
-        retries over the contents-preserving maintenance commit
-        (statestore.commit_fold_retrying). Run it from a maintenance
-        cadence (cron, or every N cycles) on tables whose live file
-        population matters. Returns the maintain_store result dict
-        (``compacted`` / ``lost_races`` / ``vacuumed``); all-empty for
-        tables without a manifest store."""
+        """One maintenance pass over ``table``'s current-state store —
+        compaction + orphan vacuum via :func:`statestore.maintain_store`.
+        This is the engine's one control for a state store's file count
+        and debris: a fold writes whatever layout its shuffle produces
+        (one file per write task × touched bucket), and this pass
+        rewrites buckets at least ``min_files`` deep into
+        ~``target_file_bytes`` files and sweeps past-grace orphans.
+
+        Safe to run WHILE a live capture loop / W26 stream folds the
+        same store: a lost generation race is absorbed (re-planned
+        once, then deferred to the next pass), never surfaced as an
+        error, and the fold side retries over the contents-preserving
+        maintenance commit (statestore.commit_fold_retrying). Runs every
+        ``config.maintain_state_every_cycles`` cycles of :meth:`run`, or
+        whenever a caller invokes it. Returns the maintain_store result
+        dict (``compacted`` / ``lost_races`` / ``vacuumed``); all-empty
+        for tables without a manifest store (W25 off, or never folded);
+        KeyError for a table that was never seeded."""
         from . import statestore
 
-        path = self._state_store_path(table)
-        if path is None:
-            return {"compacted": {}, "lost_races": 0, "vacuumed": []}
+        st = next((s for s in self.state.all() if s.name == table), None)
+        if st is None:
+            raise KeyError(f"{table}: not a seeded capture table")
         return statestore.maintain_store(
             self.spark,
-            path,
+            self.current_state_path(st),
             target_file_bytes=target_file_bytes,
             min_files=min_files,
-            vacuum=vacuum,
         )
 
     # -------------------------------------------------------------------- run
@@ -798,7 +740,6 @@ class Engine:
                     sch.SNAPSHOT_COL,
                     tiebreak_cols=self._tiebreaks(fresh, st),
                     n_buckets=self.config.current_state_buckets,
-                    files_per_bucket=self.config.current_state_files_per_bucket,
                 )
         return n
 

@@ -19,7 +19,7 @@ Scale notes (100 TB / 1000-executor design stance):
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -94,6 +94,11 @@ class EngineConfig:
     and every capture here is one Spark write per window, so no field
     would change anything. Neither has OUTPUT_TYPE (benthos.go:85-105):
     the sink is always parquet.
+
+    The W25 fold has one write layout (whatever its shuffle produces);
+    ``maintain_state_every_cycles`` — or a direct
+    ``Engine.maintain_state`` call — is the one control that bounds a
+    state store's file count and crash debris.
     """
 
     replication_buffer_secs: int = 180
@@ -116,27 +121,14 @@ class EngineConfig:
     # key-bucket count for the W25 table (crc32(pkey) % n); size to the
     # key population — per-bucket state is bounded by live keys
     current_state_buckets: int = 16
-    # cap each fold's write at this many files per touched bucket (one
-    # extra O(output) shuffle keyed on (bucket, key-salt)); None =
-    # task-shaped layout (a wide shuffle fragments every touched
-    # bucket per fold — compact_state claws it back from a
-    # maintenance window instead)
-    current_state_files_per_bucket: int | None = None
-    # run statestore.vacuum_orphans over each materialized state table
-    # at the end of every cycle — caps crash-loop debris on partitions
-    # never folded again (the per-commit sweep only covers touched
-    # partitions). Off by default: the sweep is O(table file listing)
-    # per cycle, which a tight trigger cadence doesn't want; turn it on
-    # for long-lived deployments or call Engine.vacuum_state_orphans /
-    # statestore.vacuum_orphans from a maintenance window instead.
-    vacuum_orphans_on_cycle: bool = False
-    # K21 (r16): run Engine.maintain_state (compaction + vacuum with
-    # the civilized loss discipline — a lost generation race re-plans,
-    # retries once, then defers) over every materialized state table
-    # every N cycles of Engine.run. 0 = off (the default: compaction
-    # belongs in a maintenance window unless the deployment's file
-    # population demands a cadence); the capture loop stays safe either
-    # way because the fold side retries over maintenance commits.
+    # run Engine.maintain_state (compaction + orphan vacuum; a lost
+    # generation race re-plans, retries once, then defers) over every
+    # materialized state table every N cycles of Engine.run — the one
+    # control for a state store's file count and debris. 0 = off (run
+    # Engine.maintain_state from a maintenance window instead); the
+    # capture loop stays safe either way because the fold side retries
+    # over maintenance commits.
     maintain_state_every_cycles: int = 0
+    # read by no engine code; kept only because the benchmark's CDC
+    # workload passes it (ROADMAP direction 2 removes both)
     warehouse_dir: str = "/tmp/leftshove_spark_warehouse"
-    sources: dict[str, dict] = field(default_factory=dict)

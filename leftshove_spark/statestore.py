@@ -600,8 +600,8 @@ def vacuum_orphans(
     never folded again persists as bounded dead bytes — and a
     crash-LOOP on a hot partition can stack several attempts' worth
     before each grace expires. This entry point caps both: run it any
-    time (offline, or from a maintenance loop via
-    ``EngineConfig.vacuum_orphans_on_cycle``); committed generations
+    time, offline or as the vacuum half of every :func:`maintain_store`
+    pass (``Engine.maintain_state``); committed generations
     are untouched by construction (the live set spans every retained
     manifest's files AND garbage), and a concurrently racing writer's
     in-flight files are spared by the same age grace — measured on the
@@ -661,7 +661,6 @@ def compaction_plan(
     state_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int = 2,
-    partitions: list[str] | None = None,
 ) -> dict[str, int]:
     """Which partitions :func:`compact_partitions` would rewrite, and
     into how many files — the dry-run half, so a maintenance loop can
@@ -669,18 +668,15 @@ def compaction_plan(
     its live file count is ``>= min_files`` AND rewriting at
     ``target_file_bytes`` would actually REDUCE its file count (a
     10-file partition already at 10× the target gains nothing from a
-    rewrite and is skipped). ``partitions`` narrows the scan to the
-    named values. Returns ``{partition_value: target_file_count}``;
-    empty for a directory with no manifest."""
+    rewrite and is skipped). Returns
+    ``{partition_value: target_file_count}``; empty for a directory
+    with no manifest."""
     m = load_manifest(state_dir)
     if m is None:
         return {}
     data = os.path.join(state_dir, _DATA_DIR)
-    want = None if partitions is None else {str(v) for v in partitions}
     plan: dict[str, int] = {}
     for v, rels in m["files"].items():
-        if want is not None and v not in want:
-            continue
         if len(rels) < max(min_files, 2):
             continue
         size = sum(os.path.getsize(os.path.join(data, rel)) for rel in rels)
@@ -750,7 +746,6 @@ def compact_partitions(
     state_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int = 2,
-    partitions: list[str] | None = None,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
     _pre_commit_hook=None,
@@ -783,7 +778,7 @@ def compact_partitions(
     empty = nothing qualified, no commit made). Raises
     :class:`ConcurrentCommitError` like any fold if a writer races the
     compaction; the store is left intact."""
-    plan = compaction_plan(state_dir, target_file_bytes, min_files, partitions)
+    plan = compaction_plan(state_dir, target_file_bytes, min_files)
     if not plan:
         return {}
     m = load_manifest(state_dir)
@@ -1128,10 +1123,8 @@ def maintain_store(
     state_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int = 8,
-    partitions: list[str] | None = None,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
-    vacuum: bool = True,
     vacuum_grace_sec: float | None = None,
     retries: int = 1,
     backoff_sec: float = 0.5,
@@ -1168,7 +1161,6 @@ def maintain_store(
                 state_dir,
                 target_file_bytes=target_file_bytes,
                 min_files=min_files,
-                partitions=partitions,
                 keep_generations=keep_generations,
                 retention_sec=retention_sec,
                 _pre_commit_hook=hook,
@@ -1180,8 +1172,7 @@ def maintain_store(
             if attempt >= retries:
                 break  # defer to the next maintenance cycle
             time.sleep(backoff_sec)
-    if vacuum:
-        out["vacuumed"] = vacuum_orphans(state_dir, grace_sec=vacuum_grace_sec)
+    out["vacuumed"] = vacuum_orphans(state_dir, grace_sec=vacuum_grace_sec)
     return out
 
 

@@ -623,7 +623,6 @@ def maintain_history(
     n_buckets: int = 16,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
-    files_per_bucket: int | None = None,
 ) -> None:
     """W18 — incremental SCD-Type-2 maintenance: fold one micro-batch of
     new versions into a persistent history table (``views.history_view``
@@ -669,7 +668,6 @@ def maintain_history(
         ),
         keep_generations=keep_generations,
         retention_sec=retention_sec,
-        files_per_bucket=files_per_bucket,
     )
 
 
@@ -683,7 +681,6 @@ def maintain_current_state(
     n_buckets: int = 16,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
-    files_per_bucket: int | None = None,
 ) -> None:
     """W25 — incrementally MATERIALIZED current-state table: fold one
     micro-batch of new versions into a persistent latest-per-key
@@ -736,7 +733,6 @@ def maintain_current_state(
         ),
         keep_generations=keep_generations,
         retention_sec=retention_sec,
-        files_per_bucket=files_per_bucket,
         # latest_per_key_window sorts (order, tiebreaks) DESC — align the
         # conflict guard's window so the write plan sorts once
         derive_order_desc=True,
@@ -898,7 +894,6 @@ def start_current_state_stream(
     keep_generations: int | None = None,
     retention_sec: float | None = None,
     source_schema=None,
-    files_per_bucket: int | None = None,
 ) -> StreamingQuery:
     """W26 — Structured Streaming maintenance of the W25 materialized
     current-state table: every micro-batch of landed versions folds
@@ -943,7 +938,6 @@ def start_current_state_stream(
             n_buckets=n_buckets,
             keep_generations=keep_generations,
             retention_sec=retention_sec,
-            files_per_bucket=files_per_bucket,
         )
 
     return _start_file_stream(
@@ -970,7 +964,6 @@ def _maintain_bucketed_state(
     derive,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
-    files_per_bucket: int | None = None,
     derive_order_desc: bool = False,
 ) -> None:
     """Shared W18/W25 maintenance core: crc32-bucket the batch, read
@@ -993,14 +986,6 @@ def _maintain_bucketed_state(
 
     from . import statestore
 
-    if files_per_bucket is not None and files_per_bucket < 1:
-        # fail loudly up front — silently skipping the shaping would
-        # leave the misconfiguration discoverable only by inspecting
-        # manifest file counts (r15 review)
-        raise ValueError(
-            f"files_per_bucket must be >= 1, got {files_per_bucket} "
-            "(None disables write shaping)"
-        )
     bucket = statestore.bucket_expr(
         [F.col(k).cast("string") for k in keys], n_buckets
     )
@@ -1098,26 +1083,6 @@ def _maintain_bucketed_state(
     )
     try:
         out = derive(guarded)
-        if files_per_bucket is not None:
-            # shape the write at the source (r15, K20's flip side): the
-            # fold output otherwise arrives through the dedup/window
-            # shuffle, landing one file per (write task × touched
-            # bucket) — at cluster scale every touched bucket fragments
-            # into up-to-shuffle-width files each fold, and compaction
-            # has to claw it back. One extra O(output) shuffle keyed on
-            # (bucket, key-salt) caps the layout at files_per_bucket
-            # files per bucket (hash collisions only merge, never
-            # split); the salt keys on the fold keys, so it is
-            # deterministic under retry.
-            salt = F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]),
-                F.lit(int(files_per_bucket)).cast("bigint"),
-            )
-            out = out.repartition(
-                max(1, len(touched) * int(files_per_bucket)),
-                F.col("__bucket"),
-                salt,
-            )
         # commit only the touched buckets — atomically, via the
         # manifest flip (readers mid-scan keep the prior generation).
         # The RETRYING form (r16): a concurrent maintenance pass
@@ -1724,7 +1689,6 @@ def _corpus_stages(
     n_buckets: int,
     keep_generations: int | None,
     retention_sec: float | None,
-    files_per_bucket: int | None,
     admit_schema,
     schema,
     processing_time: str | None,
@@ -1795,7 +1759,6 @@ def _corpus_stages(
             n_buckets=n_buckets,
             keep_generations=keep_generations,
             retention_sec=retention_sec,
-            files_per_bucket=files_per_bucket,
             source_schema=schema,
             **trigger,
         ),
@@ -1820,7 +1783,6 @@ def run_corpus_stream_pipeline(
     timeout_sec: int = 300,
     keep_generations: int | None = None,
     retention_sec: float | None = None,
-    files_per_bucket: int | None = None,
     schema=None,
 ) -> dict[str, str]:
     """The COMPOSED streaming corpus story: admit → decontaminate →
@@ -1888,7 +1850,6 @@ def run_corpus_stream_pipeline(
         n_buckets=n_buckets,
         keep_generations=keep_generations,
         retention_sec=retention_sec,
-        files_per_bucket=files_per_bucket,
         admit_schema=schema,
         schema=schema,
         processing_time=None,
@@ -1924,7 +1885,6 @@ def start_corpus_stream_pipeline_live(
     keep_generations: int | None = None,
     retention_sec: float | None = None,
     schema=None,
-    files_per_bucket: int | None = None,
 ) -> tuple[dict[str, str], list[StreamingQuery]]:
     """The CONTINUOUS deployment mode of the composed corpus pipeline:
     the same four stages as :func:`run_corpus_stream_pipeline` — admit
@@ -2000,7 +1960,6 @@ def start_corpus_stream_pipeline_live(
         n_buckets=n_buckets,
         keep_generations=keep_generations,
         retention_sec=retention_sec,
-        files_per_bucket=files_per_bucket,
         admit_schema=admit_schema,
         schema=schema,
         processing_time=processing_time,

@@ -134,7 +134,6 @@ dirs, queries = start_corpus_stream_pipeline_live(
     n_buckets=16,
     processing_time="2 seconds",
     schema=schema,
-    files_per_bucket=4,
 )
 state_dir = dirs["state"]
 

@@ -548,9 +548,9 @@ def test_engine_materialized_current_state_tracks_view(spark, tmp_path):
     stays ≡ the deterministic latest-per-key form of the full sink
     after EVERY cycle — including a re-captured window (watermark
     deliberately rolled back to simulate a crash before commit).
-    vacuum_orphans_on_cycle rides along: the whole-store sweep runs
-    each cycle without disturbing table ≡ view, and removes planted
-    past-grace crash debris (r14)."""
+    Engine.maintain_state then sweeps planted past-grace crash debris
+    and compacts a fragmented bucket, both without disturbing
+    table ≡ view."""
     from datetime import datetime, timedelta
 
     from leftshove_spark.engine import Engine
@@ -571,7 +571,6 @@ def test_engine_materialized_current_state_tracks_view(spark, tmp_path):
             replication_buffer_secs=0,
             materialize_current_state=True,
             current_state_buckets=4,
-            vacuum_orphans_on_cycle=True,
         ),
         state_path=f"{work}/state.json",
         sink_root=f"{work}/sink",
@@ -615,9 +614,9 @@ def test_engine_materialized_current_state_tracks_view(spark, tmp_path):
     # and the table is exactly one row per live key
     assert len(got) == 6
 
-    # r14: the per-cycle vacuum sweeps planted past-grace crash debris
-    # from the state store (a partition the cycles never fold again
-    # would otherwise keep it forever); live state is untouched
+    # the maintenance pass sweeps planted past-grace crash debris from
+    # the state store (a partition the cycles never fold again would
+    # otherwise keep it forever); live state is untouched
     import os as _os
     import time as _time
 
@@ -637,16 +636,17 @@ def test_engine_materialized_current_state_tracks_view(spark, tmp_path):
         fh.write(b"PAR1")
     old_ts = _time.time() - statestore.ORPHAN_SWEEP_GRACE_SEC - 60
     _os.utime(planted, (old_ts, old_ts))
-    eng.run_cycle(now=now + timedelta(days=2), snapshot_at=now)
+    res = eng.maintain_state("t")
     assert not _os.path.exists(planted)
+    assert any(v.endswith(_os.path.basename(planted)) for v in res["vacuumed"])
     got, want = table_vs_view()
     assert got == want
 
-    # r15 (K20): at cluster scale a fold's wide shuffle writes a file
-    # per (write task × touched bucket) — AQE coalesces that away at
-    # this test's size, so fragment one bucket deliberately (a
-    # multi-task rewrite of its own rows), then compact through the
-    # engine: counts drop, and table ≡ view is undisturbed.
+    # K20: at cluster scale a fold's wide shuffle writes a file per
+    # (write task × touched bucket) — AQE coalesces that away at this
+    # test's size, so fragment one bucket deliberately (a multi-task
+    # rewrite of its own rows), then compact through the engine's
+    # maintenance pass: counts drop, and table ≡ view is undisturbed.
     m = statestore.load_manifest(state_dir)
     all_buckets = sorted(m["files"])
     # one task per key → every bucket's rows land one file per key, so
@@ -658,7 +658,7 @@ def test_engine_materialized_current_state_tracks_view(spark, tmp_path):
     m = statestore.load_manifest(state_dir)
     frag = {v: len(rels) for v, rels in m["files"].items() if len(rels) >= 2}
     assert frag  # 6 keys over 4 buckets: pigeonhole guarantees one
-    plan = eng.compact_state("t", min_files=2)
+    plan = eng.maintain_state("t", min_files=2)["compacted"]
     assert set(plan) == set(frag)
     m2 = statestore.load_manifest(state_dir)
     for v, n in plan.items():
@@ -868,52 +868,6 @@ def test_evolution_composes_with_materialized_current_state(spark, tmp_path):
     assert view == got
 
 
-def test_engine_threads_files_per_bucket_to_folds(spark, tmp_path, monkeypatch):
-    """r15: EngineConfig.current_state_files_per_bucket reaches every
-    maintain_current_state call the engine makes (capture fold and
-    backfill fold alike) — wiring pinned by interception, since AQE
-    coalescing hides the layout effect at this test's size."""
-    from datetime import datetime, timedelta
-
-    from leftshove_spark import streaming
-    from leftshove_spark.engine import Engine
-    from leftshove_spark.session import EngineConfig
-
-    seen = []
-    real = streaming.maintain_current_state
-
-    def spy(*a, **kw):
-        seen.append(kw.get("files_per_bucket"))
-        return real(*a, **kw)
-
-    monkeypatch.setattr(streaming, "maintain_current_state", spy)
-
-    work = str(tmp_path)
-    src = f"{work}/src.parquet"
-    rows = [
-        (k, f"v{k}", datetime(2030, 1, 1) + timedelta(minutes=k))
-        for k in range(4)
-    ]
-    spark.createDataFrame(rows, "pk long, v string, ts timestamp").write.parquet(src)
-    eng = Engine(
-        spark,
-        EngineConfig(
-            replication_buffer_secs=0,
-            materialize_current_state=True,
-            current_state_buckets=2,
-            current_state_files_per_bucket=1,
-        ),
-        state_path=f"{work}/state.json",
-        sink_root=f"{work}/sink",
-    )
-    eng.seed([{"name": "t", "path": src, "nms_column": "ts", "pkey_column": "pk"}])
-    eng.create_sinks()
-    now = datetime(2030, 1, 2)
-    eng.run_cycle(now=now, snapshot_at=now)
-    assert seen and all(v == 1 for v in seen)
-    assert eng.current_state_table("t").count() == 4
-
-
 def test_engine_maintain_state_cadence_in_run_loop(spark, tmp_path):
     """K21 engine wiring (r16): maintain_state_every_cycles=N runs the
     compaction+vacuum maintenance pass (statestore.maintain_store,
@@ -921,7 +875,9 @@ def test_engine_maintain_state_cadence_in_run_loop(spark, tmp_path):
     pass never disturbs the capture semantics: the materialized table
     still ≡ the deterministic latest-per-key view afterwards, and the
     maintained store's per-bucket file counts respect the compaction
-    plan."""
+    plan. The fragmentation it compacts arises the way it does on a
+    cluster: with AQE partition coalescing off, the fold's shuffle
+    writes one file per (write task × touched bucket)."""
     from datetime import datetime, timedelta
 
     from leftshove_spark import statestore
@@ -943,9 +899,6 @@ def test_engine_maintain_state_cadence_in_run_loop(spark, tmp_path):
             replication_buffer_secs=0,
             materialize_current_state=True,
             current_state_buckets=4,
-            # shape folds at 2 files/bucket so the maintenance pass has
-            # real compaction work (locally AQE coalesces to 1 without)
-            current_state_files_per_bucket=2,
             maintain_state_every_cycles=2,
         ),
         state_path=f"{work}/state.json",
@@ -963,10 +916,17 @@ def test_engine_maintain_state_cadence_in_run_loop(spark, tmp_path):
         return res
 
     eng.maintain_state = counting
-    eng.run(max_cycles=4, now_fn=lambda: datetime(2030, 1, 3))
+    # the session is shared: restore the coalescing conf afterwards
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        eng.run(max_cycles=4, now_fn=lambda: datetime(2030, 1, 3))
+    finally:
+        spark.conf.set(key, prev)
     # cadence: every 2 of 4 cycles → exactly 2 maintenance passes
     assert [t for t, _ in calls] == ["t", "t"]
-    # a pass actually compacted (files_per_bucket=2 left ≥2-file
+    # a pass actually compacted (the uncoalesced fold left ≥2-file
     # buckets) and none surfaced an error
     assert any(res["compacted"] for _, res in calls)
 
@@ -987,3 +947,54 @@ def test_engine_maintain_state_cadence_in_run_loop(spark, tmp_path):
     st = next(s for s in eng.state.all() if s.name == "t")
     m = statestore.load_manifest(eng.current_state_path(st))
     assert m is not None and all(len(v) >= 1 for v in m["files"].values())
+
+
+# Fields no engine code reads, each with the reason it still exists.
+_UNREAD_CONFIG_FIELDS = {
+    # passed by the benchmark's CDC workload (perfbench/cdc.py), whose
+    # files only a benchmark change may edit; ROADMAP direction 2
+    # removes the pass-through and this field together
+    "warehouse_dir",
+}
+
+
+def test_every_engine_config_field_is_read():
+    """Every EngineConfig field is read as ``config.<field>`` somewhere
+    in the package: a field nothing reads is a knob that changes
+    nothing. The listed exceptions must stay unread, so the list
+    cannot go stale."""
+    import ast
+    from pathlib import Path
+
+    import leftshove_spark
+
+    root = Path(leftshove_spark.__file__).parent
+    session = ast.parse((root / "session.py").read_text())
+    cls = next(
+        n
+        for n in ast.walk(session)
+        if isinstance(n, ast.ClassDef) and n.name == "EngineConfig"
+    )
+    fields = {
+        n.target.id
+        for n in cls.body
+        if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)
+    }
+    read = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.ctx, ast.Load)
+                and node.attr in fields
+            ):
+                continue
+            owner = node.value
+            if (isinstance(owner, ast.Attribute) and owner.attr == "config") or (
+                isinstance(owner, ast.Name) and owner.id == "config"
+            ):
+                read.add(node.attr)
+    unread = fields - read - _UNREAD_CONFIG_FIELDS
+    assert not unread, f"EngineConfig fields never read as config.<field>: {sorted(unread)}"
+    stale = _UNREAD_CONFIG_FIELDS & read
+    assert not stale, f"listed as unread but read: {sorted(stale)}"

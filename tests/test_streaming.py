@@ -1696,69 +1696,3 @@ def test_change_feed_drives_incremental_downstream_replica(spark, tmp_path):
             for d, ls in untouched.items():
                 assert after[d] == ls
         prev_gen = gen
-
-
-def test_fold_files_per_bucket_caps_write_layout(spark, tmp_path):
-    """r15 (K20's flip side): a fold's output arrives through the
-    dedup/window shuffle, landing one file per (write task × touched
-    bucket) — with AQE coalescing off (standing in for cluster-scale
-    shuffle width) every touched bucket fragments in a single fold.
-    files_per_bucket shapes the write at the source: per-bucket file
-    counts stay ≤ the knob, and the folded VALUES are identical to the
-    unshaped store's."""
-    from leftshove_spark import statestore
-    from leftshove_spark.streaming import (
-        current_state_table,
-        maintain_current_state,
-    )
-
-    rows = [(k, f"v{k}", k * 10) for k in range(200)]
-    batch = spark.createDataFrame(rows, "pk long, v string, ts long")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key)
-    spark.conf.set(coalesce_key, "false")
-    try:
-        plain = str(tmp_path / "plain")
-        shaped = str(tmp_path / "shaped")
-        maintain_current_state(spark, plain, batch, "pk", "ts", n_buckets=4)
-        maintain_current_state(
-            spark, shaped, batch, "pk", "ts", n_buckets=4, files_per_bucket=1
-        )
-    finally:
-        spark.conf.set(coalesce_key, prev)
-
-    mp = statestore.load_manifest(plain)
-    ms = statestore.load_manifest(shaped)
-    assert any(len(rels) > 1 for rels in mp["files"].values()), (
-        "the unshaped fold should fragment with coalescing off — if this "
-        "stops holding, the scenario no longer exercises the knob"
-    )
-    assert all(len(rels) <= 1 for rels in ms["files"].values())
-    got_plain = sorted(
-        (r["pk"], r["v"], r["ts"])
-        for r in current_state_table(spark, plain).collect()
-    )
-    got_shaped = sorted(
-        (r["pk"], r["v"], r["ts"])
-        for r in current_state_table(spark, shaped).collect()
-    )
-    assert got_plain == got_shaped == sorted(rows)
-
-
-def test_fold_files_per_bucket_invalid_raises(spark, tmp_path):
-    """r15 review: files_per_bucket=0 must fail loudly, not silently
-    skip the shaping the knob's contract promises."""
-    import pytest
-
-    from leftshove_spark.streaming import maintain_current_state
-
-    batch = spark.createDataFrame([(1, "a", 1)], "pk long, v string, ts long")
-    with pytest.raises(ValueError, match="files_per_bucket"):
-        maintain_current_state(
-            spark,
-            str(tmp_path / "bad"),
-            batch,
-            "pk",
-            "ts",
-            files_per_bucket=0,
-        )

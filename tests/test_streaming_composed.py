@@ -91,9 +91,6 @@ def test_composed_stream_equals_batch_composition(spark, tmp_path):
         cents=cents,
         books=books,
         threshold=0.95,
-        # r15: the shaping knob threads through the composed pipeline's
-        # materialize stage — same end state, capped write layout
-        files_per_bucket=1,
     )
 
     admitted = {r["doc_id"] for r in spark.read.parquet(dirs["admitted"]).collect()}
@@ -563,7 +560,9 @@ def test_maintenance_under_live_load(spark, tmp_path):
     - the final state ≡ the batch composition (latest_per_key_window
       over everything that reached clean/ — the W25 invariant through
       live folding + concurrent maintenance);
-    - compacted partitions hold exactly the planned file counts;
+    - compacted partitions hold exactly the planned file counts — the
+      fragmentation they compact is the folds' own, with AQE partition
+      coalescing off as on a cluster's wide shuffle;
     - a sync_state replica of the maintained store converges to the
       same values."""
     import time
@@ -630,24 +629,16 @@ def test_maintenance_under_live_load(spark, tmp_path):
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
     w1a.coalesce(1).write.mode("append").parquet(landing)
-    dirs, queries = start_corpus_stream_pipeline_live(
-        spark,
-        landing_dir=landing,
-        work_dir=str(tmp_path / "work"),
-        benchmark_emb_dir=bench_dir,
-        cents=cents,
-        books=books,
-        threshold=0.95,
-        n_buckets=4,
-        processing_time="1 second",
-        # shape each fold at 3 files per touched bucket: locally AQE
-        # coalesces a fold's write to ONE file per bucket, so without
-        # the shaping the store never fragments and the compaction
-        # plan is empty (at cluster scale the wide shuffle fragments
-        # on its own — files_per_bucket here plays that role)
-        files_per_bucket=3,
-    )
-    state_dir = dirs["state"]
+    # fragment the store the way a cluster does: locally AQE coalesces
+    # a fold's write to ONE file per bucket, so without this the store
+    # never fragments and the compaction plan is empty. With coalescing
+    # off, each fold lands one file per (shuffle task × touched bucket).
+    # Set before the streams start (each clones the session's conf) and
+    # restored in the finally below: the session is shared.
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce_prev = spark.conf.get(coalesce_key)
+    spark.conf.set(coalesce_key, "false")
+    queries = []
 
     def clean_rows():
         try:
@@ -694,6 +685,18 @@ def test_maintenance_under_live_load(spark, tmp_path):
         raise AssertionError(f"fold never caught up; last {last}")
 
     try:
+        dirs, queries = start_corpus_stream_pipeline_live(
+            spark,
+            landing_dir=landing,
+            work_dir=str(tmp_path / "work"),
+            benchmark_emb_dir=bench_dir,
+            cents=cents,
+            books=books,
+            threshold=0.95,
+            n_buckets=4,
+            processing_time="1 second",
+        )
+        state_dir = dirs["state"]
         wait_caught_up(set())  # wave 1 part one drained (first fold)
         w1b.coalesce(1).write.mode("append").parquet(landing)
         wait_caught_up({(9100, 1)})  # second fold landed
@@ -779,6 +782,7 @@ def test_maintenance_under_live_load(spark, tmp_path):
                 q.stop()
             except Exception:
                 pass
+        spark.conf.set(coalesce_key, coalesce_prev)
 
 
 def test_live_pipeline_schema_drift_fails_loud_then_evolves_by_restart(
